@@ -44,23 +44,6 @@ def decode_int_key(s: str) -> int:
     return int(s) - _OFFSET
 
 
-def decode_int_key_pandas(parts):
-    """Vectorized decode of a pandas Series of encoded components; NULLs
-    (truncated stored keys) stay NULL."""
-    import numpy as np
-    import pandas as pd
-
-    def one(s):
-        if s is None or (isinstance(s, float) and np.isnan(s)):
-            return None
-        try:
-            return int(s) - _OFFSET
-        except (TypeError, ValueError):
-            return None  # malformed component → NULL, like operators/decode.py
-
-    return pd.Series([one(s) for s in parts], index=parts.index, dtype="object")
-
-
 def decode_int_key_column(col):
     """Catalyst decode of an encoded component column → BIGINT.
 

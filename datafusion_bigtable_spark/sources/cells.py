@@ -144,10 +144,13 @@ MANIFEST_REL_PATH = "_metadata/manifest.parquet"
 
 
 def footer_file_stats(files: list[str]) -> list[dict]:
-    """Per-file ``{file, min_key, max_key, min_ts, max_ts}`` from parquet
-    footer statistics — THE single implementation behind both the manifest
-    writer and the reader's no-manifest fallback, so planning decisions
-    cannot diverge between the two paths."""
+    """Per-file ``{file, bytes, min_key, max_key, min_ts, max_ts}`` from
+    the file size and parquet footer statistics — THE single
+    implementation behind both the manifest writer and the reader's
+    no-manifest fallback, so planning decisions cannot diverge between the
+    two paths."""
+    import os
+
     import pyarrow.parquet as pq
 
     out = []
@@ -166,6 +169,7 @@ def footer_file_stats(files: list[str]) -> list[dict]:
         out.append(
             {
                 "file": f,
+                "bytes": os.path.getsize(f),
                 "min_key": min(s[0] for s in stats["row_key"]) if stats["row_key"] else None,
                 "max_key": max(s[1] for s in stats["row_key"]) if stats["row_key"] else None,
                 "min_ts": min(s[0] for s in stats["ts"]) if stats["ts"] else None,
@@ -176,7 +180,7 @@ def footer_file_stats(files: list[str]) -> list[dict]:
 
 
 def write_manifest(path: str) -> str | None:
-    """Persist per-file footer statistics (row_key and ts min/max) as a
+    """Persist per-file statistics (byte size, row_key and ts min/max) as a
     manifest table under ``<store>/_metadata/`` — the emulation of
     Bigtable's tablet metadata, queryable without touching data files.
 
@@ -202,6 +206,7 @@ def write_manifest(path: str) -> str | None:
     table = pa.table(
         {
             "file": [r["file"] for r in rows],
+            "bytes": pa.array([r["bytes"] for r in rows], type=pa.int64()),
             "min_key": [r["min_key"] for r in rows],
             "max_key": [r["max_key"] for r in rows],
             "min_ts": pa.array([r["min_ts"] for r in rows], type=pa.timestamp("us")),
@@ -231,6 +236,8 @@ def read_manifest(path: str) -> list[dict] | None:
         return None
     for r in rows:
         r["file"] = os.path.join(path, r["file"])
+        if "bytes" not in r:  # a manifest written before sizes were recorded
+            r["bytes"] = os.path.getsize(r["file"])
     return rows
 
 
@@ -241,7 +248,8 @@ def write_cells(cells: DataFrame, path: str, num_ranges: int = 32, mode: str = "
 
     Each output file then covers a disjoint key range, so a KeyRange scan
     touches only overlapping files (parquet min/max stats prune the rest),
-    and the Python Data Source's full-scan path parallelizes per file.
+    and the Python Data Source's full-scan path packs the disjoint files
+    into scan tasks of up to 128 MiB (datasource.FilePartition).
     ``num_ranges`` ≈ cluster write parallelism; at 100 TB pick it so files
     land in the 128 MB–1 GB band.
     """
@@ -261,10 +269,11 @@ def compact_cells_store(
 
     Appends (the DS writer, streaming sinks) accumulate files whose key
     ranges overlap; the reader stays CORRECT by merging overlapping files
-    into one scan task (datasource._key_disjoint_groups), but that
-    collapses parallelism and defeats range pruning.  Compaction rewrites
-    the store back to the canonical layout — range-partitioned, sorted,
-    disjoint files + fresh manifest — restoring one-file-per-task scans.
+    into one key-disjoint group (datasource._key_disjoint_groups), but
+    that collapses parallelism, defeats range pruning and materialises the
+    group in one task.  Compaction rewrites the store back to the canonical
+    layout — range-partitioned, sorted, disjoint files + fresh manifest —
+    restoring one group per file, streamed in key order.
 
     ``versions=N`` additionally garbage-collects old cell versions (keep
     the newest N per row_key/qualifier) — Bigtable's maxVersions GC policy

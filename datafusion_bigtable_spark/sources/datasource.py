@@ -13,13 +13,14 @@ and used as ``spark.read.format("bigtable")``:
 - ``partitions()`` — ONE InputPartition PER KeyRange.  The reference scans
   single-partition (``UnknownPartitioning(1)``, execute_plan.rs:84-86;
   roadmap gap README.md:50); here every composed range scans in parallel
-  on a different executor.  On a full scan, one partition per parquet
-  file of the store.
+  on a different executor.  On a full scan, key-disjoint file groups
+  packed into partitions of up to 128 MiB (``FilePartition``).
 - ``read()``       — per-partition: pyarrow scan of the cells parquet with
   family/key-range/qualifier predicates pushed into the parquet reader
   (the stand-in for the gRPC ``ReadRowsRequest`` + RowFilter chain,
   execute_plan.rs:168-183), then the latest-version filter, cell→row
-  pivot and typed decode (A11/A13/A15) — *partition-local*, because one
+  pivot and typed decode (A11/A13/A15) in one Arrow kernel
+  (``_pivot_partition``) — *partition-local*, because one
   row key's cells never span two key ranges.  The pruned path therefore
   runs with ZERO shuffles, where the DataFrame-assembly path
   (bigtable_table.py) needs one.
@@ -28,7 +29,7 @@ Scale: at 100 TB the cells store is written range-partitioned and sorted
 by row_key (see sources/cells.py); ``partitions()`` maps ranges to the
 overlapping files only (parquet footer min/max — the emulation of
 Bigtable's tablet metadata), so a pruned query reads just those files, and
-the full-scan path parallelizes over files.
+the full-scan path parallelizes over 128 MiB packs of files.
 
 KNOWN UPSTREAM CAVEAT (Spark 4.1, verified by tracing worker invocations):
 the JVM caches a Python data source's planned scan
@@ -156,18 +157,36 @@ class WireRangePartition(InputPartition):
 
 @dataclass
 class FilePartition(InputPartition):
-    """Full-scan path: one key-disjoint GROUP of parquet files → one scan
-    task.  With a write_cells layout every group is a single file; after
-    appends, files whose key ranges overlap must scan together because the
-    latest-version filter and the (row_key, ts) pivot are partition-local
-    — splitting one row key's cells across tasks would resurrect stale
-    versions / emit partial rows (caught by the writer round-trip tests)."""
+    """Full-scan path: consecutive key-disjoint GROUPS of parquet files
+    (``groups``, in key order) → one scan task.  A group is the unit the
+    pivot needs whole: with a write_cells layout every group is a single
+    file; after appends, files whose key ranges overlap form one group,
+    because the latest-version filter and the (row_key, ts) pivot are
+    partition-local — splitting one row key's cells across tasks would
+    resurrect stale versions / emit partial rows (caught by the writer
+    round-trip tests).
 
-    files: tuple
+    Groups are packed by Spark's own file-packing rule
+    (``FilePartition.getFilePartitions``) with Spark's default constants,
+    fixed: each file costs its on-disk bytes (recorded in the manifest)
+    plus 4 MiB (``spark.sql.files.openCostInBytes``), a partition closes
+    before it would exceed 128 MiB (``spark.sql.files.maxPartitionBytes``),
+    and a group is never split (see ``_pack_groups``).  A small store
+    therefore scans as one task: every Python task pays a fixed start-up
+    cost (see README, "Scale posture") that dwarfs the work of a few-MB
+    group.  The cap was measured on full scans of 3.3 MB, 39 MiB and
+    95 MiB stores at local[2] and local[4] (ROADMAP, "Full-scan packing
+    cap"): packed scans beat one task per file on all of them."""
+
+    groups: tuple
     ts_lo: object = None
     ts_hi: object = None
     value_preds: tuple = ()
     rows_cap: object = None
+
+    @property
+    def files(self) -> tuple:
+        return tuple(f for g in self.groups for f in g)
 
 
 class BigtableReader(DataSourceReader):
@@ -228,10 +247,6 @@ class BigtableReader(DataSourceReader):
 
     # -- pushdown (A3-A8 pruning + A16 Inexact) ---------------------------
     def pushFilters(self, filters):
-        if os.environ.get("DBS_TRACE"):
-            # planning runs in a separate Python worker; file-based trace
-            with open("/tmp/ds_trace", "a") as fh:
-                fh.write("pushFilters: " + "; ".join(repr(f) for f in filters) + "\n")
         self._filters_pushed = True
         self._pushed_since_last_plan = True
         self.ts_range = self._timestamp_bounds(filters)
@@ -609,9 +624,10 @@ class BigtableReader(DataSourceReader):
         stats = self._file_stats()
         if ts_push:
             stats = [st for st in stats if self._ts_overlaps(st, ts_lo, ts_hi)] or stats[:1]
+        sizes = {st["file"]: st["bytes"] for st in stats}
         return [
-            FilePartition(tuple(g), ts_lo, ts_hi, value_preds, rows_cap)
-            for g in _key_disjoint_groups(stats)
+            FilePartition(tuple(tuple(g) for g in part), ts_lo, ts_hi, value_preds, rows_cap)
+            for part in _pack_groups(_key_disjoint_groups(stats), sizes)
         ]
 
     def _wire_partitions(self, ranges, ts_lo, ts_hi, value_preds, rows_cap):
@@ -688,6 +704,8 @@ class BigtableReader(DataSourceReader):
         if isinstance(partition, WireRangePartition):
             yield from self._wire_scan(partition)
             return
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.dataset as pa_ds
 
         cfg = self.config
@@ -708,45 +726,50 @@ class BigtableReader(DataSourceReader):
         if isinstance(partition, RangePartition):
             flt = flt & (pa_ds.field("row_key") >= partition.start)
             flt = flt & (pa_ds.field("row_key") <= partition.end)
-            files = list(partition.files) or self._files()
+            groups = [list(partition.files) or self._files()]
         else:
-            files = list(partition.files)
+            groups = [list(g) for g in partition.groups]
 
-        ordered = _key_sorted_order(files)
-        cols = ["row_key", "qualifier", "ts", "value"]
-        if ordered is None:
-            # Store not provably key-sorted (footer stats missing or row
-            # groups overlap): fall back to full materialization — correct
-            # for any layout, memory-bounded only by partition size.
-            dataset = pa_ds.dataset(files, format="parquet")
-            yield from _pivot_partition(dataset.to_table(columns=cols, filter=flt).to_pandas(), cfg)
-            return
-
-        # Streaming path (bounded memory): batches arrive key-grouped, so
-        # pivot everything up to the last (possibly incomplete) row key and
-        # carry that key's cells into the next batch.  write_cells() stores
-        # always qualify; at 100 TB an executor holds one Arrow batch plus
-        # one row key's cells, never the whole partition.
-        import pandas as pd
-
-        dataset = pa_ds.dataset(ordered, format="parquet")
+        # The groups are key-disjoint and in key order, so they stream one
+        # after another through one carry: the cells of the last (possibly
+        # incomplete) row key seen so far, an Arrow slice that joins the
+        # next chunk.  A group whose files stream in key order (every
+        # write_cells store) is pivoted batch by batch: an executor holds
+        # one Arrow batch plus one row key's cells, never the partition.
+        # A group that footer statistics cannot prove key-sorted (missing
+        # stats, overlapping row groups or files) is materialised whole —
+        # correct for any layout, memory-bounded by the group.
         carry = None
-        for batch in dataset.to_batches(columns=cols, filter=flt, batch_size=65536):
-            pdf = batch.to_pandas()
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_key = pdf["row_key"].iloc[-1]
-            boundary = pdf["row_key"] == last_key
-            flush, carry = pdf[~boundary], pdf[boundary]
-            if len(flush):
-                yield from _pivot_partition(flush, cfg)
-        if carry is not None and len(carry):
+        emitted = False
+        for files in groups:
+            ordered = _key_sorted_order(files)
+            if ordered is None:
+                dataset = pa_ds.dataset(files, format="parquet")
+                chunks = [dataset.to_table(columns=CELL_COLUMNS, filter=flt)]
+            else:
+                dataset = pa_ds.dataset(ordered, format="parquet")
+                chunks = (
+                    pa.Table.from_batches([b])
+                    for b in dataset.to_batches(columns=CELL_COLUMNS, filter=flt, batch_size=65536)
+                )
+            for cells in chunks:
+                if cells.num_rows == 0:
+                    continue
+                if carry is not None:
+                    cells = pa.concat_tables([carry, cells])
+                # a materialised chunk is complete; a streamed one is cut
+                # before its trailing key run
+                keys = cells["row_key"]
+                cut = cells.num_rows if ordered is None else pc.index(keys, keys[-1]).as_py()
+                carry = cells.slice(cut) if cut < cells.num_rows else None
+                if cut:
+                    emitted = True
+                    yield from _pivot_partition(cells.slice(0, cut), cfg)
+        if carry is not None:
             yield from _pivot_partition(carry, cfg)
-        elif carry is None:
+        elif not emitted:
             # no rows at all: emit one empty batch for a stable schema
-            yield from _pivot_partition(pd.DataFrame(columns=cols), cfg)
+            yield from _pivot_partition(_cells_table(), cfg)
 
     def _wire_scan(self, partition: WireRangePartition) -> Iterator:
         """Executor-side ReadRows over the wire for one shard: this task
@@ -760,19 +783,16 @@ class BigtableReader(DataSourceReader):
         matching the parquet path); the wire chain places value filters
         after the latest limit, so either gating is sound — Spark
         re-applies every filter above regardless (A16)."""
-        import pandas as pd
-
+        from datafusion_bigtable_spark.sources.cells import _naive_datetime_to_us
         from datafusion_bigtable_spark.sources.grpc_transport import (
             build_read_rows_request,
         )
         from datafusion_bigtable_spark.sources.wire import WireBigtableClient
 
         cfg = self.config
-
-        def to_us(t):
-            return None if t is None else int(pd.Timestamp(t).value // 1_000)
-
-        lo_us, hi_us = to_us(partition.ts_lo), to_us(partition.ts_hi)
+        lo_us, hi_us = (
+            None if t is None else _naive_datetime_to_us(t) for t in (partition.ts_lo, partition.ts_hi)
+        )
         req = build_read_rows_request(
             cfg,
             [],
@@ -787,37 +807,28 @@ class BigtableReader(DataSourceReader):
             rng["end_key_closed"] = partition.end.encode("utf-8")
         req["rows"] = {"row_keys": [], "row_ranges": [rng] if rng else []}
 
-        buf: dict[str, list] = {"row_key": [], "qualifier": [], "ts": [], "value": []}
+        buf: tuple[list, ...] = ([], [], [], [])  # row_key, qualifier, ts_us, value
 
         def flush():
-            pdf = pd.DataFrame(
-                {
-                    "row_key": list(buf["row_key"]),
-                    "qualifier": list(buf["qualifier"]),
-                    "ts": pd.to_datetime(buf["ts"], unit="us"),
-                    "value": list(buf["value"]),
-                }
-            )
-            for v in buf.values():
+            cells = _cells_table(*buf)
+            for v in buf:
                 v.clear()
-            yield from _pivot_partition(pdf, cfg)
+            yield from _pivot_partition(cells, cfg)
 
         client = WireBigtableClient(*partition.endpoint)
-        pending = 0
         emitted = False
         for row_key, cells in client.read_rows(req):
             for _family, qualifier, ts, value in cells:
-                buf["row_key"].append(row_key)
-                buf["qualifier"].append(qualifier)
-                buf["ts"].append(ts)
-                buf["value"].append(value)
-            pending += len(cells)
-            if pending >= 65536:
+                buf[0].append(row_key)
+                buf[1].append(qualifier)
+                buf[2].append(ts)
+                buf[3].append(value)
+            if len(buf[0]) >= 65536:
                 # rows arrive COMPLETE (one frame per row), so every chunk
                 # boundary is a row boundary — no carry logic needed
                 yield from flush()
-                pending, emitted = 0, True
-        if pending or not emitted:
+                emitted = True
+        if buf[0] or not emitted:
             yield from flush()
 
 
@@ -843,6 +854,32 @@ def _key_disjoint_groups(stats: list[dict]) -> list[list[str]]:
         cur_max = st["max_key"] if cur_max is None else max(cur_max, st["max_key"])
     groups.append(cur)
     return groups
+
+
+# Spark's defaults for spark.sql.files.maxPartitionBytes and
+# spark.sql.files.openCostInBytes: the constants of its file-packing rule.
+_PACK_MAX_BYTES = 128 * 1024 * 1024
+_PACK_OPEN_COST_BYTES = 4 * 1024 * 1024
+
+
+def _pack_groups(groups: list[list[str]], sizes: dict[str, int]) -> list[list[list[str]]]:
+    """Pack consecutive key-disjoint groups into scan partitions, whole and
+    in order: each file costs ``sizes[file]`` plus the open cost, and a
+    partition closes before a group would take it past the cap.  A group
+    larger than the cap is a partition of its own."""
+    parts: list[list[list[str]]] = []
+    cur: list[list[str]] = []
+    cur_bytes = 0
+    for g in groups:
+        cost = sum(sizes[f] + _PACK_OPEN_COST_BYTES for f in g)
+        if cur and cur_bytes + cost > _PACK_MAX_BYTES:
+            parts.append(cur)
+            cur, cur_bytes = [], 0
+        cur.append(g)
+        cur_bytes += cost
+    if cur:
+        parts.append(cur)
+    return parts
 
 
 def _key_sorted_order(files: list[str]):
@@ -883,92 +920,244 @@ def _key_sorted_order(files: list[str]):
     return [f for _, _, f in spans]
 
 
-def _pivot_partition(cells, cfg: BigtableTableConfig):
-    """Latest-filter + pivot + key-split + decode for one partition's cells,
-    in pandas (Arrow-batched back to Spark).  Mirrors execute_plan.rs:186-304
-    but emits NULL (None/NaN→None) for missing cells instead of empty bytes."""
-    import pandas as pd
+CELL_COLUMNS = ["row_key", "qualifier", "ts", "value"]
+# rows per output batch of the pivot kernel: bounds each batch's string and
+# binary columns well below Arrow's 2 GiB per-array offset limit
+_PIVOT_BATCH_ROWS = 65536
+
+
+def _arrow_schema(cfg: BigtableTableConfig):
+    """The declared Spark schema (``cfg.schema()``) as an Arrow schema."""
     import pyarrow as pa
 
-    spark_schema = cfg.schema()
-    arrow_fields = []
-    for f in spark_schema.fields:
-        t = f.dataType.typeName()
-        arrow_fields.append(
-            pa.field(
-                f.name,
-                {
-                    "string": pa.string(),
-                    "long": pa.int64(),
-                    "binary": pa.binary(),
-                    "double": pa.float64(),
-                    "timestamp_ntz": pa.timestamp("us"),
-                }[t],
-            )
-        )
-    arrow_schema = pa.schema(arrow_fields)
+    types = {
+        "string": pa.string(),
+        "long": pa.int64(),
+        "binary": pa.binary(),
+        "double": pa.float64(),
+        "timestamp_ntz": pa.timestamp("us"),
+    }
+    return pa.schema([pa.field(f.name, types[f.dataType.typeName()]) for f in cfg.schema().fields])
 
-    if len(cells) == 0:
-        yield pa.RecordBatch.from_pydict({f.name: [] for f in arrow_fields}, schema=arrow_schema)
+
+def _cells_table(row_key=(), qualifier=(), ts_us=(), value=()):
+    """A cells table in the kernel's input layout; ``ts_us`` are epoch µs."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "row_key": pa.array(row_key, pa.string()),
+            "qualifier": pa.array(qualifier, pa.string()),
+            "ts": pa.array(ts_us, pa.int64()).cast(pa.timestamp("us")),
+            "value": pa.array(value, pa.binary()),
+        }
+    )
+
+
+def _pivot_partition(cells, cfg: BigtableTableConfig):
+    """Latest-version filter + (row_key, ts) pivot + key split + typed
+    decode for one chunk of cells, as one Arrow kernel — the reference's
+    cell→row loop (execute_plan.rs:186-304), emitting NULL instead of empty
+    bytes for a missing cell.
+
+    ``cells`` is a ``pyarrow.Table`` with columns row_key, qualifier, ts,
+    value (``CELL_COLUMNS``).  Every key the chunk holds must be complete in
+    it (the callers cut chunks at row-key boundaries).  Yields
+    RecordBatches in the declared schema, rows ordered by (row_key, ts):
+    one batch, or one per ``_PIVOT_BATCH_ROWS`` rows of a larger chunk (a
+    materialised group).  Keys and values are handled with 64-bit offsets,
+    so a chunk may hold more than 2 GiB of either.
+
+    Semantics (pinned against a duckdb reference in
+    tests/test_pivot_kernel.py):
+    - cells of undeclared qualifiers are dropped, like ``pivot_cells``;
+    - latest mode keeps the newest cell per (row_key, qualifier); then one
+      cell per (row_key, ts, qualifier) survives.  Ties go to the LAST cell
+      in input order (the reference's HashMap insertion); a NULL value is a
+      cell like any other, so it never resurrects an older version;
+    - int64 values decode 8-byte big-endian, any other length → NULL;
+      strings decode UTF-8, invalid bytes → U+FFFD;
+    - the key splits literally on the separator; a missing component is
+      NULL, surplus parts are ignored; int64 components decode with
+      NULL-for-malformed (plans/keycodec.py).
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = _arrow_schema(cfg)
+    quals = list(cfg.qualifiers)
+    qcode = pc.index_in(cells["qualifier"], value_set=pa.array(quals, pa.string()))
+    if qcode.null_count:
+        keep = pc.is_valid(qcode)
+        cells, qcode = cells.filter(keep), qcode.filter(keep)
+    if cells.num_rows == 0:
+        yield pa.RecordBatch.from_pylist([], schema=schema)
         return
+    # 64-bit offsets: a materialised group may hold more than 2 GiB of
+    # keys or values; the output narrows back one bounded batch at a time
+    row_key = cells["row_key"].cast(pa.large_string()).combine_chunks()
+    value = cells["value"].cast(pa.large_binary()).combine_chunks()
+    ts = cells["ts"].combine_chunks().cast(pa.timestamp("us"))
 
-    # NULL-cell correctness (found in review): pandas groupby().last() and
-    # pivot_table() both SKIP NaN values, which would resurrect an older
-    # version's value under the newest timestamp and drop rows whose only
-    # cell value is NULL.  drop_duplicates + pivot are NaN-faithful and
-    # match the declarative path (latest_cells + pivot_cells) exactly.
-    cells = cells.sort_values("ts", kind="stable")
+    # Integer sort keys: the row key's rank among the chunk's distinct
+    # keys, the declared qualifier index and the ts.  The sorts are stable,
+    # so input position is the implicit last key: "last in input order" is
+    # last in its run after the sort.
+    k = _key_ranks(row_key)
+    q = qcode.combine_chunks().to_numpy().astype(np.int64)
+    t = ts.cast(pa.int64()).to_numpy()
     if cfg.only_read_latest:
-        cells = cells.drop_duplicates(["row_key", "qualifier"], keep="last")
-    # one cell per (row_key, ts, qualifier): last write wins, like the
-    # reference's HashMap insertion (execute_plan.rs:186-212)
-    cells = cells.drop_duplicates(["row_key", "ts", "qualifier"], keep="last")
-    wide = cells.pivot(index=["row_key", "ts"], columns="qualifier", values="value").reset_index()
-
-    out: dict[str, object] = {}
-    keys = wide["row_key"].astype(str)
-    ktypes = cfg.key_types or ("string",) * len(cfg.table_partition_cols)
-
-    def _component(series, i):
-        if ktypes[i] != "int64":
-            return series
-        from datafusion_bigtable_spark.plans.keycodec import decode_int_key_pandas
-
-        return decode_int_key_pandas(series)
-
-    if len(cfg.table_partition_cols) == 1:
-        out[cfg.table_partition_cols[0]] = _component(keys, 0)
+        # newest per (row_key, qualifier), then back into (row_key, ts) order
+        idx = _stable_order(k, q, t)
+        idx = idx[_last_of_runs(k[idx], q[idx])]
+        idx = idx[_stable_order(k[idx], t[idx])]
     else:
-        # regex=False: pandas treats multi-char patterns as regex by default,
-        # which would split wrongly for separators like '||' — the DataFrame
-        # path (pivot.split_row_key) re.escape()s; both must agree.
-        parts = keys.str.split(cfg.table_partition_separator, expand=True, regex=False)
-        for i, name in enumerate(cfg.table_partition_cols):
-            col = parts[i] if i in parts.columns else pd.Series([None] * len(wide))
-            out[name] = _component(col, i)
-    out["_timestamp"] = wide["ts"]
+        idx = _stable_order(k, t, q)
+        idx = idx[_last_of_runs(k[idx], t[idx], q[idx])]
+    k, q, t = k[idx], q[idx], t[idx]
 
-    for spec in cfg.columns:
-        if spec.name in wide.columns:
-            raw = wide[spec.name]
-        else:
-            raw = pd.Series([None] * len(wide))
-        if spec.type in ("int64", "long"):
-            out[spec.name] = raw.map(
-                lambda b: int.from_bytes(b, "big", signed=True)
-                if isinstance(b, (bytes, bytearray)) and len(b) == 8
-                else None
-            )
-        elif spec.type == "binary":
-            out[spec.name] = raw.map(lambda b: bytes(b) if isinstance(b, (bytes, bytearray)) else None)
-        else:
-            out[spec.name] = raw.map(
-                lambda b: b.decode("utf-8", errors="replace")
-                if isinstance(b, (bytes, bytearray))
-                else None
-            )
+    row_start = np.ones(len(idx), dtype=bool)
+    row_start[1:] = (k[1:] != k[:-1]) | (t[1:] != t[:-1])
+    row_id = np.cumsum(row_start) - 1
+    n_rows = int(row_id[-1]) + 1
+    first = idx[row_start]
 
-    yield pa.RecordBatch.from_pandas(pd.DataFrame(out), schema=arrow_schema, preserve_index=False)
+    # scatter: slot[r, j] = the cell holding qualifier j of row r, or -1
+    slot = np.full((n_rows, len(quals)), -1, dtype=np.int64)
+    slot[row_id, q] = idx
+
+    # key split and decode once per distinct key, then expand to the rows
+    row_k = k[row_start]
+    key_start = np.ones(n_rows, dtype=bool)
+    key_start[1:] = row_k[1:] != row_k[:-1]
+    expand = np.cumsum(key_start) - 1
+    comps = _split_row_key(row_key.take(pa.array(first[key_start])), cfg)
+    fields = [schema.field(c.name) for c in cfg.columns]
+    for r0 in range(0, n_rows, _PIVOT_BATCH_ROWS):
+        rows = slice(r0, r0 + _PIVOT_BATCH_ROWS)
+        out = [c.take(pa.array(expand[rows])).cast(f.type) for c, f in zip(comps, schema)]
+        out.append(ts.take(pa.array(first[rows])))
+        for j, field in enumerate(fields):
+            col = slot[rows, j]
+            raw = value.take(pa.array(col, mask=col < 0))
+            if field.type == pa.int64():
+                out.append(_decode_be_int64(raw))
+            elif field.type == pa.binary():
+                out.append(raw.cast(pa.binary()))
+            else:  # the reference's catch-all: UTF-8 text, then the declared type
+                out.append(_decode_utf8(raw).cast(field.type))
+        yield pa.RecordBatch.from_arrays(out, schema=schema)
+
+
+def _key_ranks(row_key):
+    """Each row key's rank among the distinct keys (int64): a hash encode
+    plus a sort of the distinct keys only."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(row_key)
+    rank = np.empty(len(enc.dictionary), dtype=np.int64)
+    rank[pc.sort_indices(enc.dictionary).to_numpy()] = np.arange(len(rank))
+    return rank[enc.indices.to_numpy()]
+
+
+def _stable_order(*keys):
+    """Stable ``sort_indices`` over integer key columns (lexicographic)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    table = pa.table({str(i): key for i, key in enumerate(keys)})
+    return pc.sort_indices(
+        table, sort_keys=[(str(i), "ascending") for i in range(len(keys))]
+    ).to_numpy()
+
+
+def _last_of_runs(*keys):
+    """Mask of the last element of each run of equal key tuples."""
+    import numpy as np
+
+    last = np.ones(len(keys[0]), dtype=bool)
+    last[:-1] = keys[0][1:] != keys[0][:-1]
+    for key in keys[1:]:
+        last[:-1] |= key[1:] != key[:-1]
+    return last
+
+
+def _split_row_key(keys, cfg: BigtableTableConfig) -> list:
+    """One column per key component for ``keys``: a literal split on the
+    separator (a missing part is NULL, surplus parts are ignored), int64
+    components decoded."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ktypes = cfg.key_types or ("string",) * len(cfg.table_partition_cols)
+    if len(cfg.table_partition_cols) == 1:
+        comps = [keys]
+    else:
+        parts = pc.split_pattern(keys, pattern=cfg.table_partition_separator)
+        offsets = parts.offsets.to_numpy()
+        lengths = np.diff(offsets)
+        comps = [
+            parts.values.take(pa.array(offsets[:-1] + i, mask=lengths <= i))
+            for i in range(len(cfg.table_partition_cols))
+        ]
+    return [_decode_int_keys(c) if typ == "int64" else c for c, typ in zip(comps, ktypes)]
+
+
+def _decode_int_keys(comps):
+    """Order-preserving int64 key components (plans/keycodec.py) → int64;
+    a NULL or malformed component, or one outside int64, decodes to NULL."""
+    import pyarrow as pa
+
+    from datafusion_bigtable_spark.plans.keycodec import decode_int_key
+
+    def one(s):
+        if s is None:
+            return None
+        try:
+            v = decode_int_key(s)
+        except ValueError:
+            return None
+        return v if -(2**63) <= v < 2**63 else None
+
+    return pa.array([one(s) for s in comps.to_pylist()], pa.int64())
+
+
+def _decode_be_int64(raw):
+    """8-byte big-endian two's complement values → int64, read straight
+    from the large_binary array's data buffer; NULL or any other length →
+    NULL."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(raw)
+    _validity, offsets_buf, data_buf = raw.buffers()
+    offsets = np.frombuffer(offsets_buf, dtype=np.int64, count=n + 1, offset=raw.offset * 8)
+    ok = np.diff(offsets) == 8
+    if raw.null_count:
+        ok &= raw.is_valid().to_numpy(zero_copy_only=False)
+    out = np.zeros(n, dtype=np.int64)
+    if ok.any():
+        data = np.frombuffer(data_buf, dtype=np.uint8)
+        at = offsets[:-1][ok, None] + np.arange(8)
+        out[ok] = data[at].view(">i8").ravel()
+    return pa.array(out, mask=~ok)
+
+
+def _decode_utf8(raw):
+    """Binary → string.  Valid UTF-8 (the common case) is a zero-copy
+    cast; a column that fails validation decodes with U+FFFD replacement."""
+    import pyarrow as pa
+
+    try:
+        return raw.cast(pa.string())
+    except pa.ArrowInvalid:
+        return pa.array(
+            [None if b is None else b.decode("utf-8", errors="replace") for b in raw.to_pylist()],
+            pa.string(),
+        )
 
 
 @dataclass
@@ -1337,13 +1526,11 @@ class BigtableStreamReader(DataSourceStreamReader):
         return [StreamFilesPartition(tuple(g)) for g in groups]
 
     def read(self, partition: StreamFilesPartition) -> Iterator:
-        import pandas as pd
         import pyarrow.dataset as pa_ds
 
         cfg = self.config
-        cols = ["row_key", "qualifier", "ts", "value"]
         if not partition.files:
-            yield from _pivot_partition(pd.DataFrame(columns=cols), cfg)
+            yield from _pivot_partition(_cells_table(), cfg)
             return
         flt = (pa_ds.field("family") == cfg.column_family) & pa_ds.field("qualifier").isin(
             list(cfg.qualifiers)
@@ -1351,9 +1538,9 @@ class BigtableStreamReader(DataSourceStreamReader):
         # ONE pivot over the whole group's cells: a (row_key, ts) split
         # across the group's files merges into one relational row
         table = pa_ds.dataset(list(partition.files), format="parquet").to_table(
-            columns=cols, filter=flt
+            columns=CELL_COLUMNS, filter=flt
         )
-        yield from _pivot_partition(table.to_pandas(), cfg)
+        yield from _pivot_partition(table, cfg)
 
     def commit(self, end: dict) -> None:
         pass

@@ -39,8 +39,17 @@ def test_roundtrip_events_through_cells_store(spark, sf_dir, tmp_path):
         .option("allow_full_scan", "true")
         .load()
     )
-    # full scan parallelizes per file
-    assert df.rdd.getNumPartitions() >= 2
+    # the store is key-range partitioned: the full scan plans every file,
+    # as key-disjoint groups (packed into Spark-sized tasks)
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader
+
+    reader = BigtableReader(None, {
+        "path": out, "column_family": "f", "columns": "metrics:int64",
+        "table_partition_cols": "event_type,user_id,event_id", "allow_full_scan": "true",
+    })
+    parts = reader.partitions()
+    assert len([g for p in parts for g in p.groups]) >= 2
+    assert sorted(f for p in parts for f in p.files) == sorted(reader._files())
     total = df.count()
     assert total == 200
 

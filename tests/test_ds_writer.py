@@ -119,10 +119,98 @@ def test_key_disjoint_groups_unit():
     assert _key_disjoint_groups([st("a", None, None), st("b", "a", "b")]) == [["a", "b"]]
 
 
+MIB = 1024 * 1024
+
+
+def test_pack_groups_keeps_groups_whole_and_in_order():
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
+
+    groups = [["a"], ["b", "c"], ["d"], ["e", "f", "g"]]
+    sizes = {f: 10 * MIB for g in groups for f in g}
+    parts = _pack_groups(groups, sizes)
+    assert [g for part in parts for g in part] == groups
+    assert len(parts) == 1  # 7 files x (10 + 4) MiB fit in 128 MiB
+
+
+def test_pack_groups_splits_at_the_cap():
+    from datafusion_bigtable_spark.sources.datasource import (
+        _PACK_MAX_BYTES,
+        _PACK_OPEN_COST_BYTES,
+        _pack_groups,
+    )
+
+    # every file costs exactly a 32nd of the cap: 32 fill one partition
+    size = _PACK_MAX_BYTES // 32 - _PACK_OPEN_COST_BYTES
+    groups = [[f"f{i:02d}"] for i in range(33)]
+    sizes = {g[0]: size for g in groups}
+    assert [len(p) for p in _pack_groups(groups[:32], sizes)] == [32]
+    parts = _pack_groups(groups, sizes)
+    assert [len(p) for p in parts] == [32, 1]
+    assert [g for part in parts for g in part] == groups
+
+
+def test_pack_groups_oversized_group_stays_one_partition():
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
+
+    groups = [["small"], ["big1", "big2"], ["tail"]]
+    sizes = {"small": MIB, "big1": 100 * MIB, "big2": 100 * MIB, "tail": MIB}
+    assert _pack_groups(groups, sizes) == [[["small"]], [["big1", "big2"]], [["tail"]]]
+    assert _pack_groups([["big1", "big2"]], sizes) == [[["big1", "big2"]]]
+    assert _pack_groups([], {}) == []
+
+
+def test_packed_full_scan_streams_groups_through_one_carry(tmp_path):
+    """One task scans three key-disjoint groups: a file whose row keys
+    span row groups (streamed, carried), two key-overlapping files
+    (materialised together) and a last file.  The rows equal the pivot of
+    all cells at once, in (row_key, ts) order."""
+    import pyarrow as pa
+
+    from datafusion_bigtable_spark.sources.datasource import (
+        CELL_COLUMNS,
+        BigtableReader,
+        _pivot_partition,
+    )
+
+    def cells(keys, ts, quals):
+        n = len(keys)
+        return pa.table({
+            "row_key": keys, "family": ["f"] * n, "qualifier": quals,
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "value": pa.array([f"{k}@{t}".encode() for k, t in zip(keys, ts)], pa.binary()),
+        })
+
+    store = tmp_path / "store"
+    store.mkdir()
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    streamed = cells(
+        ["a", "a", "a", "b", "b", "c"], [t0, t0, t1, t0, t1, t0], ["p", "q", "p", "p", "p", "q"]
+    )
+    pq.write_table(streamed, store / "part-0.parquet", row_group_size=2)
+    pq.write_table(cells(["d", "f"], [t0, t0], ["p", "p"]), store / "part-1.parquet")
+    pq.write_table(cells(["e", "f"], [t1, t1], ["q", "p"]), store / "part-2.parquet")
+    pq.write_table(cells(["g"], [t1], ["q"]), store / "part-3.parquet")
+
+    for latest in ("true", "false"):
+        reader = BigtableReader(None, {
+            "path": str(store), "column_family": "f", "columns": "p:string,q:string",
+            "only_read_latest": latest, "allow_full_scan": "true",
+        })
+        (part,) = reader.partitions()
+        assert [len(g) for g in part.groups] == [1, 2, 1]
+        batches = list(reader.read(part))
+        assert len(batches) > 3  # row-group chunks cut at key boundaries
+        got = pa.Table.from_batches(batches).to_pylist()
+        every = pa.concat_tables(pq.read_table(f) for f in sorted(store.glob("*.parquet")))
+        (want,) = _pivot_partition(every.select(CELL_COLUMNS), reader.config)
+        assert got == want.to_pylist()
+        assert [r["_row_key"] for r in got] == sorted(r["_row_key"] for r in got)
+
+
 def test_compaction_restores_disjoint_layout(registered, cells_path, tmp_path):
-    """Appends overlap file key ranges (reader merges them into one task);
-    compaction rewrites to disjoint sorted files and restores per-file
-    parallelism + the manifest."""
+    """Appends overlap file key ranges (reader merges them into one
+    key-disjoint group); compaction rewrites to disjoint sorted files and
+    restores one group per file + the manifest."""
     from datafusion_bigtable_spark.sources.cells import compact_cells_store, read_manifest
     from datafusion_bigtable_spark.sources.datasource import BigtableReader
 
@@ -136,7 +224,9 @@ def test_compaction_restores_disjoint_layout(registered, cells_path, tmp_path):
     )
     _opts(newer.write.format("bigtable"), dest).mode("append").save()
 
-    def full_scan_parts():
+    def full_scan_groups():
+        # the key-disjoint file groups the full scan plans (a small store
+        # packs them all into one task; the groups are the layout)
         r = BigtableReader(None, {
             "path": dest, "column_family": "measurements",
             "columns": "pressure:int64,temperature:string",
@@ -144,13 +234,13 @@ def test_compaction_restores_disjoint_layout(registered, cells_path, tmp_path):
             "only_read_latest": "false",
             "allow_full_scan": "true",
         })
-        return r.partitions()
+        return [g for p in r.partitions() for g in p.groups]
 
-    assert len(full_scan_parts()) == 1  # overlap → one merged task
+    assert len(full_scan_groups()) == 1  # overlap → one merged group
     before = sorted(tuple(r) for r in _read(registered, dest, latest="false").collect())
 
     compact_cells_store(registered, dest, num_ranges=4)
-    assert len(full_scan_parts()) > 1  # disjoint again → parallel tasks
+    assert len(full_scan_groups()) > 1  # disjoint again → one group per file
     assert read_manifest(dest) is not None
     after = sorted(tuple(r) for r in _read(registered, dest, latest="false").collect())
     assert after == before  # same logical content

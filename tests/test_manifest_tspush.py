@@ -103,6 +103,35 @@ def test_stale_manifest_ignored(two_file_store):
     assert len(stats) == 3
 
 
+def test_full_scan_packs_by_manifest_file_sizes(two_file_store):
+    # the manifest records each file's size, so packing a full scan needs
+    # no per-plan stat of the store's files
+    from datafusion_bigtable_spark.sources.datasource import _PACK_MAX_BYTES
+
+    write_manifest(two_file_store)
+    mpath = os.path.join(two_file_store, MANIFEST_REL_PATH)
+    t = pq.read_table(mpath)
+    files = [os.path.join(two_file_store, f) for f in t["file"].to_pylist()]
+    assert t["bytes"].to_pylist() == [os.path.getsize(f) for f in files]
+    (part,) = _reader(two_file_store).partitions()  # two small files, one task
+    assert part.files == tuple(files)
+    # sizes come from the manifest: at the cap, each file is a task
+    at_cap = pa.array([_PACK_MAX_BYTES] * len(files), pa.int64())
+    pq.write_table(t.set_column(t.schema.get_field_index("bytes"), "bytes", at_cap), mpath)
+    assert [p.files for p in _reader(two_file_store).partitions()] == [(f,) for f in files]
+
+
+def test_manifest_without_file_sizes_still_plans(two_file_store):
+    # a manifest written before sizes were recorded stays usable
+    write_manifest(two_file_store)
+    mpath = os.path.join(two_file_store, MANIFEST_REL_PATH)
+    pq.write_table(pq.read_table(mpath).drop_columns(["bytes"]), mpath)
+    stats = read_manifest(two_file_store)
+    assert [st["bytes"] for st in stats] == [os.path.getsize(st["file"]) for st in stats]
+    (part,) = _reader(two_file_store, require_manifest="true").partitions()
+    assert len(part.files) == 2
+
+
 # --- ts-range pushdown -----------------------------------------------------
 
 
@@ -129,7 +158,7 @@ def test_ts_pushdown_gated_under_latest_filter(two_file_store):
     r = _reader(two_file_store, only_read_latest="true")
     r.pushFilters([GreaterThanOrEqual(("_timestamp",), dt.datetime(2024, 2, 1))])
     parts = r.partitions()
-    assert len(parts) == 2  # nothing pruned
+    assert len([f for p in parts for f in p.files]) == 2  # nothing pruned
     assert all(p.ts_lo is None and p.ts_hi is None for p in parts)
 
 

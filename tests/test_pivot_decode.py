@@ -127,8 +127,11 @@ def test_pandas_pivot_multichar_separator_parity():
     # ADVICE r1: pandas str.split treats multi-char patterns as regex by
     # default, so a separator like '||' (regex: two empty alternations)
     # exploded every key char-by-char — inconsistent with split_row_key,
-    # which re.escape()s.  Both paths must split literally.
-    import pandas as pd
+    # which re.escape()s.  Both paths must split literally; the Arrow
+    # kernel that replaced the pandas pivot keeps the pin.
+    import datetime as dt
+
+    import pyarrow as pa
 
     from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
     from datafusion_bigtable_spark.sources.datasource import _pivot_partition
@@ -140,12 +143,15 @@ def test_pandas_pivot_multichar_separator_parity():
         table_partition_cols=("region", "balloon_id"),
         table_partition_separator="||",
     )
-    cells = pd.DataFrame(
+    cells = pa.table(
         {
             "row_key": ["us-west2||3698", "us-east1||0042"],
             "qualifier": ["temperature", "temperature"],
-            "ts": [pd.Timestamp("2021-03-05 12:00:05"), pd.Timestamp("2021-03-05 12:00:06")],
-            "value": [b"9.6", b"7.1"],
+            "ts": pa.array(
+                [dt.datetime(2021, 3, 5, 12, 0, 5), dt.datetime(2021, 3, 5, 12, 0, 6)],
+                pa.timestamp("us"),
+            ),
+            "value": pa.array([b"9.6", b"7.1"], pa.binary()),
         }
     )
     (batch,) = list(_pivot_partition(cells, cfg))
