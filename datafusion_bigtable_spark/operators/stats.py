@@ -53,6 +53,9 @@ def order_statistics_df(df: DataFrame, col: str, ranks: list[int]) -> DataFrame:
     tests/test_plan_contracts.py pins the final plan to one
     rangepartitioning exchange + ReusedExchange so a regression fails
     loudly instead of skewing ranks."""
+    if not ranks:
+        # No rank requested: the empty (_rk, _v) frame, without a shuffle.
+        return df.select(F.lit(0).cast("long").alias("_rk"), F.col(col).alias("_v")).limit(0)
     spark = df.sparkSession
     p_conf = spark.conf.get("spark.sql.shuffle.partitions", "32")
     num_parts = int(p_conf) if str(p_conf).isdigit() else 32
@@ -109,6 +112,8 @@ def exact_percentiles(
     for p in ps:
         if not 0.0 <= p <= 1.0:
             raise ValueError(f"p must be in [0, 1], got {p}")
+    if not ps:
+        return []
     df = df.filter(F.col(col).isNotNull())
     if n is None:
         n = df.count()

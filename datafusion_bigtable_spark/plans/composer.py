@@ -230,6 +230,9 @@ def from_datasource_filters(
     into :class:`Between`, matching how the reference receives sqlparser's
     BETWEEN as a single Expr (composer.rs:50-62); Catalyst splits BETWEEN
     into two comparisons before pushdown, so we reassemble it here.
+    Several bounds on one side keep the tightest (max lower, min upper);
+    int keys encode to order-preserving strings, so a string comparison
+    serves both key types.
 
     ``key_types`` (the int-key extension, plans/keycodec.py): int literals
     on an int64-typed component encode to their order-preserving string
@@ -282,19 +285,19 @@ def from_datasource_filters(
         elif name == "GreaterThanOrEqual":
             nv = norm(col, v)
             if nv is not None:
-                lowers[col] = nv
+                lowers[col] = max(lowers.get(col, nv), nv)
         elif name == "LessThanOrEqual":
             nv = norm(col, v)
             if nv is not None:
-                uppers[col] = nv
+                uppers[col] = min(uppers.get(col, nv), nv)
         elif name == "GreaterThan" and col in int_cols and isinstance(v, int) and v < _INT64_MAX:
             nv = norm(col, v + 1)
             if nv is not None:
-                lowers[col] = nv
+                lowers[col] = max(lowers.get(col, nv), nv)
         elif name == "LessThan" and col in int_cols and isinstance(v, int) and v > _INT64_MIN:
             nv = norm(col, v - 1)
             if nv is not None:
-                uppers[col] = nv
+                uppers[col] = min(uppers.get(col, nv), nv)
 
     if tail_col in lowers and tail_col in uppers:
         preds.append(Between(tail_col, lowers[tail_col], uppers[tail_col]))

@@ -26,11 +26,8 @@ partition count, and nothing collects to the driver.
 
 from __future__ import annotations
 
-import ast as _ast
-import functools
-import inspect
 import json
-import textwrap
+import re
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Optional
@@ -1706,1186 +1703,45 @@ def interval_join_order_events_q(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Driver-window scheduling.  The correctness driver hash-checks only the
-# FIRST 50 entries of queries() iteration order per round, while the registry
-# is larger — so iteration order IS the verification schedule.  Policy
-# (documented in COVERAGE.md): order by the round each query's record last
-# went driver-green, oldest first; never-checked / stale-record / touched-
-# this-round queries carry 0 and therefore always land inside the window.
-# Registry (file) order breaks ties, keeping the schedule deterministic.
-# After each round, fold CORRECTNESS_r{N}.json back into _LAST_GREEN and
-# reset any query whose implementation changed to 0.
+# FIRST 50 entries of queries() iteration order per round, so iteration order
+# IS the verification schedule.  It is derived at call time from the committed
+# CORRECTNESS_r{N}.json artifacts next to the package: a query is green in
+# round N when its record there matches rows, schema and hash with no error.
+# Queries sort by their last green round, oldest first (never green = 0); the
+# stable sort keeps registry order for ties.  See COVERAGE.md.
 # ---------------------------------------------------------------------------
 
-_R1_GREEN = (
-    "streaming_window_counts",
-    "union_all_entities",
-    "skew_salted_aggregation",
-    "grouping_sets_mixed",
-    "streaming_session_windows",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-)
-_R2_GREEN = (
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_revenue_change",
-    "tpch_q10_returned_items",
-    "agg_distinct_stats",
-    "rollup_lineitem_qty",
-    "cube_orders_revenue",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_lag_delta",
-    "topk_orders_global",
-    "set_ops_nation_overlap",
-    "set_ops_nation_except",
-    "semi_join_active_customers",
-    "anti_join_idle_customers",
-    "outer_join_nation_customer_counts",
-    "scalar_functions_part",
-    "json_extract_props",
-    "cte_above_nation_avg",
-    "having_repeat_customers",
-    "median_quantiles",
-    "bt_key_compose_range_prune",
-    "bt_key_split",
-    "bt_latest_version",
-    "bt_cell_pivot",
-    "bt_key_not_between_prune",
-    "events_retention_cohorts",
-    "events_sessionize",
-    "asof_join_latest_event",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "sim_topk_bruteforce",
-    "sim_topk_lsh_bucketed",
-    "text_langid",
-    "text_curation_filter",
-    "sample_class_balanced",
-    "corpus_mixing_weights",
-    "text_quality",
-    "text_token_counts",
-    "text_fingerprint",
-)
-# CORRECTNESS_r03.json — all 50 window entries green; folded here so the
-# round-4 window rotates the 42 r2-green names back in.
-_R3_GREEN = (
-    "set_ops_multiset",
-    "unpivot_cell_metrics",
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_asof_snapshot",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_read_rows_service",
-    "dedup_ngram_jaccard",
-    "sim_topk_ivf_cells",
-    "sim_topk_ivf_nprobe",
-    "embedding_quantize_int8",
-    "dedup_keep_canonical",
-    "events_moving_window_range",
-    "sim_topk_pq_adc",
-    "sim_topk_ivfpq",
-    "pipeline_curated_corpus",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "streaming_stateful_user_totals",
-    "approx_aggregates",
-    "tpch_q14_promo_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue",
-    "deterministic_hash_sample",
-    "tpch_q8_market_share",
-    "tpch_q22_idle_rich_customers",
-    "dedup_multi_signal",
-    "text_top_bigrams",
-    "events_funnel_analysis",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_excess_suppliers",
-    "streaming_window_counts",
-    "union_all_entities",
-    "skew_salted_aggregation",
-    "grouping_sets_mixed",
-    "streaming_session_windows",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-)
-# CORRECTNESS_r04.json — 48/50 window entries green (the two event-time
-# streaming queries failed on the ts-decode bug fixed this round; they reset
-# to slot 0 via _TOUCHED_MODULES below, so they re-verify first in r5).
-_R4_GREEN = (
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_pixel_stats",
-    "multimodal_video_frames",
-    "streaming_stateful_user_totals",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_revenue_change",
-    "tpch_q10_returned_items",
-    "agg_distinct_stats",
-    "rollup_lineitem_qty",
-    "cube_orders_revenue",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_lag_delta",
-    "topk_orders_global",
-    "set_ops_nation_overlap",
-    "set_ops_nation_except",
-    "semi_join_active_customers",
-    "anti_join_idle_customers",
-    "outer_join_nation_customer_counts",
-    "scalar_functions_part",
-    "json_extract_props",
-    "cte_above_nation_avg",
-    "having_repeat_customers",
-    "median_quantiles",
-    "bt_key_compose_range_prune",
-    "bt_key_split",
-    "bt_latest_version",
-    "bt_cell_pivot",
-    "events_retention_cohorts",
-    "bt_key_not_between_prune",
-    "events_sessionize",
-    "asof_join_latest_event",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "sim_topk_bruteforce",
-    "sim_topk_lsh_bucketed",
-    "text_langid",
-    "text_curation_filter",
-    "sample_class_balanced",
-)
-# CORRECTNESS_r05.json — 50/50 window entries green (the r4 streaming fix
-# verified, plus the four r4 window-overflow text/corpus queries and all of
-# round 5's new interval-join / decontamination / chunking / packing /
-# streaming-dedup surface).
-_R5_GREEN = (
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_read_rows_service",
-    "interval_join_order_events",
-    "decontaminate_vs_benchmark",
-    "text_chunk_documents",
-    "corpus_pack_sequences",
-    "streaming_window_counts",
-    "streaming_dedup_pairs",
-    "streaming_attribution_join",
-    "streaming_enriched_counts",
-    "streaming_stateful_user_totals",
-    "streaming_session_windows",
-    "corpus_mixing_weights",
-    "text_quality",
-    "text_token_counts",
-    "text_fingerprint",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "set_ops_multiset",
-    "unpivot_cell_metrics",
-    "bt_asof_snapshot",
-    "dedup_ngram_jaccard",
-    "sim_topk_ivf_cells",
-    "sim_topk_ivf_nprobe",
-    "embedding_quantize_int8",
-    "dedup_keep_canonical",
-    "events_moving_window_range",
-    "sim_topk_pq_adc",
-    "sim_topk_ivfpq",
-    "pipeline_curated_corpus",
-    "union_all_entities",
-    "skew_salted_aggregation",
-    "approx_aggregates",
-    "grouping_sets_mixed",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q14_promo_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue",
-    "deterministic_hash_sample",
-    "tpch_q8_market_share",
-    "tpch_q22_idle_rich_customers",
-    "dedup_multi_signal",
-    "text_top_bigrams",
-    "events_funnel_analysis",
-    "tpch_q15_top_supplier",
-)
-# CORRECTNESS_r06.json — 49/50 window entries green (the lone exception was
-# rows-only multimodal_jpeg_decode, since rebuilt with an exact oracle and
-# reset to 0 via _TOUCHED_QUERIES below).
-_R6_GREEN = (
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "interval_join_order_events",
-    "streaming_window_counts",
-    "streaming_dedup_pairs",
-    "streaming_attribution_join",
-    "streaming_enriched_counts",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_pixel_stats",
-    "multimodal_video_frames",
-    "streaming_stateful_user_totals",
-    "streaming_session_windows",
-    "text_repetition_signals",
-    "text_tfidf_top_terms",
-    "scd2_user_segments",
-    "corpus_shard_assign",
-    "text_pii_redaction",
-    "embedding_normalize_trunc",
-    "fk_orphan_audit",
-    "numeric_histogram_prices",
-    "zorder_bucket_counts",
-    "winsorize_prices",
-    "multimodal_png_decode",
-    "multimodal_audio_spectral",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_excess_suppliers",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_revenue_change",
-    "tpch_q10_returned_items",
-    "agg_distinct_stats",
-    "rollup_lineitem_qty",
-    "cube_orders_revenue",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_lag_delta",
-    "topk_orders_global",
-    "set_ops_nation_overlap",
-    "set_ops_nation_except",
-)
-# CORRECTNESS_r07.json — all 50 window entries green (the r7 window led
-# with the new wire transport, span dedup, trained-codebook recall, and the
-# jpeg-decode exact oracle).
-_R7_GREEN = (
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_read_rows_service",
-    "bt_value_pushdown_service",
-    "bt_read_rows_wire",
-    "bt_wire_sharded_scan",
-    "dedup_substring_spans",
-    "sim_trained_codebook_recall",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_pixel_stats",
-    "multimodal_video_frames",
-    "winsorize_prices",
-    "multimodal_png_decode",
-    "multimodal_jpeg_decode",
-    "multimodal_audio_spectral",
-    "text_boilerplate_ngrams",
-    "embedding_cluster_outliers",
-    "semi_join_active_customers",
-    "anti_join_idle_customers",
-    "outer_join_nation_customer_counts",
-    "scalar_functions_part",
-    "json_extract_props",
-    "cte_above_nation_avg",
-    "having_repeat_customers",
-    "median_quantiles",
-    "bt_key_compose_range_prune",
-    "bt_key_split",
-    "bt_latest_version",
-    "bt_cell_pivot",
-    "events_retention_cohorts",
-    "bt_key_not_between_prune",
-    "events_sessionize",
-    "asof_join_latest_event",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "sim_topk_bruteforce",
-    "sim_topk_lsh_bucketed",
-    "text_langid",
-    "text_curation_filter",
-    "sample_class_balanced",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "set_ops_multiset",
-)
-# CORRECTNESS_r08.json — all 50 window entries green (first window for the
-# exact-quantile pair, the protobuf wire queries, and the r8 boilerplate /
-# progressive-JPEG / approx-agg rebuilds).
-_R8_GREEN = (
-    "exact_quantiles_distributed",
-    "grouped_exact_quantiles",
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_read_rows_wire",
-    "bt_wire_sharded_scan",
-    "dedup_embedding_cosine_ivf",
-    "text_bpe_tokenize",
-    "text_ngram_perplexity",
-    "dedup_semantic_prune",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_pixel_stats",
-    "multimodal_video_frames",
-    "approx_aggregates",
-    "winsorize_prices",
-    "multimodal_png_decode",
-    "multimodal_jpeg_decode",
-    "multimodal_audio_spectral",
-    "text_boilerplate_ngrams",
-    "unpivot_cell_metrics",
-    "bt_asof_snapshot",
-    "dedup_ngram_jaccard",
-    "sim_topk_ivf_cells",
-    "sim_topk_ivf_nprobe",
-    "embedding_quantize_int8",
-    "dedup_keep_canonical",
-    "events_moving_window_range",
-    "sim_topk_pq_adc",
-    "sim_topk_ivfpq",
-    "pipeline_curated_corpus",
-    "corpus_mixing_weights",
-    "text_quality",
-    "text_token_counts",
-    "text_fingerprint",
-    "decontaminate_vs_benchmark",
-    "text_chunk_documents",
-    "corpus_pack_sequences",
-    "union_all_entities",
-    "skew_salted_aggregation",
-    "grouping_sets_mixed",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q14_promo_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_revenue",
-    "deterministic_hash_sample",
-)
-# CORRECTNESS_r09.json — all 50 green, but the r9 window was byte-identical
-# to r8's (the fold below was skipped in round 9 — VERDICT r9 "what's wrong
-# #1"), so the same tuple serves both rounds.
-_R9_GREEN = _R8_GREEN
-# CORRECTNESS_r10.json — 49/50 green.  The one non-green, corpus_mixing_alpha
-# (rows+schema matched, hash did not: DuckDB SUM(BIGINT) is HUGEINT, which
-# the driver's pandas conversion renders float64 "1435.0" vs Spark's bigint
-# "1435"), is deliberately ABSENT here so it re-verifies at slot 0 in r11
-# after the CAST(... AS BIGINT) oracle fix.
-_R10_GREEN = (
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_read_rows_wire",
-    "bt_wire_sharded_scan",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_substring_spans",
-    "dedup_minhash_lsh",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_ivf",
-    "dedup_embedding_cosine_ivf2",
-    "text_bpe_tokenize",
-    "text_ngram_perplexity",
-    "text_word_perplexity",
-    "dedup_semantic_prune",
-    "sim_topk_bruteforce",
-    "sim_topk_lsh_bucketed",
-    "sim_topk_ivf_cells",
-    "sim_topk_ivf_nprobe",
-    "sim_trained_codebook_recall",
-    "dedup_keep_canonical",
-    "sim_topk_pq_adc",
-    "sim_topk_ivfpq",
-    "text_curation_filter",
-    "streaming_curation_filter",
-    "pipeline_curated_corpus",
-    "decontaminate_vs_benchmark",
-    "streaming_window_counts",
-    "streaming_dedup_pairs",
-    "streaming_attribution_join",
-    "streaming_enriched_counts",
-    "streaming_stateful_user_totals",
-    "streaming_session_windows",
-    "dedup_multi_signal",
-    "embedding_random_projection",
-    "sim_topk_projected",
-    "embedding_cluster_outliers",
-    "tpch_q8_market_share",
-    "tpch_q22_idle_rich_customers",
-    "text_top_bigrams",
-    "events_funnel_analysis",
-    "tpch_q15_top_supplier",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_revenue_change",
-)
-# CORRECTNESS_r11.json — 50/50 green (rows + schema + hash, zero err).
-_R11_GREEN = (
-    "ingest_jsonl_documents",
-    "bt_read_rows_wire",
-    "bt_wire_sharded_scan",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_substring_spans",
-    "dedup_minhash_lsh",
-    "dedup_minhash_estimate",
-    "dedup_lsh_quality",
-    "dedup_prefix_filter",
-    "corpus_leakage_safe_split",
-    "dedup_sampled_rate",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_ivf",
-    "dedup_embedding_cosine_ivf2",
-    "dedup_semantic_prune",
-    "sim_topk_bruteforce",
-    "sim_topk_lsh_bucketed",
-    "sim_topk_ivf_cells",
-    "sim_topk_ivf_nprobe",
-    "sim_trained_codebook_recall",
-    "dedup_keep_canonical",
-    "sim_topk_pq_adc",
-    "sim_topk_ivfpq",
-    "text_curation_sql",
-    "streaming_curation_filter",
-    "pipeline_curated_corpus",
-    "corpus_mixing_alpha",
-    "decontaminate_vs_benchmark",
-    "decontaminate_bloom",
-    "streaming_dedup_pairs",
-    "dedup_multi_signal",
-    "text_heavy_hitters",
-    "corpus_zipf_slope",
-    "embedding_random_projection",
-    "sim_topk_projected",
-    "multimodal_ahash_dedup",
-    "embedding_cluster_outliers",
-    "text_line_dedup",
-    "sim_topk_filtered",
-    "corpus_pack_utilization",
-    "dedup_keep_best_quality",
-    "dedup_incremental_ingest",
-    "table_profile_lineitem",
-    "streaming_ingest_dedup",
-    "events_asof_view_tolerance",
-    "events_asof_last_order",
-)
-# CORRECTNESS_r12.json — 50/50 green (rows + schema + hash, zero err).
-_R12_GREEN = (
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_read_rows_service",
-    "bt_value_pushdown_service",
-    "bt_read_rows_wire",
-    "bt_wire_sharded_scan",
-    "bt_mutate_rows_wire",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_substring_spans",
-    "dedup_minhash_lsh",
-    "dedup_minhash_estimate",
-    "dedup_lsh_quality",
-    "dedup_prefix_filter",
-    "corpus_leakage_safe_split",
-    "dedup_sampled_rate",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_ivf",
-    "dedup_embedding_cosine_ivf2",
-    "text_ngram_perplexity",
-    "text_word_perplexity",
-    "dedup_semantic_prune",
-    "dedup_keep_canonical",
-    "streaming_curation_filter",
-    "pipeline_curated_corpus",
-    "decontaminate_vs_benchmark",
-    "decontaminate_bloom",
-    "streaming_window_counts",
-    "streaming_dedup_pairs",
-    "streaming_attribution_join",
-    "streaming_enriched_counts",
-    "streaming_stateful_user_totals",
-    "streaming_session_windows",
-    "dedup_multi_signal",
-    "scd2_user_segments",
-    "text_line_dedup",
-    "dedup_keep_best_quality",
-    "dedup_incremental_ingest",
-    "streaming_ingest_dedup",
-    "events_asof_view_tolerance",
-    "events_asof_last_order",
-    "sim_index_upsert",
-    "sim_search_after_upsert",
-    "pipeline_embedding_store",
-)
-# CORRECTNESS_r13.json — 50/50 green (rows + schema + hash, zero err).
-_R13_GREEN = (
-    "bt_read_rows_service",
-    "bt_value_pushdown_service",
-    "bt_read_rows_wire",
-    "bt_mutate_rows_wire",
-    "text_quality",
-    "text_pii_redaction",
-    "multimodal_jpeg_decode",
-    "multimodal_audio_spectral",
-    "sim_index_upsert",
-    "sim_search_after_upsert",
-    "pipeline_embedding_store",
-    "sim_index_drift",
-    "sim_index_retrain",
-    "bucketed_join_mktsegment",
-    "streaming_index_upsert",
-    "bucketed_agg_order_stats",
-    "tpch_q10_returned_items",
-    "agg_distinct_stats",
-    "rollup_lineitem_qty",
-    "cube_orders_revenue",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_lag_delta",
-    "topk_orders_global",
-    "set_ops_nation_overlap",
-    "set_ops_nation_except",
-    "interval_join_order_events",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q13_customer_distribution",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_excess_suppliers",
-    "text_repetition_signals",
-    "text_tfidf_top_terms",
-    "corpus_shard_assign",
-    "embedding_normalize_trunc",
-    "fk_orphan_audit",
-    "numeric_histogram_prices",
-    "zorder_bucket_counts",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "semi_join_active_customers",
-    "anti_join_idle_customers",
-    "outer_join_nation_customer_counts",
-    "scalar_functions_part",
-    "json_extract_props",
-)
-# CORRECTNESS_r14.json — 50/50 green (rows + schema + hash, zero err).
-_R14_GREEN = (
-    "tpch_q10_returned_items",
-    "bt_read_rows_service",
-    "bt_value_pushdown_service",
-    "bt_read_rows_wire",
-    "bt_mutate_rows_wire",
-    "tpch_q4_order_priority",
-    "tpch_q18_large_orders",
-    "tpch_q22_idle_rich_customers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q13_customer_distribution",
-    "sim_index_upsert",
-    "sim_search_after_upsert",
-    "pipeline_embedding_store",
-    "sim_index_drift",
-    "sim_index_retrain",
-    "bucketed_join_mktsegment",
-    "streaming_index_upsert",
-    "bucketed_agg_order_stats",
-    "retrieval_sparse_topk",
-    "shards_compact_roundtrip",
-    "sorted_shards_range_layout",
-    "set_ops_multiset",
-    "cte_above_nation_avg",
-    "having_repeat_customers",
-    "median_quantiles",
-    "bt_key_compose_range_prune",
-    "bt_key_split",
-    "bt_latest_version",
-    "bt_cell_pivot",
-    "events_retention_cohorts",
-    "bt_key_not_between_prune",
-    "events_sessionize",
-    "asof_join_latest_event",
-    "text_langid",
-    "sample_class_balanced",
-    "unpivot_cell_metrics",
-    "exact_quantiles_distributed",
-    "grouped_exact_quantiles",
-    "bt_asof_snapshot",
-    "embedding_quantize_int8",
-    "events_moving_window_range",
-    "corpus_mixing_weights",
-    "text_token_counts",
-    "text_fingerprint",
-    "text_chunk_documents",
-    "corpus_pack_sequences",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_pixel_stats",
-    "multimodal_video_frames",
-)
-# CORRECTNESS_r15.json — 50/50 green (rows + schema + hash, zero err).
-_R15_GREEN = (
-    "tpch_q10_returned_items",
-    "embedding_quantize_int8",
-    "tpch_q4_order_priority",
-    "tpch_q18_large_orders",
-    "tpch_q22_idle_rich_customers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q13_customer_distribution",
-    "sim_index_upsert",
-    "sim_search_after_upsert",
-    "pipeline_embedding_store",
-    "sim_index_drift",
-    "sim_index_retrain",
-    "bucketed_join_mktsegment",
-    "streaming_index_upsert",
-    "bucketed_agg_order_stats",
-    "retrieval_sparse_topk",
-    "retrieval_saved_topk",
-    "retrieval_bm25_topk",
-    "retrieval_index_upsert",
-    "streaming_postings_upsert",
-    "retrieval_hybrid_rrf",
-    "retrieval_hybrid_rrf_ivf",
-    "shards_compact_roundtrip",
-    "sorted_shards_range_layout",
-    "sorted_shards_range_prune",
-    "union_all_entities",
-    "skew_salted_aggregation",
-    "approx_aggregates",
-    "grouping_sets_mixed",
-    "tpch_q7_volume_shipping",
-    "tpch_q14_promo_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "deterministic_hash_sample",
-    "winsorize_prices",
-    "multimodal_png_decode",
-    "text_boilerplate_ngrams",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_revenue_change",
-    "text_bpe_tokenize",
-    "text_curation_filter",
-    "tpch_q8_market_share",
-    "text_top_bigrams",
-    "events_funnel_analysis",
-    "tpch_q15_top_supplier",
-    "ingest_jsonl_documents",
-    "sim_topk_bruteforce",
-    "sim_topk_lsh_bucketed",
-    "sim_topk_ivf_cells",
-    "sim_topk_ivf_nprobe",
-    "sim_trained_codebook_recall",
-)
-# Round 16 driver window (CORRECTNESS_r16.json): 50/50 green — the r16
-# store-lifecycle additions (postings compact/delete, IVF delete, saved
-# IVF×PQ, saved hybrid, both streaming takedowns) plus the rotated r11
-# cohort.
-_R16_GREEN = (
-    "sim_index_delete",
-    "sim_topk_ivfpq_saved",
-    "retrieval_sparse_topk",
-    "retrieval_saved_topk",
-    "retrieval_bm25_topk",
-    "retrieval_index_upsert",
-    "streaming_postings_upsert",
-    "retrieval_postings_compact",
-    "retrieval_postings_delete",
-    "streaming_postings_delete",
-    "streaming_ivf_delete",
-    "retrieval_hybrid_rrf",
-    "retrieval_hybrid_rrf_ivf",
-    "retrieval_hybrid_saved",
-    "sim_topk_pq_adc",
-    "sim_topk_ivfpq",
-    "text_curation_sql",
-    "corpus_mixing_alpha",
-    "text_heavy_hitters",
-    "corpus_zipf_slope",
-    "embedding_random_projection",
-    "sim_topk_projected",
-    "multimodal_ahash_dedup",
-    "embedding_cluster_outliers",
-    "sim_topk_filtered",
-    "corpus_pack_utilization",
-    "table_profile_lineitem",
-    "bt_limit_pushdown",
-    "bt_ts_range_prune",
-    "bt_value_filter_pushdown",
-    "bt_value_regex_pushdown",
-    "bt_int_key_prune",
-    "bt_wire_sharded_scan",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_substring_spans",
-    "dedup_minhash_lsh",
-    "dedup_minhash_estimate",
-    "dedup_lsh_quality",
-    "dedup_prefix_filter",
-    "corpus_leakage_safe_split",
-    "dedup_sampled_rate",
-    "dedup_connected_components",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_ivf",
-    "dedup_embedding_cosine_ivf2",
-    "text_ngram_perplexity",
-    "text_word_perplexity",
-)
-# Round 17 driver window (CORRECTNESS_r17.json): 50/50 green — the r17
-# lifecycle additions (sim_index_compact, both maintain streams, the PQ-leg
-# hybrid) plus the rotated r12 stale cohort.
-_R17_GREEN = (
-    "corpus_leakage_safe_split",
-    "dedup_connected_components",
-    "dedup_semantic_prune",
-    "dedup_keep_canonical",
-    "pipeline_curated_corpus",
-    "dedup_keep_best_quality",
-    "sim_index_compact",
-    "streaming_ivf_maintain",
-    "streaming_postings_maintain",
-    "pipeline_embedding_store",
-    "retrieval_sparse_topk",
-    "retrieval_saved_topk",
-    "retrieval_bm25_topk",
-    "retrieval_index_upsert",
-    "streaming_postings_upsert",
-    "retrieval_postings_compact",
-    "retrieval_postings_delete",
-    "streaming_postings_delete",
-    "streaming_ivf_delete",
-    "retrieval_hybrid_rrf",
-    "retrieval_hybrid_rrf_ivf",
-    "retrieval_hybrid_saved",
-    "retrieval_hybrid_saved_pq",
-    "streaming_curation_filter",
-    "decontaminate_vs_benchmark",
-    "decontaminate_bloom",
-    "streaming_window_counts",
-    "streaming_dedup_pairs",
-    "streaming_attribution_join",
-    "streaming_enriched_counts",
-    "streaming_stateful_user_totals",
-    "streaming_session_windows",
-    "dedup_multi_signal",
-    "scd2_user_segments",
-    "text_line_dedup",
-    "dedup_incremental_ingest",
-    "streaming_ingest_dedup",
-    "events_asof_view_tolerance",
-    "events_asof_last_order",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "agg_distinct_stats",
-    "rollup_lineitem_qty",
-    "cube_orders_revenue",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_lag_delta",
-    "topk_orders_global",
-    "set_ops_nation_overlap",
-    "set_ops_nation_except",
-)
-# Round 18 driver window (CORRECTNESS_r18.json): 50/50 green — the
-# rotated sample the r18 optimization round was graded on.
-_R18_GREEN = (
-    "semi_join_active_customers",
-    "anti_join_idle_customers",
-    "outer_join_nation_customer_counts",
-    "scalar_functions_part",
-    "json_extract_props",
-    "interval_join_order_events",
-    "text_quality",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_excess_suppliers",
-    "text_repetition_signals",
-    "text_tfidf_top_terms",
-    "corpus_shard_assign",
-    "text_pii_redaction",
-    "embedding_normalize_trunc",
-    "fk_orphan_audit",
-    "numeric_histogram_prices",
-    "zorder_bucket_counts",
-    "multimodal_jpeg_decode",
-    "multimodal_audio_spectral",
-    "set_ops_multiset",
-    "unpivot_cell_metrics",
-    "cte_above_nation_avg",
-    "having_repeat_customers",
-    "median_quantiles",
-    "exact_quantiles_distributed",
-    "grouped_exact_quantiles",
-    "bt_key_compose_range_prune",
-    "bt_key_split",
-    "bt_latest_version",
-    "bt_cell_pivot",
-    "events_retention_cohorts",
-    "bt_key_not_between_prune",
-    "bt_asof_snapshot",
-    "bt_read_rows_service",
-    "bt_value_pushdown_service",
-    "bt_read_rows_wire",
-    "bt_mutate_rows_wire",
-    "events_sessionize",
-    "asof_join_latest_event",
-    "events_moving_window_range",
-    "text_langid",
-    "sample_class_balanced",
-    "corpus_mixing_weights",
-    "text_token_counts",
-    "text_fingerprint",
-)
-# Later rounds override earlier ones; every name absent from all eighteen
-# tuples carries 0.
-_LAST_GREEN: dict[str, int] = {
-    **{n: 1 for n in _R1_GREEN},
-    **{n: 2 for n in _R2_GREEN},
-    **{n: 3 for n in _R3_GREEN},
-    **{n: 4 for n in _R4_GREEN},
-    **{n: 5 for n in _R5_GREEN},
-    **{n: 6 for n in _R6_GREEN},
-    **{n: 7 for n in _R7_GREEN},
-    **{n: 8 for n in _R8_GREEN},
-    **{n: 9 for n in _R9_GREEN},
-    **{n: 10 for n in _R10_GREEN},
-    **{n: 11 for n in _R11_GREEN},
-    **{n: 12 for n in _R12_GREEN},
-    **{n: 13 for n in _R13_GREEN},
-    **{n: 14 for n in _R14_GREEN},
-    **{n: 15 for n in _R15_GREEN},
-    **{n: 16 for n in _R16_GREEN},
-    **{n: 17 for n in _R17_GREEN},
-    **{n: 18 for n in _R18_GREEN},
-}
-
-# ---------------------------------------------------------------------------
-# Module-dependency resets (VERDICT r3 "what's wrong #3"): a query resets to
-# slot 0 when any module its implementation *imports* — directly, through a
-# queries.py helper it calls, or transitively through package-module imports
-# (e.g. operators.dedup → operators.graph) — changed this round.  The
-# dependency set is COMPUTED from the AST rather than hand-maintained, which
-# is exactly what went stale in round 3 (graph.py / bigtable_table.py changed
-# without their dependents resetting).  `_TOUCHED_MODULES` below is the only
-# hand-kept input: the dotted names of package modules whose implementation
-# changed in the CURRENT round, updated alongside every code change (verified
-# against `git diff` before each correctness fold — see tests/test_schedule.py
-# for the dependency-engine pins).
-# ---------------------------------------------------------------------------
-
-_PKG = __package__  # "datafusion_bigtable_spark"
-_PKG_DIR = Path(__file__).resolve().parent
+_ARTIFACT_DIR = Path(__file__).resolve().parent.parent
 
 
-def _module_path(dotted: str) -> Optional[Path]:
-    parts = dotted.split(".")
-    if parts[0] != _PKG:
-        return None
-    p = _PKG_DIR.joinpath(*parts[1:])
-    if p.with_suffix(".py").is_file():
-        return p.with_suffix(".py")
-    if (p / "__init__.py").is_file():
-        return p / "__init__.py"
-    return None
+def _last_green_rounds() -> dict[str, int]:
+    """name -> latest round whose committed driver artifact proved it green.
 
-
-def _imports_in(tree: _ast.AST, current_pkg: str) -> set[str]:
-    """Dotted package-module names imported anywhere under *tree*.
-
-    ``current_pkg`` anchors relative imports (the package containing the
-    module being parsed).  ``from pkg.sources import datasource`` credits the
-    *module* ``pkg.sources.datasource``; ``from pkg.plans.composer import
-    compose`` credits ``pkg.plans.composer``.
+    An artifact that does not parse, or whose name carries no integer round,
+    contributes nothing: scheduling errs toward re-verifying, never crashes.
     """
-    out: set[str] = set()
-
-    def _add(dotted: str, names: tuple[str, ...] = ()) -> None:
-        hit = False
-        for n in names:
-            cand = f"{dotted}.{n}"
-            if _module_path(cand) is not None:
-                out.add(cand)
-                hit = True
-        if not hit and dotted != _PKG and _module_path(dotted) is not None:
-            out.add(dotted)
-
-    for node in _ast.walk(tree):
-        if isinstance(node, _ast.Import):
-            for a in node.names:
-                if a.name.split(".")[0] == _PKG:
-                    _add(a.name)
-        elif isinstance(node, _ast.ImportFrom):
-            if node.level:
-                base = current_pkg.split(".")
-                if node.level > 1:
-                    base = base[: len(base) - (node.level - 1)]
-                mod = ".".join(base + (node.module.split(".") if node.module else []))
-            else:
-                mod = node.module or ""
-            if mod.split(".")[0] == _PKG:
-                _add(mod, tuple(a.name for a in node.names))
-    return out
-
-
-@functools.lru_cache(maxsize=None)
-def _module_direct_imports(dotted: str) -> frozenset[str]:
-    path = _module_path(dotted)
-    if path is None:
-        return frozenset()
-    pkg = dotted if path.name == "__init__.py" else dotted.rsplit(".", 1)[0]
-    return frozenset(_imports_in(_ast.parse(path.read_text()), pkg))
-
-
-def _module_closure(roots: set[str]) -> frozenset[str]:
-    """Roots plus everything they transitively import (cycle-safe)."""
-    seen: set[str] = set()
-    stack = list(roots)
-    while stack:
-        m = stack.pop()
-        if m in seen:
-            continue
-        seen.add(m)
-        stack.extend(_module_direct_imports(m))
-    return frozenset(seen)
-
-
-def _callable_direct_deps(fn, seen_fns: set) -> set[str]:
-    """Package modules referenced by *fn*: its own import statements plus,
-    recursively, those of same-file helpers it calls (``load``,
-    ``_bt_events_store``, …), resolved through ``fn.__globals__``."""
-    try:
-        tree = _ast.parse(textwrap.dedent(inspect.getsource(fn)))
-    except (OSError, SyntaxError, TypeError):
-        return set()
-    deps = _imports_in(tree, _PKG)
-    g = getattr(fn, "__globals__", {})
-    for node in _ast.walk(tree):
-        if not isinstance(node, _ast.Name):
-            continue
-        obj = g.get(node.id)
-        if inspect.isfunction(obj) and obj.__module__ == __name__ and obj not in seen_fns:
-            seen_fns.add(obj)
-            deps |= _callable_direct_deps(obj, seen_fns)
-        elif inspect.ismodule(obj) and (obj.__name__ or "").split(".")[0] == _PKG:
-            deps.add(obj.__name__)
-    return deps
-
-
-@functools.lru_cache(maxsize=None)
-def query_deps(name: str) -> frozenset[str]:
-    """Every package module `name`'s implementation transitively depends on."""
-    fn = REGISTRY[name].fn
-    return _module_closure(_callable_direct_deps(fn, {fn}))
-
-
-# Round 17: package modules with BEHAVIOR-CHANGING edits since the r16 fold
-# (their dependents reset to 0) and query functions edited in this file over
-# the same span.  Policy (amended per ADVICE r5): purely ADDITIVE module
-# changes — a new function no existing query calls — do not reset
-# dependents; any edit to code an existing query executes does.  Verified
-# against `git diff` before the fold.  Window-capacity release valve
-# (VERDICT r12 #2): a justified non-reset must cite a committed
-# FULLGATE_r{N}.json artifact (tools/full_gate.py output) proving the
-# dependents green at sf0.01 — an uncommitted oracle-drive claim no longer
-# qualifies; tests/test_schedule.py pins this.
-_TOUCHED_MODULES: frozenset[str] = frozenset(
-    {
-        # Entries are added in the SAME commit as each behavior-changing
-        # module edit this round, so the set is truthful against
-        # `git diff <fold>..HEAD` at every commit.
-        # (r17 graph/retrieval edits folded at the r17 fold.  r18 is the
-        # first optimization round: per-module optimization edits are
-        # instead carried by _FULLGATE_PROVEN_MODULES below, re-proven by
-        # a round-close full gate over the whole registry — a
-        # _TOUCHED_MODULES reset of every optimized module's closure
-        # would flood the 50-slot window many times over.)
-    }
-)
-_TOUCHED_QUERIES: frozenset[str] = frozenset(
-    {
-        # (r17's dedup_semantic_prune rewrite proven green in
-        # CORRECTNESS_r17.json and folded.)
-    }
-)
-
-# ---------------------------------------------------------------------------
-# Full-gate evidence (VERDICT r12 #2: "a mechanism, not a judgment call").
-# tools/full_gate.py drives EVERY registered query against its DuckDB oracle
-# at sf0.01 and writes FULLGATE_r{N}.json at the repo root.  Two uses:
-#
-# 1. _FULLGATE_PROVEN_MODULES: a module with a behavior-changing edit whose
-#    dependent-reset would overflow the 50-slot driver window may be listed
-#    here (module -> artifact filename) INSTEAD of _TOUCHED_MODULES.
-#    tests/test_schedule.py enforces that the cited artifact is committed,
-#    postdates the last fold (so the evidence postdates the edit), and shows
-#    every dependent query green — the r11 exemption list and the r12
-#    similarity judgment call both retire into this checked contract.
-# 2. _schedule() breaks driver-green ties by full-gate recency: among
-#    queries the DRIVER last proved in the same round, one a committed full
-#    gate re-proved more recently is less urgent.  Driver greens still rank
-#    first; full-gate greens never substitute for them.
-# ---------------------------------------------------------------------------
-
-_FULLGATE_PROVEN_MODULES: dict[str, str] = {
-    # dotted module -> FULLGATE_r{N}.json filename proving all dependents
-    # green after the module's edit.
-    # (The r17 operators.similarity entry retired at the r17 fold:
-    # FULLGATE_r17.json no longer postdates the fold, and every
-    # similarity dependent now carries a driver green — the compact /
-    # maintain / PQ-hybrid cohort is in _R17_GREEN and the rest in
-    # earlier folds FULLGATE_r17 re-proved before the fold landed.)
-    #
-    # (The r18 entries — similarity/retrieval/graph/index_stream/
-    # postings_stream/dedup/shards/pipeline/cells_stream/stats, all citing
-    # FULLGATE_r18.json — retired at the r18 fold, exactly as the r17
-    # entry did: the artifact no longer postdates the fold, and the r18
-    # window plus earlier folds carry the dependents' driver greens.)
-    #
-    # r19 (second optimization round): modules below received
-    # result-preserving performance edits; their dependent closures
-    # overflow the 50-slot window, so the evidence is FULLGATE_r19.json —
-    # regenerated over the FULL registry (every query green vs its DuckDB
-    # oracle at sf0.01) after the round's last edit.
-    f"{_PKG}.operators.retrieval": "FULLGATE_r19.json",
-    f"{_PKG}.operators.similarity": "FULLGATE_r19.json",
-    f"{_PKG}.operators.dedup": "FULLGATE_r19.json",
-    f"{_PKG}.operators.stats": "FULLGATE_r19.json",
-    f"{_PKG}.operators.graph": "FULLGATE_r19.json",
-    f"{_PKG}.operators.partitioning": "FULLGATE_r19.json",
-    f"{_PKG}.streaming.index_stream": "FULLGATE_r19.json",
-    f"{_PKG}.streaming.postings_stream": "FULLGATE_r19.json",
-    f"{_PKG}.streaming.takedown_stream": "FULLGATE_r19.json",
-}
-
-
-def _fullgate_artifact_state() -> tuple:
-    """Cache key for _fullgate_records: the (name, mtime) of every artifact.
-
-    ADVICE r13: a process-lifetime lru_cache meant a FULLGATE_r{N}.json
-    written mid-session never reached _schedule()'s tiebreak until
-    interpreter restart; keying on the artifact set makes new/updated
-    artifacts take effect immediately while still caching the JSON parse.
-    """
-    out = []
-    for p in _PKG_DIR.parent.glob("FULLGATE_r*.json"):
-        try:
-            out.append((p.name, p.stat().st_mtime_ns))
-        except OSError:
-            # vanished between glob and stat (artifact rewrite, parallel
-            # test unlink) — scheduling must never crash on it (review
-            # r14 #4, same invariant as the parse loop below)
-            continue
-    return tuple(sorted(out))
-
-
-@functools.lru_cache(maxsize=8)
-def _fullgate_records_for(state: tuple) -> dict[str, int]:
     out: dict[str, int] = {}
-    for art in sorted(_PKG_DIR.parent.glob("FULLGATE_r*.json")):
-        try:
-            payload = json.loads(art.read_text())
-            rnd = int(payload["round"])
-            for name, status in payload.get("results", {}).items():
-                if status == "green":
-                    out[name] = max(out.get(name, 0), rnd)
-        except (ValueError, KeyError, OSError, TypeError, AttributeError):
-            # malformed artifact (bad JSON, wrong top-level shape, null
-            # round): contributes no evidence — never crashes scheduling
+    for art in _ARTIFACT_DIR.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r([0-9]+)\.json", art.name)
+        if m is None:
             continue
+        try:
+            greens = [
+                name
+                for name, r in json.loads(art.read_text()).items()
+                if all(r.get(k) is True for k in ("rows_match", "schema_match", "hash_match"))
+                and r.get("err") is None
+            ]
+        except (ValueError, OSError, AttributeError):
+            continue
+        for name in greens:
+            out[name] = max(out.get(name, 0), int(m.group(1)))
     return out
-
-
-def _fullgate_records() -> dict[str, int]:
-    """name -> most recent round a committed full-gate artifact proved it
-    fully green (oracle compare, not rows-only)."""
-    return _fullgate_records_for(_fullgate_artifact_state())
-
-
-def _fullgate_green(name: str) -> int:
-    return _fullgate_records().get(name, 0)
-
-# Surgical false-positive exemptions from the module-closure reset.
-# Round-scoped: every entry must be re-justified (or deleted) at each
-# fold, and tests/test_schedule.py fails loud if an entry stops being
-# module-reset (stale exemption) or has no prior driver-green to fall
-# back on.  r12: the ten r11 entries (5 streaming-agg + 5 cells-path bt_*)
-# are DELETED — their justification was r11 window overflow (51 and 56
-# zero-greens vs 50 slots); after the r11 fold the r12 zero-green set fits
-# the window with room, so every one of those queries re-verifies
-# normally whenever its module closure is touched again.
-_RESET_EXEMPT_QUERIES: frozenset[str] = frozenset()
-
-
-def _last_green(name: str) -> int:
-    if name in _TOUCHED_QUERIES:
-        return 0
-    if name in _RESET_EXEMPT_QUERIES and name in _LAST_GREEN:
-        return _LAST_GREEN[name]
-    if _TOUCHED_MODULES and (query_deps(name) & _TOUCHED_MODULES):
-        return 0
-    return _LAST_GREEN.get(name, 0)
 
 
 def _schedule() -> list[str]:
-    ordered = list(REGISTRY)
-    # Driver greens rank first; committed full-gate greens break ties (a
-    # query a full gate re-proved recently yields its slot to one nothing
-    # re-proved); registry order last for determinism.
-    return sorted(
-        ordered, key=lambda n: (_last_green(n), _fullgate_green(n), ordered.index(n))
-    )
+    last = _last_green_rounds()
+    return sorted(REGISTRY, key=lambda n: last.get(n, 0))
 
 
 def names() -> list[str]:
@@ -8400,7 +7256,6 @@ def _sweep_stale_store_versions(base: str) -> None:
     touched."""
     import glob
     import os
-    import re
     import shutil
 
     prefix = base.rsplit("_", 1)[0]

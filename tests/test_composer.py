@@ -131,6 +131,46 @@ def test_from_datasource_filters_reassembles_between():
     assert Between("event_minute", "a", "b") in preds
 
 
+@pytest.mark.parametrize("reverse", [False, True])
+def test_from_datasource_filters_keeps_tightest_tail_bounds(reverse):
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThan,
+        GreaterThanOrEqual,
+        LessThan,
+        LessThanOrEqual,
+    )
+
+    m = "2021-03-05-"
+    filters = [
+        EqualTo(("region",), "us-west2"),
+        EqualTo(("balloon_id",), "3698"),
+        GreaterThanOrEqual(("event_minute",), m + "1200"),
+        GreaterThanOrEqual(("event_minute",), m + "1000"),
+        LessThanOrEqual(("event_minute",), m + "1300"),
+        LessThanOrEqual(("event_minute",), m + "1400"),
+    ]
+    preds = from_datasource_filters(filters[::-1] if reverse else filters, COMPOSITE)
+    assert Between("event_minute", m + "1200", m + "1300") in preds
+    assert compose(preds, COMPOSITE) == [
+        KeyRange("us-west2#3698#" + m + "1200", "us-west2#3698#" + m + "1300")
+    ]
+
+    # Int keys: strict bounds tighten to inclusive ones before the comparison.
+    from datafusion_bigtable_spark.plans.keycodec import encode_int_key
+
+    int_filters = [
+        GreaterThanOrEqual(("id",), -5),
+        GreaterThan(("id",), 7),
+        LessThan(("id",), 100),
+        LessThanOrEqual(("id",), 120),
+    ]
+    preds = from_datasource_filters(
+        int_filters[::-1] if reverse else int_filters, ("id",), key_types=("int64",)
+    )
+    assert preds == [Between("id", encode_int_key(8), encode_int_key(99))]
+
+
 def test_overlapping_ranges_merge():
     # A point value inside a BETWEEN must not yield two overlapping scan
     # partitions (would duplicate rows at the data source).

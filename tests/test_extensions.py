@@ -1012,6 +1012,20 @@ def test_exact_percentiles_multi_one_pass(spark, sf_dir):
         assert g == want, (p, g, want)
 
 
+def test_order_statistics_with_no_ranks_are_empty(spark):
+    from datafusion_bigtable_spark.operators.stats import (
+        exact_percentiles,
+        order_statistics_df,
+    )
+
+    df = spark.createDataFrame([(3.0,), (1.0,), (None,)], "x double")
+    empty = order_statistics_df(df, "x", [])
+    assert empty.columns == ["_rk", "_v"]
+    assert empty.dtypes == order_statistics_df(df, "x", [1]).dtypes
+    assert empty.collect() == []
+    assert exact_percentiles(df, "x", []) == []
+
+
 def test_grouped_exact_percentiles_matches_spark(spark, sf_dir):
     """Per-group order-statistic quantiles must be bit-identical to
     Spark's grouped percentile/median aggregates (the buffer-everything

@@ -1,304 +1,184 @@
 """Pins for the driver-window verification schedule (queries.py::_schedule).
 
 The correctness driver checks only the first 50 entries of queries()
-iteration order, so the schedule IS the verification rotation.  Round 3's
-judge found the reset policy was applied by query-function diff only —
-module changes (operators/graph.py, sources/bigtable_table.py) did not
-reset their dependents.  Round 4 computes dependencies from the AST
-(queries.py::query_deps); these tests pin that engine against known ground
-truth so a silent under-attribution can't reopen the gap.
+iteration order, so the schedule IS the verification rotation.  It is
+derived at call time from the committed CORRECTNESS_r{N}.json artifacts
+(queries.py::_last_green_rounds): these tests pin the green rule, the
+order on a frozen copy of r01..r19, and that a new artifact rotates the
+window with no edit to queries.py.  Snapshot tests point
+``_ARTIFACT_DIR`` at a tmp copy so a future artifact never needs an edit
+here.
 """
+
+import json
+import shutil
+from collections import Counter
+from pathlib import Path
 
 import pytest
 
 from datafusion_bigtable_spark import queries as q
 
-PKG = "datafusion_bigtable_spark"
+REPO = Path(q.__file__).resolve().parents[1]
+
+# names()[:50] on CORRECTNESS_r01..r19: the 34 queries last green in r16,
+# then the first 16 last green in r17, each tier in registry order.
+R19_WINDOW = [
+    "bt_value_filter_pushdown",
+    "bt_value_regex_pushdown",
+    "bt_int_key_prune",
+    "bt_wire_sharded_scan",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_substring_spans",
+    "dedup_minhash_lsh",
+    "dedup_minhash_estimate",
+    "dedup_lsh_quality",
+    "dedup_prefix_filter",
+    "dedup_sampled_rate",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "dedup_embedding_cosine_ivf",
+    "dedup_embedding_cosine_ivf2",
+    "text_ngram_perplexity",
+    "text_word_perplexity",
+    "sim_topk_pq_adc",
+    "sim_topk_ivfpq",
+    "text_curation_sql",
+    "corpus_mixing_alpha",
+    "text_heavy_hitters",
+    "corpus_zipf_slope",
+    "embedding_random_projection",
+    "sim_topk_projected",
+    "multimodal_ahash_dedup",
+    "embedding_cluster_outliers",
+    "sim_topk_filtered",
+    "corpus_pack_utilization",
+    "table_profile_lineitem",
+    "sim_index_delete",
+    "sim_topk_ivfpq_saved",
+    "tpch_q1_pricing_summary",
+    "tpch_q3_shipping_priority",
+    "agg_distinct_stats",
+    "rollup_lineitem_qty",
+    "cube_orders_revenue",
+    "window_topk_per_group",
+    "window_running_sum",
+    "window_lag_delta",
+    "topk_orders_global",
+    "set_ops_nation_overlap",
+    "set_ops_nation_except",
+    "corpus_leakage_safe_split",
+    "dedup_connected_components",
+    "dedup_semantic_prune",
+    "dedup_keep_canonical",
+    "streaming_curation_filter",
+]
 
 
-def _m(short: str) -> str:
-    return f"{PKG}.{short}"
+def _green(record: dict) -> bool:
+    return (
+        record.get("rows_match") is True
+        and record.get("schema_match") is True
+        and record.get("hash_match") is True
+        and record.get("err") is None
+    )
+
+
+@pytest.fixture
+def r19_artifacts(tmp_path, monkeypatch):
+    """A frozen copy of CORRECTNESS_r01..r19 as the schedule's only input."""
+    for n in range(1, 20):
+        name = f"CORRECTNESS_r{n:02d}.json"
+        shutil.copy(REPO / name, tmp_path / name)
+    monkeypatch.setattr(q, "_ARTIFACT_DIR", tmp_path)
+    return tmp_path
 
 
 def test_registry_size_and_full_green_fold():
-    # After each round's fold every prior-era query carries a driver-green
-    # round; queries with no record yet (this round's additions) must sit
-    # in the window.  105 = 94 r4-era + 7 r5 additions
-    # (interval_join_order_events, streaming_dedup_pairs,
-    # streaming_enriched_counts, decontaminate_vs_benchmark,
-    # text_chunk_documents, corpus_pack_sequences, streaming_attribution_join)
-    # + 13 r6 additions (text_repetition_signals, text_tfidf_top_terms,
-    # scd2_user_segments, corpus_shard_assign, text_pii_redaction,
-    # embedding_normalize_trunc, fk_orphan_audit, numeric_histogram_prices,
-    # zorder_bucket_counts, winsorize_prices, multimodal_png_decode,
-    # multimodal_jpeg_decode, multimodal_audio_spectral)
-    # + 7 r7 additions (sim_trained_codebook_recall,
-    # bt_value_pushdown_service, text_boilerplate_ngrams,
-    # embedding_cluster_outliers, bt_read_rows_wire, bt_wire_sharded_scan,
-    # dedup_substring_spans)
-    # + 6 r8 additions (dedup_embedding_cosine_ivf,
-    # exact_quantiles_distributed, grouped_exact_quantiles,
-    # dedup_semantic_prune, text_ngram_perplexity, text_bpe_tokenize)
-    # + 6 r10 additions (text_word_perplexity, embedding_random_projection,
-    # sim_topk_projected, corpus_mixing_alpha, dedup_embedding_cosine_ivf2,
-    # streaming_curation_filter)
-    # + 21 r11 additions (text_line_dedup, sim_topk_filtered,
-    # corpus_pack_utilization, dedup_keep_best_quality,
-    # dedup_incremental_ingest, table_profile_lineitem,
-    # streaming_ingest_dedup, events_asof_last_order, dedup_containment,
-    # text_heavy_hitters, corpus_zipf_slope, events_asof_view_tolerance,
-    # multimodal_ahash_dedup, decontaminate_bloom, dedup_minhash_estimate,
-    # dedup_sampled_rate, dedup_lsh_quality, ingest_jsonl_documents, text_curation_sql, dedup_prefix_filter, corpus_leakage_safe_split)
-    # + r12 additions (bt_mutate_rows_wire, sim_index_upsert,
-    # pipeline_embedding_store, sim_search_after_upsert)
-    # + r13 additions (sim_index_drift, sim_index_retrain,
-    # bucketed_join_mktsegment, streaming_index_upsert,
-    # bucketed_agg_order_stats)
-    # + 3 r14 additions (retrieval_sparse_topk, shards_compact_roundtrip,
-    # sorted_shards_range_layout)
-    # + 7 r15 additions (sorted_shards_range_prune, retrieval_saved_topk,
-    # retrieval_bm25_topk, retrieval_hybrid_rrf, retrieval_hybrid_rrf_ivf,
-    # retrieval_index_upsert, streaming_postings_upsert)
-    # + 7 r16 additions (retrieval_postings_compact,
-    # retrieval_postings_delete, sim_index_delete, sim_topk_ivfpq_saved,
-    # retrieval_hybrid_saved, streaming_postings_delete,
-    # streaming_ivf_delete).
+    # 184 = the registry this round: no query family is added.  Queries no
+    # committed artifact has proved green carry 0 and sit in the window.
     assert len(q.REGISTRY) == 184
     sched = q._schedule()
-    for name in (n for n in q.REGISTRY if n not in q._LAST_GREEN):
-        assert sched.index(name) < 50, f"new query {name} outside driver window"
+    last = q._last_green_rounds()
+    for name in (n for n in q.REGISTRY if n not in last):
+        assert sched.index(name) < 50, f"never-green query {name} outside driver window"
 
 
 def test_window_contains_all_stale_and_touched():
-    """Every query that most needs verification sorts into the 50-slot window."""
+    """The 50-slot window holds the stalest queries: nothing outside it was
+    last proved green before anything inside it."""
     sched = q._schedule()
-    window = set(sched[:50])
-    greens = {n: q._last_green(n) for n in q.REGISTRY}
-    # Anything reset (0) or 2+ rounds stale must be inside the window...
-    must_verify = {n for n, g in greens.items() if g <= 2}
-    overflow = must_verify - window
-    # ...unless there are more such queries than slots; then the overflow
-    # must consist only of the *least* risky tier (stalest-but-untouched is
-    # never allowed to be displaced by a fresher green).
-    if len(must_verify) <= 50:
-        assert overflow == set(), f"stale/touched queries outside window: {overflow}"
-    else:
-        assert all(greens[n] > 0 for n in overflow), (
-            f"touched (green=0) queries displaced from window: "
-            f"{[n for n in overflow if greens[n] == 0]}"
-        )
-
-
-def test_reset_exemptions_are_live_and_safe():
-    """Every _RESET_EXEMPT_QUERIES entry must (a) actually be suppressing a
-    module-closure reset right now — otherwise the exemption is stale and
-    must be deleted at the fold — and (b) have a prior driver-green to fall
-    back on (an exemption may only defer re-verification of a known-green
-    query, never hide a never-verified one)."""
-    for name in q._RESET_EXEMPT_QUERIES:
-        assert name in q.REGISTRY, f"exempt query {name} not in registry"
-        assert q.query_deps(name) & q._TOUCHED_MODULES, (
-            f"stale exemption: {name} is no longer reset by any touched module"
-        )
-        assert name in q._LAST_GREEN, f"exemption hides never-green query {name}"
-        assert name not in q._TOUCHED_QUERIES, (
-            f"{name} is explicitly touched — exemption must not override that"
-        )
+    last = q._last_green_rounds()
+    inside = [last.get(n, 0) for n in sched[:50]]
+    outside = [last.get(n, 0) for n in sched[50:]]
+    assert max(inside) <= min(outside)
 
 
 def test_touched_query_outranks_stale_green():
-    # Reset-to-0 sorts strictly before every non-zero green.
+    # Oldest green first; the sort is stable, so ties keep registry order.
     sched = q._schedule()
-    greens = [q._last_green(n) for n in sched]
-    assert greens == sorted(greens)
+    last = q._last_green_rounds()
+    assert sched == sorted(q.REGISTRY, key=lambda n: last.get(n, 0))
 
 
-@pytest.mark.parametrize(
-    "name,expected_subset",
-    [
-        # The exact dependency the r3 judge caught going unreset:
-        ("dedup_connected_components", {_m("operators.graph"), _m("operators.dedup")}),
-        # Transport chain: service + wire + table assembly + key codec.
-        (
-            "bt_read_rows_service",
-            {
-                _m("sources.grpc_transport"),
-                _m("sources.fake_bigtable"),
-                _m("sources.bigtable_table"),
-                _m("plans.keycodec"),
-            },
-        ),
-        # Helper-mediated deps (_bt_events_store builds a cells store).
-        ("bt_limit_pushdown", {_m("sources.datasource"), _m("sources.cells")}),
-        ("streaming_stateful_user_totals", {_m("streaming.cells_stream")}),
-        ("multimodal_features", {_m("functions.multimodal"), _m("functions.media_codecs")}),
-        ("pipeline_curated_corpus", {_m("operators.dedup"), _m("operators.graph"), _m("functions.text")}),
-        ("sim_topk_ivfpq", {_m("operators.similarity")}),
-        ("deterministic_hash_sample", {_m("operators.sampling")}),
-        ("skew_salted_aggregation", {_m("operators.skew")}),
-    ],
-)
-def test_query_deps_ground_truth(name, expected_subset):
-    deps = q.query_deps(name)
-    assert expected_subset <= deps, f"{name}: missing {expected_subset - deps}"
-
-
-def test_pure_dataframe_queries_have_no_package_deps():
-    # TPC-H queries run on stock Spark SQL — a nonempty dep set would mean
-    # the AST engine is over-attributing (false resets shrink the window).
-    for name in ("tpch_q1_pricing_summary", "tpch_q6_revenue_change", "union_all_entities"):
-        assert q.query_deps(name) == frozenset(), name
-
-
-def test_module_touch_resets_dependents(monkeypatch):
-    monkeypatch.setattr(q, "_TOUCHED_MODULES", frozenset({_m("operators.graph")}))
-    q.query_deps.cache_clear()
-    try:
-        assert q._last_green("dedup_connected_components") == 0
-        assert q._last_green("dedup_keep_canonical") == 0  # CC under the hood
-        assert q._last_green("dedup_exact") != 0  # no graph dependency
-        sched = q._schedule()
-        assert sched.index("dedup_connected_components") < 50
-    finally:
-        q.query_deps.cache_clear()
-
-
-def test_every_correctness_artifact_is_folded():
-    """r9 skipped the fold and the driver window froze (VERDICT r9 #1).
-
-    Pin: for EVERY committed CORRECTNESS_r{N}.json, an ``_R{N}_GREEN``
-    tuple must exist in queries.py and every fully-green query in the
-    artifact must carry ``_LAST_GREEN[name] >= N`` (a later round may
-    override upward; a touched-this-round reset happens in
-    ``_last_green()``, not in the dict).  Forgetting the fold for a new
-    round now fails here instead of silently repeating the window.
-    """
-    import json
-    from pathlib import Path
-
-    repo = Path(q.__file__).resolve().parents[1]
-    artifacts = sorted(repo.glob("CORRECTNESS_r*.json"))
+def test_every_correctness_artifact_is_folded(monkeypatch, tmp_path):
+    """Every committed CORRECTNESS_r{N}.json reaches the schedule with no
+    hand edit: each name it records green carries a last-green round >= N
+    (a later artifact may raise it)."""
+    artifacts = sorted(REPO.glob("CORRECTNESS_r*.json"))
     assert artifacts, "no correctness artifacts found next to the package"
+    last = q._last_green_rounds()
     for art in artifacts:
         n = int(art.stem.split("_r")[1])
-        tup = getattr(q, f"_R{n}_GREEN", None)
-        assert tup is not None, f"{art.name} not folded: no _R{n}_GREEN tuple"
-        rec = json.loads(art.read_text())
-        greens = {
-            name
-            for name, r in rec.items()
-            # hash_match is part of green: r10's corpus_mixing_alpha matched
-            # rows+schema but hash-failed (HUGEINT→float64 in the driver's
-            # pandas path) and must NOT be folded as green.
-            if r.get("rows_match") and r.get("schema_match") and r.get("hash_match", True)
-        }
-        missing = {
-            name
-            for name in greens
-            if name in q.REGISTRY and q._LAST_GREEN.get(name, 0) < n
-        }
-        assert missing == set(), f"{art.name} greens unfolded: {sorted(missing)}"
+        greens = {name for name, r in json.loads(art.read_text()).items() if _green(r)}
+        missing = {name for name in greens if last.get(name, 0) < n}
+        assert missing == set(), f"{art.name} greens not derived: {sorted(missing)}"
+
+    # hash_match is part of green: r10's corpus_mixing_alpha matched rows and
+    # schema but failed the hash (HUGEINT -> float64 in the driver's pandas
+    # path), so r10 alone must not prove it.
+    rec = json.loads((REPO / "CORRECTNESS_r10.json").read_text())["corpus_mixing_alpha"]
+    assert rec["rows_match"] and rec["schema_match"] and not rec["hash_match"]
+    shutil.copy(REPO / "CORRECTNESS_r10.json", tmp_path / "CORRECTNESS_r10.json")
+    monkeypatch.setattr(q, "_ARTIFACT_DIR", tmp_path)
+    only_r10 = q._last_green_rounds()
+    assert "corpus_mixing_alpha" not in only_r10
+    assert only_r10, "r10 greens not derived"
 
 
-def test_touched_queries_lead_current_window():
-    # Explicitly-touched queries (green=0 by fiat) must sit inside the
-    # 50-slot driver window — they are the round's highest-risk entries.
-    sched = q._schedule()
-    for name in q._TOUCHED_QUERIES:
-        assert sched.index(name) < 50, f"touched query {name} outside window"
+def test_schedule_snapshot_on_r01_to_r19(r19_artifacts):
+    last = q._last_green_rounds()
+    assert Counter(last.get(n, 0) for n in q.REGISTRY) == {16: 34, 17: 50, 18: 50, 19: 50}
+    assert q.names()[:50] == R19_WINDOW
+    assert list(q.queries()) == q.names()
+    assert list(q.oracle_sql()) == [n for n in q.names() if q.REGISTRY[n].sql is not None]
 
 
-def test_fullgate_proven_modules_cite_committed_evidence():
-    """VERDICT r12 #2: a window-overflow non-reset is only legal when backed
-    by a committed FULLGATE artifact, not an uncommitted claim.  For every
-    entry in _FULLGATE_PROVEN_MODULES: (a) the key is a real package module
-    and not ALSO in _TOUCHED_MODULES (pick one posture), (b) the cited
-    artifact exists at the repo root AND is git-committed, (c) its round
-    postdates the last _R{N}_GREEN fold — evidence generated before the fold
-    cannot cover an edit made after it, and (d) every registry query whose
-    dependency closure includes the module is fully green in it."""
-    import json
-    import re
-    import subprocess
-    from pathlib import Path
+def test_new_artifact_rotates_window_and_bad_artifacts_are_ignored(r19_artifacts):
+    before = q.names()
+    everything_green = {
+        n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+        for n in q.REGISTRY
+    }
+    # None of these may move the schedule.
+    (r19_artifacts / "CORRECTNESS_r21.json").write_text("{not json")
+    (r19_artifacts / "CORRECTNESS_r22.json").write_text(json.dumps(list(q.REGISTRY)))
+    (r19_artifacts / "CORRECTNESS_r23.json").write_text(json.dumps({"dedup_exact": None}))
+    (r19_artifacts / "CORRECTNESS_rlatest.json").write_text(json.dumps(everything_green))
+    (r19_artifacts / "CORRECTNESS_r24_rerun.json").write_text(json.dumps(everything_green))
+    failed = {n: dict(r, err="boom") for n, r in everything_green.items()}
+    (r19_artifacts / "CORRECTNESS_r25.json").write_text(json.dumps(failed))
+    assert q.names() == before
 
-    repo = Path(q.__file__).resolve().parents[1]
-    last_fold = max(
-        int(m.group(1)) for name in dir(q) if (m := re.fullmatch(r"_R(\d+)_GREEN", name))
-    )
-    committed = set(
-        subprocess.run(
-            ["git", "ls-files"], cwd=repo, capture_output=True, text=True, check=True
-        ).stdout.splitlines()
-    )
-    assert "tools/full_gate.py" in committed, "full-gate tool must be committed"
-    for module, artifact in q._FULLGATE_PROVEN_MODULES.items():
-        assert q._module_path(module) is not None, f"unknown module {module}"
-        assert module not in q._TOUCHED_MODULES, (
-            f"{module} both touched and fullgate-proven — contradictory"
-        )
-        path = repo / artifact
-        assert path.is_file(), f"{artifact} cited but absent"
-        assert artifact in committed, f"{artifact} cited but not committed"
-        payload = json.loads(path.read_text())
-        assert payload["round"] > last_fold, (
-            f"{artifact} (round {payload['round']}) predates the r{last_fold} "
-            f"fold — stale evidence for {module}"
-        )
-        dependents = {n for n in q.REGISTRY if module in q.query_deps(n)}
-        assert dependents, f"{module} has no dependents — listing it is pointless"
-        # Dependents already guaranteed a driver-window slot (new queries,
-        # _TOUCHED_QUERIES, other-module resets — all zero driver-green)
-        # need no artifact substitute: the valve only covers dependents
-        # that would otherwise go unreverified.
-        not_green = {
-            n
-            for n in dependents
-            if q._last_green(n) > 0 and payload["results"].get(n) != "green"
-        }
-        assert not_green == set(), (
-            f"{artifact} does not prove {module}'s dependents green: "
-            f"{sorted(not_green)}"
-        )
-
-
-def test_fullgate_tiebreak_never_outranks_driver_green(monkeypatch):
-    # A full-gate green is a SECONDARY key: zero-driver-green queries sort
-    # before every driver-green query regardless of full-gate recency.
-    monkeypatch.setattr(q, "_fullgate_records", lambda: {"dedup_exact": 99})
-    sched = q._schedule()
-    greens = [q._last_green(n) for n in sched]
-    assert greens == sorted(greens)
-
-
-def test_transitive_module_imports_followed():
-    # operators.dedup imports operators.graph only indirectly through the
-    # keep-canonical path; closure must include it for CC-based queries even
-    # if the query only imports dedup.
-    closure = q._module_closure({_m("operators.dedup")})
-    assert _m("operators.dedup") in closure
-
-
-def test_fullgate_records_refresh_when_an_artifact_lands_mid_session():
-    """ADVICE r13: the process-lifetime lru_cache meant a FULLGATE artifact
-    written during a long-lived session never reached _schedule()'s
-    tiebreak until interpreter restart.  The cache now keys on the
-    (name, mtime) set of matching artifacts, so a new artifact takes
-    effect on the next call — and its removal does too."""
-    import json
-    from pathlib import Path
-
-    repo = Path(q.__file__).resolve().parents[1]
-    art = repo / "FULLGATE_r9998.json"
-    assert not art.exists()
-    before = q._fullgate_records().get("dedup_exact", 0)
-    assert before < 9998
-    try:
-        art.write_text(json.dumps({"round": 9998, "results": {"dedup_exact": "green"}}))
-        assert q._fullgate_records()["dedup_exact"] == 9998
-    finally:
-        art.unlink()
-    assert q._fullgate_records().get("dedup_exact", 0) == before
+    # The driver checks this round's window and all of it comes back green:
+    # the next round's window is the next 50 names, no queries.py edit.
+    r20 = {n: everything_green[n] for n in before[:50]}
+    (r19_artifacts / "CORRECTNESS_r20.json").write_text(json.dumps(r20))
+    after = q.names()
+    assert after[:50] == before[50:100]
+    assert set(after[-50:]) == set(before[:50])
 
 
 def test_content_tag_format_is_frozen(tmp_path):

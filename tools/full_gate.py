@@ -3,18 +3,10 @@ DuckDB oracle at sf0.01 — rows + schema-kind + order-insensitive value
 compare, the same discipline as tests/oracle_harness.compare and the driver's
 50-slot window, but over ALL queries.
 
-The committed output (``FULLGATE_r{N}.json`` at the repo root) is a dated
-verification record the schedule in queries.py consumes two ways:
-
-1. A module with a behavior-changing edit whose dependents would overflow
-   the 50-slot driver window may be recorded in
-   ``queries._FULLGATE_PROVEN_MODULES`` citing the artifact instead of being
-   added to ``_TOUCHED_MODULES`` — tests/test_schedule.py verifies the cited
-   artifact is committed, postdates the last fold, and shows every dependent
-   green.  This replaces the r11/r12 judgment-call exemptions with evidence.
-2. ``_schedule()`` breaks driver-green ties by full-gate recency, so a
-   query a committed full gate re-proved recently yields its window slot to
-   one nothing re-proved.
+The committed output (``FULLGATE_r{N}.json`` at the repo root) is
+round-close evidence: each registered query's status on the final tree.  The
+verification schedule in queries.py does not read it: the driver window is
+derived from the driver's own ``CORRECTNESS_r{N}.json`` artifacts alone.
 
 Usage (run from anywhere; ~4 min on local[32] at sf0.01):
 
