@@ -28,6 +28,7 @@ is stock Spark SQL, exactly as the reference delegates to DataFusion
 (reference ``README.md:53``).
 """
 
+from datafusion_bigtable_spark import _zipimport
 from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
 from datafusion_bigtable_spark.plans.composer import (
     Between,
@@ -58,3 +59,8 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+# Every Spark Python worker that unpickles package code (data source,
+# writer, operator UDFs) imports this package first; from then on its
+# per-task import-cache invalidation skips unchanged zip archives.
+_zipimport.install()

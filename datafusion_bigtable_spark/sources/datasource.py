@@ -172,11 +172,15 @@ class FilePartition(InputPartition):
     plus 4 MiB (``spark.sql.files.openCostInBytes``), a partition closes
     before it would exceed 128 MiB (``spark.sql.files.maxPartitionBytes``),
     and a group is never split (see ``_pack_groups``).  A small store
-    therefore scans as one task: every Python task pays a fixed start-up
-    cost (see README, "Scale posture") that dwarfs the work of a few-MB
-    group.  The cap was measured on full scans of 3.3 MB, 39 MiB and
-    95 MiB stores at local[2] and local[4] (ROADMAP, "Full-scan packing
-    cap"): packed scans beat one task per file on all of them."""
+    therefore scans as one task on one core.  The cap was measured on
+    full scans of 3.3 MB, 39 MiB and 95 MiB stores at local[2] and
+    local[4] (ROADMAP, "Full-scan packing cap"), when every Python task
+    still paid a ~0.2 s import-cache floor: packed scans beat one task
+    per file on all of them.  The package's zipimport guard
+    (``_zipimport``; README, "Scale posture") has since cut a trivial
+    task to ~30 ms of wall at local[2], so the win of packing over a
+    per-core split of a few-MB store is no longer settled; the packing
+    is unchanged until that split is re-measured (ROADMAP)."""
 
     groups: tuple
     ts_lo: object = None
@@ -614,11 +618,10 @@ class BigtableReader(DataSourceReader):
                     parts.append(
                         RangePartition(r.start, r.end, tuple(files), ts_lo, ts_hi, value_preds, rows_cap)
                     )
-            # every range pruned to zero files → still need ≥1 partition so
-            # the scan yields an empty result with the right schema
-            return parts or [
-                RangePartition(ranges[0].start, ranges[0].end, (self._files()[0],), ts_lo, ts_hi, value_preds, rows_cap)
-            ]
+            # every range pruned to zero files, or an empty store → one
+            # partition that scans nothing, so the scan yields one empty
+            # batch with the declared schema
+            return parts or [FilePartition(())]
         if not self.config.allow_full_scan:
             raise ComposerError("table_partition_cols: filter is not provided or not supported")
         stats = self._file_stats()
@@ -628,7 +631,7 @@ class BigtableReader(DataSourceReader):
         return [
             FilePartition(tuple(tuple(g) for g in part), ts_lo, ts_hi, value_preds, rows_cap)
             for part in _pack_groups(_key_disjoint_groups(stats), sizes)
-        ]
+        ] or [FilePartition(())]  # empty store: as for ranges above
 
     def _wire_partitions(self, ranges, ts_lo, ts_hi, value_preds, rows_cap):
         """Shard the composed ranges (or the full key space) at
@@ -1162,7 +1165,7 @@ def _decode_utf8(raw):
 
 @dataclass
 class _CellsWriteCommit(WriterCommitMessage):
-    staged: str  # task-local staged parquet file
+    staged: str | None  # task-local staged parquet file; None: the task had no cells
 
 
 @dataclass
@@ -1245,7 +1248,9 @@ class BigtableWriter(DataSourceWriter):
             )
             return _WireWriteCommit(applied)
         if not cells:
-            return None
+            # an empty task still answers with a message (Spark rejects
+            # None); it carries no file and commit skips it
+            return _CellsWriteCommit(None)
         cells.sort(key=lambda c: (c[0], c[2], c[3]))
         os.makedirs(self.staging, exist_ok=True)
         out = os.path.join(self.staging, f"task-{uuid.uuid4().hex[:12]}.parquet")
@@ -1277,7 +1282,7 @@ class BigtableWriter(DataSourceWriter):
             for f in glob.glob(os.path.join(store, "*.parquet")):
                 os.remove(f)
         for i, m in enumerate(messages):
-            if m is None:
+            if m.staged is None:
                 continue
             dest = os.path.join(store, f"part-{i:05d}-{self.job_id}.parquet")
             shutil.move(m.staged, dest)
@@ -1385,7 +1390,7 @@ class BigtableStreamWriter(DataSourceStreamWriter):
         for stale in glob.glob(os.path.join(store, f"stream-b{batchId:08d}-*.parquet")):
             os.remove(stale)
         for i, m in enumerate(messages):
-            if m is None:
+            if m.staged is None:
                 continue
             dest = os.path.join(store, f"stream-b{batchId:08d}-{i:05d}.parquet")
             shutil.move(m.staged, dest)

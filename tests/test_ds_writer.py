@@ -101,6 +101,44 @@ def test_null_values_write_no_cell(registered, cells_path, tmp_path):
     assert row.pressure is None and row.temperature == "9.6"
 
 
+def test_append_with_empty_task_partitions(registered, cells_path, tmp_path):
+    """A task whose partition holds no rows still answers with a commit
+    message (Spark rejects None), and commit skips it: one row spread over
+    two tasks appends one file.  (A DataFrame with no rows at all is
+    appended by ``test_empty_store_reads_return_no_rows``.)"""
+    src = _read(registered, cells_path).filter("event_minute = '2021-03-05-1200'")
+    dest = str(tmp_path / "sparse_store")
+    _opts(src.repartition(2).write.format("bigtable"), dest).mode("append").save()
+    assert [tuple(r) for r in _read(registered, dest).collect()] == [tuple(r) for r in src.collect()]
+    assert len(glob.glob(os.path.join(dest, "*.parquet"))) == 1
+
+
+@pytest.mark.parametrize("make_empty", ["write_manifest", "empty_append"])
+def test_empty_store_reads_return_no_rows(registered, cells_path, tmp_path, make_empty):
+    """A store whose valid manifest lists no files plans one partition that
+    scans nothing: a key-pruned lookup and a full scan both return [] with
+    the declared schema."""
+    from datafusion_bigtable_spark.sources.cells import write_manifest
+
+    dest = str(tmp_path / "empty_store")
+    if make_empty == "write_manifest":
+        os.makedirs(dest)
+        write_manifest(dest)
+    else:
+        src = _read(registered, cells_path).limit(0)
+        _opts(src.write.format("bigtable"), dest).mode("append").save()
+    assert read_manifest(dest) == []
+
+    declared = _read(registered, cells_path).schema
+    full = _read(registered, dest)
+    lookup = _opts(registered.read.format("bigtable"), dest).option("allow_full_scan", "false").load().filter(
+        "region = 'us-west2' AND balloon_id = '3698' AND event_minute = '2021-03-05-1200'"
+    )
+    for df in (lookup, full):
+        assert df.schema == declared
+        assert df.collect() == []
+
+
 def test_key_disjoint_groups_unit():
     from datafusion_bigtable_spark.sources.datasource import _key_disjoint_groups
 

@@ -241,6 +241,34 @@ def test_stream_writer_gc_orphan_staging(tmp_path):
     assert os.path.isdir(batch_staging)  # batch jobs never swept
 
 
+def test_stream_commit_skips_a_task_with_no_cells(tmp_path):
+    """The stream writer shares the batch writer's ``write``: a task with
+    no cells answers with a message that carries no file, and the
+    micro-batch commit moves only the staged files."""
+    import datetime as dt
+    import os
+
+    from datafusion_bigtable_spark.sources.cells import read_manifest
+    from datafusion_bigtable_spark.sources.datasource import (
+        BigtableStreamWriter,
+        _CellsWriteCommit,
+    )
+
+    dest = str(tmp_path / "sparse_dest")
+    w = BigtableStreamWriter(None, {"path": dest, **OPTS})
+    empty = w.write(iter(()))
+    assert isinstance(empty, _CellsWriteCommit) and empty.staged is None
+    os.makedirs(w.staging, exist_ok=True)
+    staged = os.path.join(w.staging, "task-x.parquet")
+    _write_cells_file(
+        staged,
+        [("k1", "measurements", "pressure", dt.datetime(2021, 3, 5), (1).to_bytes(8, "big", signed=True))],
+    )
+    w.commit([empty, _CellsWriteCommit(staged)], batchId=3)
+    assert [f for f in os.listdir(dest) if f.endswith(".parquet")] == ["stream-b00000003-00001.parquet"]
+    assert [os.path.basename(r["file"]) for r in read_manifest(dest)] == ["stream-b00000003-00001.parquet"]
+
+
 def test_latest_wins_view_matches_batch_latest(registered, cells_path, tmp_path):
     """streaming/sinks.py::latest_wins_view — the stateful latest-version
     twin the stream reader's contract defers to: after newer versions
