@@ -14,7 +14,9 @@ and used as ``spark.read.format("bigtable")``:
   single-partition (``UnknownPartitioning(1)``, execute_plan.rs:84-86;
   roadmap gap README.md:50); here every composed range scans in parallel
   on a different executor.  On a full scan, key-disjoint file groups
-  packed into partitions of up to 128 MiB (``FilePartition``).
+  packed by Spark's file-packing rule at the session's core count: one
+  partition per core for a small store, partitions of up to 128 MiB for
+  a large one (``FilePartition``).
 - ``read()``       — per-partition: pyarrow scan of the cells parquet with
   family/key-range/qualifier predicates pushed into the parquet reader
   (the stand-in for the gRPC ``ReadRowsRequest`` + RowFilter chain,
@@ -29,7 +31,8 @@ Scale: at 100 TB the cells store is written range-partitioned and sorted
 by row_key (see sources/cells.py); ``partitions()`` maps ranges to the
 overlapping files only (parquet footer min/max — the emulation of
 Bigtable's tablet metadata), so a pruned query reads just those files, and
-the full-scan path parallelizes over 128 MiB packs of files.
+the full-scan path parallelizes over packs of files of at most 128 MiB
+(one per core on a store smaller than 128 MiB per core).
 
 KNOWN UPSTREAM CAVEAT (Spark 4.1, verified by tracing worker invocations):
 the JVM caches a Python data source's planned scan
@@ -122,8 +125,9 @@ def _config_from_options(options) -> BigtableTableConfig:
 @dataclass
 class RangePartition(InputPartition):
     """One composed KeyRange → one Spark scan task, carrying the pruned
-    list of overlapping files (empty tuple = all files) and optional cell
-    timestamp bounds (only set when pushdown is semantics-preserving)."""
+    list of overlapping files (never empty: a range that overlaps no file
+    plans no partition) and optional cell timestamp bounds (only set when
+    pushdown is semantics-preserving)."""
 
     start: str
     end: str
@@ -167,20 +171,19 @@ class FilePartition(InputPartition):
     round-trip tests).
 
     Groups are packed by Spark's own file-packing rule
-    (``FilePartition.getFilePartitions``) with Spark's default constants,
-    fixed: each file costs its on-disk bytes (recorded in the manifest)
-    plus 4 MiB (``spark.sql.files.openCostInBytes``), a partition closes
-    before it would exceed 128 MiB (``spark.sql.files.maxPartitionBytes``),
-    and a group is never split (see ``_pack_groups``).  A small store
-    therefore scans as one task on one core.  The cap was measured on
-    full scans of 3.3 MB, 39 MiB and 95 MiB stores at local[2] and
-    local[4] (ROADMAP, "Full-scan packing cap"), when every Python task
-    still paid a ~0.2 s import-cache floor: packed scans beat one task
-    per file on all of them.  The package's zipimport guard
-    (``_zipimport``; README, "Scale posture") has since cut a trivial
-    task to ~30 ms of wall at local[2], so the win of packing over a
-    per-core split of a few-MB store is no longer settled; the packing
-    is unchanged until that split is re-measured (ROADMAP)."""
+    (``FilePartition.getFilePartitions``) with Spark's default constants
+    and the session's core count (``register`` captures
+    ``defaultParallelism``): each file costs its on-disk bytes (recorded
+    in the manifest) plus 4 MiB (``spark.sql.files.openCostInBytes``);
+    the split size is ``min(128 MiB, max(4 MiB, total cost / cores))``
+    (``spark.sql.files.maxPartitionBytes``); a partition closes before a
+    group's file bytes would take it past the split size; and a group is
+    never split (see ``_pack_groups``).  A small store of key-disjoint
+    files therefore scans as one task per core, a large one in 128 MiB
+    tasks.  Only "one task per core" pays on a small store: on a 3.3 MB,
+    8-file store at local[2], 2 partitions beat 1 by ~25%, 4 tied 1 and
+    8 lost to it (README, "Scale posture").  A reader built without a
+    core count plans as ``cores=1``: one task up to 128 MiB."""
 
     groups: tuple
     ts_lo: object = None
@@ -194,8 +197,11 @@ class FilePartition(InputPartition):
 
 
 class BigtableReader(DataSourceReader):
-    def __init__(self, schema, options):
+    def __init__(self, schema, options, cores: int = 1):
         self.config = _config_from_options(options)
+        # The session's core count, the per-core term of the full-scan
+        # packing rule (``_pack_groups``); ``register`` captures it.
+        self.cores = cores
         # Wire endpoint mode (r7): scan a live ReadRows service instead of
         # a parquet store.  The driver shards key space from SampleRowKeys;
         # every executor task opens its own connection for its shard.
@@ -626,12 +632,12 @@ class BigtableReader(DataSourceReader):
             raise ComposerError("table_partition_cols: filter is not provided or not supported")
         stats = self._file_stats()
         if ts_push:
-            stats = [st for st in stats if self._ts_overlaps(st, ts_lo, ts_hi)] or stats[:1]
+            stats = [st for st in stats if self._ts_overlaps(st, ts_lo, ts_hi)]
         sizes = {st["file"]: st["bytes"] for st in stats}
         return [
             FilePartition(tuple(tuple(g) for g in part), ts_lo, ts_hi, value_preds, rows_cap)
-            for part in _pack_groups(_key_disjoint_groups(stats), sizes)
-        ] or [FilePartition(())]  # empty store: as for ranges above
+            for part in _pack_groups(_key_disjoint_groups(stats), sizes, self.cores)
+        ] or [FilePartition(())]  # empty store or every file ts-pruned: as for ranges above
 
     def _wire_partitions(self, ranges, ts_lo, ts_hi, value_preds, rows_cap):
         """Shard the composed ranges (or the full key space) at
@@ -729,7 +735,7 @@ class BigtableReader(DataSourceReader):
         if isinstance(partition, RangePartition):
             flt = flt & (pa_ds.field("row_key") >= partition.start)
             flt = flt & (pa_ds.field("row_key") <= partition.end)
-            groups = [list(partition.files) or self._files()]
+            groups = [list(partition.files)]
         else:
             groups = [list(g) for g in partition.groups]
 
@@ -865,21 +871,29 @@ _PACK_MAX_BYTES = 128 * 1024 * 1024
 _PACK_OPEN_COST_BYTES = 4 * 1024 * 1024
 
 
-def _pack_groups(groups: list[list[str]], sizes: dict[str, int]) -> list[list[list[str]]]:
+def _pack_groups(
+    groups: list[list[str]], sizes: dict[str, int], cores: int = 1
+) -> list[list[list[str]]]:
     """Pack consecutive key-disjoint groups into scan partitions, whole and
-    in order: each file costs ``sizes[file]`` plus the open cost, and a
-    partition closes before a group would take it past the cap.  A group
-    larger than the cap is a partition of its own."""
+    in order, by Spark's file-packing rule (``FilePartition``): each file
+    costs ``sizes[file]`` plus the open cost, the split size is
+    ``min(cap, max(open cost, total cost / cores))``, and a partition
+    closes before a group whose FILE bytes would take it past the split
+    size (the open cost is added after the comparison, as Spark does).  A
+    group larger than the split size is a partition of its own.  The
+    ``cur_bytes >= max_split`` clause matters only for 0-byte files."""
+    total = sum(sizes[f] + _PACK_OPEN_COST_BYTES for g in groups for f in g)
+    max_split = min(_PACK_MAX_BYTES, max(_PACK_OPEN_COST_BYTES, total // cores))
     parts: list[list[list[str]]] = []
     cur: list[list[str]] = []
     cur_bytes = 0
     for g in groups:
-        cost = sum(sizes[f] + _PACK_OPEN_COST_BYTES for f in g)
-        if cur and cur_bytes + cost > _PACK_MAX_BYTES:
+        file_bytes = sum(sizes[f] for f in g)
+        if cur and (cur_bytes + file_bytes > max_split or cur_bytes >= max_split):
             parts.append(cur)
             cur, cur_bytes = [], 0
         cur.append(g)
-        cur_bytes += cost
+        cur_bytes += file_bytes + len(g) * _PACK_OPEN_COST_BYTES
     if cur:
         parts.append(cur)
     return parts
@@ -1405,17 +1419,6 @@ class BigtableStreamWriter(DataSourceStreamWriter):
             shutil.rmtree(self.staging, ignore_errors=True)
 
 
-@dataclass
-class StreamFilesPartition(InputPartition):
-    """One scan task of a streaming micro-batch: a key-disjoint GROUP of
-    newly-arrived files (same invariant as the batch FilePartition — the
-    pivot is partition-local, so files whose key ranges overlap must scan
-    together or a (row_key, ts) whose cells landed in two files within one
-    batch would emit two partial rows with NULL holes)."""
-
-    files: tuple
-
-
 class BigtableStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("bigtable")`` — the cells store as a
     streaming source.  Bigtable's actual write pattern is a continuous
@@ -1441,10 +1444,12 @@ class BigtableStreamReader(DataSourceStreamReader):
 
     Partitioned reader (upgraded from SimpleDataSourceStreamReader,
     VERDICT r2 #7): each micro-batch's new files group by key-range
-    overlap (footer/manifest stats, same sweep as the batch full-scan
-    path) and every group scans as its own task on an executor — a large
-    arrival fans out like a batch read instead of bottlenecking one
-    process, and key-overlapping files pivot together (no partial rows).
+    overlap (footer stats, the same sweep as the batch full scan) and
+    every group scans as its own ``FilePartition`` through the batch
+    reader's ``read`` — so a large arrival fans out like a batch read
+    instead of bottlenecking one process, and key-overlapping files pivot
+    together (no partial rows).  Groups are not packed per core as a full
+    scan's are: no streaming workload has measured that yet.
     """
 
     def __init__(self, schema, options):
@@ -1523,29 +1528,17 @@ class BigtableStreamReader(DataSourceStreamReader):
                 "checkpoint, and restart to re-read the compacted store once"
             )
         files = sorted(current[n] for n in target if n not in seen)
-        if not files:
-            # empty micro-batch still needs one partition for a stable,
-            # correctly-typed empty result
-            return [StreamFilesPartition(())]
-        groups = _key_disjoint_groups(footer_file_stats(files))
-        return [StreamFilesPartition(tuple(g)) for g in groups]
+        # one scan task per key-disjoint group; an empty micro-batch still
+        # needs one partition for a stable, correctly-typed empty result
+        return [
+            FilePartition((tuple(g),)) for g in _key_disjoint_groups(footer_file_stats(files))
+        ] or [FilePartition(())]
 
-    def read(self, partition: StreamFilesPartition) -> Iterator:
-        import pyarrow.dataset as pa_ds
-
-        cfg = self.config
-        if not partition.files:
-            yield from _pivot_partition(_cells_table(), cfg)
-            return
-        flt = (pa_ds.field("family") == cfg.column_family) & pa_ds.field("qualifier").isin(
-            list(cfg.qualifiers)
-        )
-        # ONE pivot over the whole group's cells: a (row_key, ts) split
-        # across the group's files merges into one relational row
-        table = pa_ds.dataset(list(partition.files), format="parquet").to_table(
-            columns=CELL_COLUMNS, filter=flt
-        )
-        yield from _pivot_partition(table, cfg)
+    # executor side — the batch reader's scan: a group of key-overlapping
+    # files is materialised and pivoted whole, so a (row_key, ts) whose
+    # cells landed in two files of one micro-batch emits one complete row
+    read = BigtableReader.read
+    _scan = BigtableReader._scan
 
     def commit(self, end: dict) -> None:
         pass
@@ -1568,6 +1561,9 @@ class BigtableDataSource(DataSource):
     are invisible to the source — do not combine them with rows_limit.
     """
 
+    # the session's core count; ``register`` sets it on a subclass
+    cores = 1
+
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
@@ -1576,7 +1572,7 @@ class BigtableDataSource(DataSource):
         return _config_from_options(self.options).schema()
 
     def reader(self, schema) -> DataSourceReader:
-        return BigtableReader(schema, self.options)
+        return BigtableReader(schema, self.options, self.cores)
 
     def writer(self, schema, overwrite: bool) -> DataSourceWriter:
         return BigtableWriter(schema, self.options, overwrite)
@@ -1596,6 +1592,23 @@ class BigtableDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the format + enable python filter pushdown for this session."""
-    spark.dataSource.register(BigtableDataSource)
+    """Register the format + enable python filter pushdown for this session.
+
+    The full-scan packing rule needs the session's core count, which a
+    Python planner worker cannot see.  It is read here, on the driver, the
+    way Spark reads its own per-core term (``spark.sql.files.minPartitionNum``,
+    else ``spark.sql.leafNodeDefaultParallelism``, else
+    ``defaultParallelism``), and carried as a class attribute of a
+    subclass made at run time: cloudpickle ships such a class by value to
+    every planner worker.  The value is a snapshot taken at registration
+    (Spark re-reads it per query): executors that register later, or
+    dynamic allocation, are seen only when ``register`` runs again."""
+    cores = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    spark.dataSource.register(
+        type(BigtableDataSource.__name__, (BigtableDataSource,), {"cores": cores})
+    )
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

@@ -197,6 +197,121 @@ def test_pack_groups_oversized_group_stays_one_partition():
     assert _pack_groups([], {}) == []
 
 
+def test_pack_groups_splits_per_core_in_key_order():
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
+
+    groups = [[f"f{i}"] for i in range(8)]
+    sizes = {g[0]: MIB for g in groups}
+    parts = _pack_groups(groups, sizes, cores=2)
+    assert [len(p) for p in parts] == [4, 4]
+    assert [g for part in parts for g in part] == groups
+    parts = _pack_groups(groups, sizes, cores=3)
+    assert [len(p) for p in parts] == [3, 3, 2]
+    assert [g for part in parts for g in part] == groups
+
+
+def test_pack_groups_split_size_floors_at_the_open_cost():
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
+
+    # 8 x (1 + 4) MiB / 32 cores is under the 4 MiB floor: a group a task
+    groups = [[f"f{i}"] for i in range(8)]
+    sizes = {g[0]: MIB for g in groups}
+    assert _pack_groups(groups, sizes, cores=32) == [[g] for g in groups]
+
+
+def test_pack_groups_cap_binds_over_the_per_core_share():
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
+
+    # 16 x (60 + 4) MiB / 2 cores = 512 MiB per core; the 128 MiB cap
+    # still closes a partition after two files
+    groups = [[f"f{i:02d}"] for i in range(16)]
+    sizes = {g[0]: 60 * MIB for g in groups}
+    assert [len(p) for p in _pack_groups(groups, sizes, cores=2)] == [2] * 8
+
+
+def test_pack_groups_compares_file_bytes_not_open_cost():
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
+
+    # at the cap: 100 MiB + 4 MiB open cost, then 22 MiB of file bytes
+    # fits in 128 MiB; with its open cost (130 MiB) it would not
+    sizes = {"a": 100 * MIB, "b": 22 * MIB}
+    assert _pack_groups([["a"], ["b"]], sizes) == [[["a"], ["b"]]]
+    # per core: (5 + 5 + 5 + 6) MiB / 2 = 10.5 MiB; adding the fourth
+    # file's open cost would spill it into a third partition
+    sizes = {"a": MIB, "b": MIB, "c": MIB, "d": 2 * MIB}
+    groups = [["a"], ["b"], ["c"], ["d"]]
+    assert _pack_groups(groups, sizes, cores=2) == [[["a"], ["b"]], [["c"], ["d"]]]
+
+
+def _cells_file(path, keys, ts, quals):
+    import pyarrow as pa
+
+    n = len(keys)
+    pq.write_table(
+        pa.table({
+            "row_key": keys, "family": ["f"] * n, "qualifier": quals,
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "value": pa.array([f"{k}@{t}".encode() for k, t in zip(keys, ts)], pa.binary()),
+        }),
+        path,
+    )
+
+
+def _split_store(store, n_files):
+    """``n_files`` equal key-disjoint cells files; the full-scan options."""
+    store.mkdir()
+    t0 = dt.datetime(2024, 1, 1)
+    for i in range(n_files):
+        keys = [f"k{i:02d}-{j:03d}" for j in range(50)]
+        _cells_file(str(store / f"part-{i:02d}.parquet"), keys, [t0] * 50, ["p"] * 50)
+    return {
+        "path": str(store), "column_family": "f", "columns": "p:string,q:string",
+        "allow_full_scan": "true",
+    }
+
+
+def test_full_scan_splits_across_the_session_cores(registered, tmp_path):
+    """``register`` carries the session's core count to the planner: a full
+    scan of 2N equal key-disjoint files at local[N] plans N partitions and
+    returns the rows of the one-partition plan, in key order."""
+    import pyarrow as pa
+
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader
+
+    cores = registered.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("one core plans one partition with or without the per-core term")
+    opts = _split_store(tmp_path / "split_store", 2 * cores)
+    df = registered.read.format("bigtable").options(**opts).load()
+    assert df.rdd.getNumPartitions() == cores
+
+    one = BigtableReader(None, opts)
+    (part,) = one.partitions()
+    want = pa.Table.from_batches(list(one.read(part))).to_pylist()
+    assert len(want) == 100 * cores
+    assert [r.asDict() for r in df.collect()] == want
+
+
+def test_register_honours_leaf_node_default_parallelism(spark, tmp_path):
+    """Spark's per-core term prefers ``spark.sql.leafNodeDefaultParallelism``
+    to the core count; ``register`` snapshots it, and registering again
+    after the setting changes picks up the new value."""
+    opts = _split_store(tmp_path / "leaf_store", 6)
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "3")
+    try:
+        bt_ds.register(spark)
+        df = spark.read.format("bigtable").options(**opts).load()
+        assert df.rdd.getNumPartitions() == 3
+        assert df.count() == 300
+    finally:
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+        bt_ds.register(spark)
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader
+
+    want = len(BigtableReader(None, opts, spark.sparkContext.defaultParallelism).partitions())
+    assert spark.read.format("bigtable").options(**opts).load().rdd.getNumPartitions() == want
+
+
 def test_packed_full_scan_streams_groups_through_one_carry(tmp_path):
     """One task scans three key-disjoint groups: a file whose row keys
     span row groups (streamed, carried), two key-overlapping files

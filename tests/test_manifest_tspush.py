@@ -154,6 +154,18 @@ def test_ts_bounds_from_equal_to(two_file_store):
     assert (parts[0].ts_lo, parts[0].ts_hi) == (JAN, JAN)
 
 
+def test_ts_bound_past_every_file_plans_an_empty_scan(two_file_store):
+    from datafusion_bigtable_spark.sources.datasource import _arrow_schema
+
+    r = _reader(two_file_store)
+    r.pushFilters([GreaterThanOrEqual(("_timestamp",), dt.datetime(2025, 1, 1))])
+    parts = r.partitions()
+    assert parts == [FilePartition(())]
+    (batch,) = r.read(parts[0])
+    assert batch.num_rows == 0
+    assert batch.schema == _arrow_schema(r.config)
+
+
 def test_ts_pushdown_gated_under_latest_filter(two_file_store):
     r = _reader(two_file_store, only_read_latest="true")
     r.pushFilters([GreaterThanOrEqual(("_timestamp",), dt.datetime(2024, 2, 1))])

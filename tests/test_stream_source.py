@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from datafusion_bigtable_spark.sources import datasource as bt_ds
-from datafusion_bigtable_spark.sources.datasource import BigtableStreamReader
+from datafusion_bigtable_spark.sources.datasource import BigtableStreamReader, FilePartition
 
 
 @pytest.fixture(scope="module")
@@ -125,6 +125,37 @@ def test_stream_batch_fans_out_and_merges_overlaps(tmp_path):
     by_key = {t[0]: t for t in rows}
     assert len(rows) == 2 and by_key["k1"][2] == 94558 and by_key["k1"][3] == "9.6"
     assert by_key["z9"][2] is None and by_key["z9"][3] == "4.2"
+
+
+def test_stream_batch_plans_a_file_partition_per_group(tmp_path):
+    """A micro-batch plans the batch reader's ``FilePartition``, one per
+    key-disjoint group, and scans it with the batch reader's ``read``; the
+    group of two files that split one row's cells stays whole, so that row
+    comes out complete."""
+    import datetime as dt
+    import os
+
+    store = tmp_path / "packed_store"
+    store.mkdir()
+    ts = dt.datetime(2021, 3, 5, 12, 0, 5)
+    enc = (94558).to_bytes(8, "big", signed=True)
+    _write_cells_file(str(store / "a0.parquet"), [("k1", "measurements", "pressure", ts, enc)])
+    _write_cells_file(str(store / "a1.parquet"), [("k1", "measurements", "temperature", ts, b"9.6")])
+    _write_cells_file(str(store / "b.parquet"), [("m5", "measurements", "temperature", ts, b"1.1")])
+    _write_cells_file(str(store / "c.parquet"), [("z9", "measurements", "temperature", ts, b"4.2")])
+
+    opts = {"path": str(store), **{**OPTS, "table_partition_cols": "_row_key"}}
+    r = BigtableStreamReader(None, opts)
+    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    assert all(isinstance(p, FilePartition) for p in parts)
+    names = [[[os.path.basename(f) for f in g] for g in part.groups] for part in parts]
+    assert names == [[["a0.parquet", "a1.parquet"]], [["b.parquet"]], [["c.parquet"]]]
+
+    rows = _collect(r, parts)
+    # (_row_key, _timestamp, pressure, temperature) — schema field order
+    assert [(t[0], t[2], t[3]) for t in rows] == [
+        ("k1", 94558, "9.6"), ("m5", None, "1.1"), ("z9", None, "4.2")
+    ]
 
 
 def test_stream_requires_unnest_mode(tmp_path):
