@@ -1,9 +1,7 @@
-from datafusion_bigtable_spark.operators.decode import decode_int64_be, decode_utf8
 from datafusion_bigtable_spark.operators.graph import connected_components
 from datafusion_bigtable_spark.operators.pivot import (
     compose_row_key,
     latest_cells,
-    pivot_cells,
     split_row_key,
 )
 from datafusion_bigtable_spark.operators.similarity import (
@@ -18,11 +16,8 @@ __all__ = [
     "IvfIndex",
     "build_ivf_index",
     "connected_components",
-    "decode_int64_be",
-    "decode_utf8",
     "compose_row_key",
     "latest_cells",
-    "pivot_cells",
     "split_row_key",
     "topk_bruteforce",
     "topk_ivf",

@@ -1,22 +1,13 @@
-"""Wide-column structural operators: latest-version filter, cell→row pivot,
+"""Wide-column structural operators on Catalyst: latest-version filter and
 composite-key split/compose.
 
-These are the declarative re-expressions of the reference's imperative scan
-loop (src/execute_plan.rs:186-271 builds a 3-level HashMap
-``row_key → ts → qualifier → bytes`` then emits one row per
-``(row_key, ts)``).  Expressed as groupBy/pivot/window, Catalyst plans them
-with partial aggregation and whole-stage codegen, and they scale out —
-the reference's loop is single-threaded and fully materialized.
-
-Scale notes (100 TB):
-- ``pivot_cells`` is ONE hash-aggregate shuffle on ``(row_key, ts)``; the
-  qualifier list is always the *declared* list so the plan is static (no
-  distinct-values job, which `.pivot(col)` without values would trigger).
-- ``latest_cells`` uses max_by-style aggregation rather than a window when
-  it can be fused into the same grouping; the window variant is kept for
-  exact reference semantics (cells-per-column limit before pivoting).
-- both respect a prior ``repartitionByRange("row_key")`` layout: AQE keeps
-  the shuffle partition count matched to data size.
+The read path does these steps in the Arrow scan kernel
+(sources/datasource.py::_pivot_partition); the operators here serve the
+DataFrames that are not a scan: ``latest_cells`` keeps the newest versions
+when compaction rewrites a store (sources/cells.py), and
+``split_row_key`` / ``compose_row_key`` map between a relational key and
+its joined row key (reference src/execute_plan.rs:226-251,
+composer.rs:141).
 """
 
 from __future__ import annotations
@@ -40,27 +31,6 @@ def latest_cells(cells: DataFrame, versions: int = 1) -> DataFrame:
         cells.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= versions)
         .drop("_rn")
-    )
-
-
-def pivot_cells(cells: DataFrame, qualifiers: Sequence[str]) -> DataFrame:
-    """One output row per (row_key, ts); one column per declared qualifier —
-    the reference's cell→row pivot (src/execute_plan.rs:223-271).
-
-    Passing the declared qualifier list keeps the plan static and is also
-    the projection pushdown: un-projected qualifiers are filtered *before*
-    the shuffle (the Spark analogue of Bigtable's
-    ColumnQualifierRegexFilter, composer.rs:263-281 — minus its regex
-    over-match quirk, SURVEY §2 A9).
-
-    Missing (row_key, ts, qualifier) slots yield NULL (deviation from the
-    reference's empty-bytes, SURVEY §1.3).
-    """
-    pruned = cells.filter(F.col("qualifier").isin(list(qualifiers)))
-    return (
-        pruned.groupBy("row_key", F.col("ts").alias("_timestamp"))
-        .pivot("qualifier", list(qualifiers))
-        .agg(F.first("value", ignorenulls=True))
     )
 
 

@@ -19,7 +19,7 @@ operate on int-keyed tables unchanged: predicates encode on the way into
 the composer, components decode on the way out of the key split.  The
 relational schema exposes a BIGINT; users filter with ints.
 
-(Contrast with the qualifier-VALUE encoding, operators/decode.py: cell
+(Contrast with the qualifier-VALUE encoding (sources/cells.py): cell
 values use 8-byte big-endian two's complement, where negatives sort ABOVE
 positives and range pushdown needs two sign intervals.  Keys choose the
 offset-decimal form instead precisely so that no consumer of key order
@@ -42,25 +42,6 @@ def encode_int_key(v: int) -> str:
 
 def decode_int_key(s: str) -> int:
     return int(s) - _OFFSET
-
-
-def decode_int_key_column(col):
-    """Catalyst decode of an encoded component column → BIGINT.
-
-    DECIMAL(21,0) holds the full unsigned range; the subtraction happens
-    in decimal space, then narrows to BIGINT exactly (ANSI-safe: every
-    in-range encoding round-trips; a malformed component yields NULL from
-    the string→decimal cast, matching the NULL-for-malformed stance of
-    operators/decode.py).
-    """
-    from pyspark.sql import functions as F
-
-    # NOTE F.lit(2**63) would overflow the Java long literal; route the
-    # offset through a string→decimal cast instead.  try_cast, not cast:
-    # under default ANSI mode a plain cast of a malformed component THROWS
-    # mid-scan instead of yielding the documented NULL (review finding).
-    offset = F.expr(f"CAST('{_OFFSET}' AS DECIMAL(21,0))")
-    return (col.try_cast("decimal(21,0)") - offset).cast("bigint")
 
 
 def encode_predicates(preds, partition_cols, key_types):

@@ -1,26 +1,26 @@
 """High-level table assembly — the Spark equivalent of registering a
 ``BigtableDataSource`` with DataFusion (reference src/datasource.rs:195-198).
 
-``BigtableTable(config).to_df(spark, predicates)`` produces the declared
-relational view from the cells store:
+``BigtableTable(config).to_df(spark, predicates)`` is a thin front over the
+one read path, the Arrow pivot kernel (``datasource._pivot_partition``:
+latest-version filter A11, cell→row pivot A13, key split A14, typed
+decode A15, declared column order):
 
-    read cells parquet                     (A1 scan; parquet stats prune)
-    → family filter                        (A10, composer.rs:254-256)
-    → key-range filter from the composer   (A3-A8 partition pruning)
-    → latest-version filter                (A11, CellsPerColumnLimitFilter)
-    → cell→row pivot                       (A13, execute_plan.rs:223-271)
-    → composite-key split                  (A14, execute_plan.rs:226-251)
-    → typed decode                         (A15, execute_plan.rs:283-304)
-    → declared column order                (schema, datasource.rs:68-79)
+- parquet cells store: ``spark.read.format("bigtable")`` with the config
+  as read options (``datasource._options_from_config``) and the
+  predicates as Column filters on the key components.  ``pushFilters``
+  composes them back into the key ranges (A3-A8), and each scan task
+  filters family, qualifiers and its range in pyarrow (A1, A9, A10), then
+  runs the kernel.  The plan has no shuffle.
+- ReadRows service: the request carries the ranges and the filter chain
+  (``grpc_transport.fetch_cells``); the driver pivots the response with
+  the same kernel and hands Spark the Arrow table.
 
-All steps are Catalyst expressions — the whole pipeline is one shuffle
-(the pivot's hash aggregate) and stays in whole-stage codegen.
-
-Inexact-pushdown semantics (A16, datasource.rs:163-165): the composer's
-ranges only *prune*; when the caller supplies predicates we do NOT assume
-they are fully applied — callers re-filter above (Spark re-applies WHERE
-clauses above any source automatically, so registering the view and
-querying with the same WHERE reproduces the reference's correctness net).
+Inexact-pushdown semantics (A16, datasource.rs:163-165): the ranges only
+prune.  The predicates and value filters are re-applied as relational
+filters on both transports, so the frame holds exactly the rows they
+select; registering the view and querying it with a WHERE behaves as
+the reference's correctness net.
 """
 
 from __future__ import annotations
@@ -30,15 +30,16 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from datafusion_bigtable_spark.config import RESERVED_TIMESTAMP, BigtableTableConfig
-from datafusion_bigtable_spark.operators.decode import decode_value
-from datafusion_bigtable_spark.operators.pivot import latest_cells, pivot_cells, split_row_key
+from datafusion_bigtable_spark.operators.pivot import compose_row_key
 from datafusion_bigtable_spark.plans.composer import (
+    Between,
+    ComposerError,
+    Eq,
     KeyRange,
     Predicate,
     compose,
-    key_range_predicate,
 )
-from datafusion_bigtable_spark.sources.cells import read_cells
+from datafusion_bigtable_spark.plans.keycodec import encode_predicates
 
 
 def _bridge_bind_host(master: str, driver_host: str | None) -> str:
@@ -90,8 +91,6 @@ class BigtableTable:
 
     # -- pruning ----------------------------------------------------------
     def key_ranges(self, predicates: Iterable[Predicate]) -> list[KeyRange]:
-        from datafusion_bigtable_spark.plans.keycodec import encode_predicates
-
         return compose(
             encode_predicates(
                 predicates, self.config.table_partition_cols, self.config.key_types
@@ -101,96 +100,24 @@ class BigtableTable:
             allow_full_scan=self.config.allow_full_scan,
         )
 
+    def _ranges_select_exactly(self, predicates: Sequence[Predicate]) -> bool:
+        """True when the composed ranges hold exactly the rows the
+        predicates select, so a cap the service takes over the ranges
+        counts only matching rows: each key component is constrained at
+        most once, by a non-negated ``=`` / ``IN`` with literals of its
+        type, or the tail by a non-negated BETWEEN."""
+        pcols = self.config.table_partition_cols
+        preds = encode_predicates(predicates, pcols, self.config.key_types)
+        cols = [p.col for p in preds]
+        return len(set(cols)) == len(cols) and all(
+            p.col in pcols
+            and not getattr(p, "negated", False)
+            and (p.col == pcols[-1] or not isinstance(p, Between))
+            and all(isinstance(v, str) for v in _literals(p))
+            for p in preds
+        )
+
     # -- assembly ---------------------------------------------------------
-    def cells(
-        self,
-        spark: SparkSession,
-        ranges: Sequence[KeyRange] = (),
-        as_of=None,
-        strict_as_of: bool = False,
-        value_filters: Sequence[tuple[str, str, object]] = (),
-        rows_limit: int | None = None,
-    ) -> DataFrame:
-        if self.service is not None:
-            # Live ReadRows path: ranges + filter chain are pushed INTO the
-            # request (server-side pruning), the cell stream comes back as
-            # a local DataFrame.  Mirrors execute_plan.rs:168-212.
-            from datafusion_bigtable_spark.sources.cells import (
-                CELLS_SCHEMA,
-                _naive_datetime_to_us,
-                _us_to_naive_datetime,
-            )
-            from datafusion_bigtable_spark.sources.grpc_transport import fetch_cells
-
-            as_of_us = _naive_datetime_to_us(as_of) if as_of is not None else None
-            rows = [
-                (rk, fam, q, _us_to_naive_datetime(ts), val)
-                for rk, fam, q, ts, val in fetch_cells(
-                    self.config,
-                    ranges,
-                    service=self.service,
-                    as_of_us=as_of_us,
-                    value_preds=tuple(value_filters),
-                    rows_limit=rows_limit,
-                )
-            ]
-            return spark.createDataFrame(rows, CELLS_SCHEMA)
-        if rows_limit is not None:
-            raise ValueError(
-                "rows_limit is a ReadRows request field (service transport "
-                "only); on the parquet path cap relationally — to_df's "
-                "rows_limit does this for you"
-            )
-        if not self.config.cells_path:
-            raise NotImplementedError(
-                "no transport: set cells_path to a parquet cells store, or "
-                "pass a ReadRows service (real client or the in-process "
-                "fake, sources/fake_bigtable.py)"
-            )
-        df = read_cells(spark, self.config.cells_path)
-        if as_of is not None:
-            # Time travel vs GC: a version-GC compaction drops cell
-            # versions and records the newest dropped ts in the store's
-            # watermark sidecar.  An as-of read bounded at or before that
-            # instant can no longer reconstruct the snapshot that was live
-            # then (Bigtable has the same property: GC'd cells are
-            # unreadable at any timestamp) — silent plausible-but-wrong
-            # history is the worst outcome, so be loud: warn by default,
-            # raise under strict_as_of.
-            from datafusion_bigtable_spark.sources.cells import (
-                _naive_datetime_to_us,
-                _us_to_naive_datetime,
-                read_gc_watermark_us,
-            )
-
-            wm = read_gc_watermark_us(self.config.cells_path)
-            if wm is not None and _naive_datetime_to_us(as_of) <= wm:
-                import warnings
-
-                msg = (
-                    f"as_of={as_of.isoformat(sep=' ')} is at or before this "
-                    f"store's GC watermark "
-                    f"{_us_to_naive_datetime(wm).isoformat(sep=' ')}"
-                    " — versions live at that instant may have been "
-                    "garbage-collected; the snapshot is best-effort, not "
-                    "exact"
-                )
-                if strict_as_of:
-                    raise GCWatermarkError(msg)
-                warnings.warn(msg, GCWatermarkWarning, stacklevel=3)
-        if as_of is not None:
-            # bound BEFORE the latest filter — Catalyst pushes this to the
-            # parquet scan (row-group ts pruning for free).  The literal
-            # must be TIMESTAMP_NTZ: F.lit(datetime) builds an LTZ literal
-            # through the SYSTEM timezone while the NTZ comparison coerces
-            # through the SESSION timezone, silently shifting the snapshot
-            # whenever the two differ (review finding, reproduced).
-            ntz = F.lit(as_of.isoformat(sep=" ", timespec="microseconds")).cast(
-                "timestamp_ntz"
-            )
-            df = df.filter(F.col("ts") <= ntz)
-        return df.filter(F.col("family") == self.config.column_family)
-
     def to_df(
         self,
         spark: SparkSession,
@@ -200,20 +127,15 @@ class BigtableTable:
         value_filters: Sequence[tuple[str, str, object]] = (),
         rows_limit: int | None = None,
     ) -> DataFrame:
-        """Assemble the relational view; ``as_of`` (naive datetime) gives a
-        TIME-TRAVEL read: the latest version of each cell among versions
-        with ``ts <= as_of`` — Bigtable's timestamp-bounded read.
-
-        ``value_filters`` — ``(column, op, literal)`` triples with op in
-        eq/ge/gt/le/lt (r7; the reference's unshipped value-filter roadmap,
-        README.md:46-49): on the SERVICE path each pushes into the
-        ReadRows request as a per-qualifier Interleave of byte ranges
-        (grpc_transport.build_value_pred_filter) positioned AFTER the
-        latest-version limit — latest-then-filter, never the promotion
-        hazard.  The exact relational predicate is ALWAYS re-applied on
-        the decoded frame (the A16 inexact contract), which also makes the
-        parquet path correct with no cell-level pushdown (the format-API
-        path has its own).
+        """Assemble the relational view of the rows the key ``predicates``
+        select; ``as_of`` (naive datetime) gives a TIME-TRAVEL read: the
+        latest version of each cell among versions with ``ts <= as_of`` —
+        Bigtable's timestamp-bounded read.  The bound applies BEFORE the
+        latest-version filter, in the scan (the Data Source's ``as_of``
+        option) or in the request's filter chain.  That is the ordering the
+        generic ts-pushdown gate refuses to produce by accident (a ts bound
+        pushed under a latest-filtered read turns "latest, then filter"
+        into "filter, then latest"); here the caller asks for it.
 
         ``strict_as_of=True`` raises :class:`GCWatermarkError` when the
         bound is at or before the store's GC watermark (a version-GC
@@ -221,38 +143,30 @@ class BigtableTable:
         default warns (:class:`GCWatermarkWarning`) and returns the
         best-effort snapshot.
 
+        ``value_filters`` — ``(column, op, literal)`` triples with op in
+        eq/ge/gt/le/lt (r7; the reference's unshipped value-filter roadmap,
+        README.md:46-49): on the SERVICE path each pushes into the
+        ReadRows request as a per-qualifier Interleave of byte ranges
+        (grpc_transport.build_value_pred_filter) positioned AFTER the
+        latest-version limit — latest-then-filter, never the promotion
+        hazard; on the parquet path they reach ``pushFilters`` like any
+        WHERE.  The exact relational predicate is ALWAYS re-applied on the
+        decoded frame (the A16 inexact contract).
+
         ``rows_limit`` (r7) — the ReadRowsRequest's real ``rows_limit``:
         the first N post-filter rows in row-key order.  Pushed into the
-        request on the service path, replicated as a key-ordered
-        TakeOrderedAndProject on the parquet path; latest-mode only
-        (under version-unnest a Bigtable row fans out per timestamp, so
-        the cap would not be the relational LIMIT — it warns and is
-        ignored).
-
-        Note the ordering contract: the bound applies BEFORE the
-        latest-version filter.  This is exactly the semantics the generic
-        ts-pushdown gate protects against producing by accident (a ts
-        bound pushed under a latest-filtered read silently turns "latest,
-        then filter" into "filter, then latest" — the as-of snapshot); the
-        ``as_of`` parameter is the user ASKING for bound-then-latest, so
-        here the scan-level bound is the correct plan, not a hazard.
+        request on the service path when no row of the capped ranges can
+        fail a re-applied filter, and always applied relationally as a
+        key-ordered TakeOrderedAndProject; latest-mode only (under
+        version-unnest a Bigtable row fans out per timestamp, so the cap
+        would not be the relational LIMIT — it warns and is ignored).
         """
+        cfg = self.config
+        # eager: a missing key filter raises ComposerError here, not at
+        # the first action
         ranges = self.key_ranges(predicates)
 
-        # rows_limit: the ReadRowsRequest's real rows_limit field — the
-        # server stops after N post-filter rows in key order.  Exactness
-        # gates (mirroring the parquet DS rows_limit option's discipline):
-        # - latest mode only: under version-unnest a Bigtable row pivots to
-        #   one output row per timestamp, so the cap is NOT the relational
-        #   LIMIT — warn and ignore rather than return a short frame.
-        # - wire push additionally requires NO value_filters: the
-        #   keep-rest interleave lets a row survive the wire predicate on
-        #   other qualifiers and die at the relational re-application
-        #   above the scan, so a server-side cap would undercount matching
-        #   rows.  With value_filters the cap applies relationally below
-        #   (filter-then-TakeOrdered, same result the server would give
-        #   with a condition filter).
-        cap = rows_limit if (rows_limit is None or self.config.only_read_latest) else None
+        cap = rows_limit if cfg.only_read_latest else None
         if rows_limit is not None and cap is None:
             import warnings
 
@@ -262,89 +176,90 @@ class BigtableTable:
                 "row per surviving timestamp; apply .limit() above instead",
                 stacklevel=2,
             )
-        wire_limit = cap if (self.service is not None and not value_filters) else None
-        cells = self.cells(
-            spark,
-            ranges,
-            as_of=as_of,
-            strict_as_of=strict_as_of,
-            value_filters=tuple(value_filters),
-            rows_limit=wire_limit,
-        )
+        if self.service is not None:
+            # the wire cap counts Bigtable rows of the ranges; it is exact
+            # only if every one of them survives the filters re-applied
+            # below (with value_filters, a row can pass the request's
+            # keep-rest interleave and still fail the relational compare)
+            exact = not value_filters and self._ranges_select_exactly(predicates)
+            df = self._service_df(spark, ranges, as_of, value_filters, cap if exact else None)
+        elif cfg.cells_path:
+            df = self._store_df(spark, predicates, as_of, strict_as_of)
+        else:
+            raise NotImplementedError(
+                "no transport: set cells_path to a parquet cells store, or "
+                "pass a ReadRows service (real client or the in-process "
+                "fake, sources/fake_bigtable.py)"
+            )
 
-        # Inexact contract: re-apply the range predicate above the scan even
-        # when the service already pruned server-side (A16).
-        pred = key_range_predicate(ranges, "row_key")
-        if pred is not None:
-            cells = cells.filter(pred)
-
-        if self.config.only_read_latest:
-            # ONE shuffle serves the whole assembly: hash-clustering the
-            # cells by row_key satisfies the latest-window's
-            # ClusteredDistribution(row_key, qualifier) AND the pivot's
-            # (row_key, ts), so both run shuffle-free above this exchange.
-            # Without it Catalyst plans two back-to-back exchanges on the
-            # two different key sets (measured; the plan contract
-            # test_bt_pivot_partial_final_around_one_exchange pins the
-            # single-shuffle shape).  Per-partition volume follows row-key
-            # cardinality — a single row key's cells are bounded by
-            # #qualifiers × #versions, so no skew hazard.
-            cells = cells.repartition("row_key")
-            cells = latest_cells(cells)
-
-        wide = pivot_cells(cells, self.config.qualifiers)
-        wide = split_row_key(
-            wide,
-            self.config.table_partition_cols,
-            self.config.table_partition_separator,
-        )
-
-        ktypes = self.config.key_types or ("string",) * len(self.config.table_partition_cols)
-        cols = []
-        for c, t in zip(self.config.table_partition_cols, ktypes):
-            if t == "int64":
-                from datafusion_bigtable_spark.plans.keycodec import decode_int_key_column
-
-                cols.append(decode_int_key_column(F.col(c)).alias(c))
-            else:
-                cols.append(F.col(c))
-        cols.append(F.col("_timestamp").cast("timestamp_ntz").alias(RESERVED_TIMESTAMP))
-        for spec in self.config.columns:
-            cols.append(decode_value(F.col(spec.name), spec.spark_type()).alias(spec.name))
-        if cap is not None and wire_limit is None:
-            cols.append(F.col("row_key").alias("__rk"))
-        out = wide.select(*cols)
-
-        # A16 for value predicates: the wire pushdown (service path) is a
-        # cell-level reduction; the RELATIONAL predicate on the decoded
-        # column is re-applied here so the frame is exact on every
-        # transport — including the parquet path, which pushes nothing at
-        # this layer.  (ASCII-gated string encodings keep byte order equal
-        # to Spark's string order, so pushed and re-applied semantics
-        # agree; a NULL decoded value — missing cell — fails the compare
-        # on both paths.)
-        _OPS = {
-            "eq": Column.__eq__,
-            "ge": Column.__ge__,
-            "gt": Column.__gt__,
-            "le": Column.__le__,
-            "lt": Column.__lt__,
-        }
+        for p in predicates:
+            df = df.filter(_predicate_column(p))
+        # ASCII-gated string encodings keep byte order equal to Spark's
+        # string order, so pushed and re-applied semantics agree; a NULL
+        # decoded value — missing cell — fails the compare on both paths
         for col, op, lit in value_filters:
-            out = out.filter(_OPS[op](F.col(col), F.lit(lit)))
+            df = df.filter(_OPS[op](F.col(col), F.lit(lit)))
+        if cap is not None:
+            # the first N rows in ROW-KEY byte order, after every filter,
+            # as the server would cap them — ordered by the rebuilt raw
+            # key, not the component tuple: a component character below
+            # the separator would invert tuple vs joined order
+            df = df.orderBy(_raw_row_key(cfg)).limit(cap)
+        return df
 
-        if cap is not None and wire_limit is None:
-            # Relational replication of the service's rows_limit: the
-            # first N rows in ROW-KEY byte order, applied after every
-            # filter exactly like the server would.  Ordering by the raw
-            # joined key (not the split components — a component char
-            # below the separator would invert tuple vs joined order)
-            # plans as TakeOrderedAndProject: per-partition top-N + driver
-            # merge of N, bounded at any store size.  Used on the parquet
-            # transport always, and on the service transport when
-            # value_filters make a wire cap inexact (see above).
-            out = out.orderBy(F.col("__rk")).limit(cap)
-        return out.drop("__rk") if "__rk" in out.columns else out
+    def _store_df(self, spark, predicates, as_of, strict_as_of) -> DataFrame:
+        """A fresh ``format("bigtable")`` read of the parquet store (a
+        fresh ``load()`` per call: see the scan-cache caveat in
+        datasource.py)."""
+        from datafusion_bigtable_spark.sources import datasource
+
+        cfg = self.config
+        opts = datasource._options_from_config(cfg)
+        if as_of is not None:
+            _check_gc_watermark(cfg.cells_path, as_of, strict_as_of)
+            opts["as_of"] = as_of.isoformat(sep=" ", timespec="microseconds")
+        # NOT BETWEEN never reaches the source (Spark pushes no OR to a
+        # Python data source); when the tail needs it to compose, the scan
+        # is a full one under the re-applied filter — the guard it would
+        # trip was enforced eagerly by key_ranges
+        try:
+            self.key_ranges([p for p in predicates if not getattr(p, "negated", False)])
+        except ComposerError:
+            opts["allow_full_scan"] = "true"
+        datasource.register(spark)
+        df = spark.read.format(datasource.FORMAT_NAME).options(**opts).load()
+        # Spark reuses a load() handle's last planned scan for a query that
+        # pushes no filter (datasource.py, "KNOWN UPSTREAM CAVEAT"): this
+        # always-true bound makes every query over the frame push one, so
+        # a view queried with and without a WHERE never reads a stale,
+        # key-pruned scan
+        return df.filter(F.col(RESERVED_TIMESTAMP) >= F.lit(_TS_FLOOR).cast("timestamp_ntz"))
+
+    def _service_df(self, spark, ranges, as_of, value_filters, rows_limit) -> DataFrame:
+        """Live ReadRows path: ranges and the filter chain are pushed INTO
+        the request (server-side pruning, execute_plan.rs:168-212); the
+        response is pivoted on the driver by the scan's Arrow kernel."""
+        import pyarrow as pa
+
+        from datafusion_bigtable_spark.sources.cells import _naive_datetime_to_us
+        from datafusion_bigtable_spark.sources.datasource import _cells_table, _pivot_partition
+        from datafusion_bigtable_spark.sources.grpc_transport import fetch_cells
+
+        cells = list(
+            fetch_cells(
+                self.config,
+                ranges,
+                service=self.service,
+                as_of_us=_naive_datetime_to_us(as_of) if as_of is not None else None,
+                value_preds=tuple(value_filters),
+                rows_limit=rows_limit,
+            )
+        )
+        row_key, _family, qualifier, ts_us, value = zip(*cells) if cells else [()] * 5
+        rows = pa.Table.from_batches(
+            list(_pivot_partition(_cells_table(row_key, qualifier, ts_us, value), self.config))
+        )
+        return spark.createDataFrame(rows, self.config.schema())
 
     def mutate(self, df: DataFrame, max_mutations: int = 100_000) -> int:
         """Write a relational DataFrame through the MutateRows transport —
@@ -450,3 +365,75 @@ class BigtableTable:
         df = self.to_df(spark, **kw)
         df.createOrReplaceTempView(name or self.config.table)
         return df
+
+
+# the smallest TIMESTAMP_NTZ (and Python datetime): no cell is older
+_TS_FLOOR = "0001-01-01 00:00:00"
+
+_OPS = {
+    "eq": Column.__eq__,
+    "ge": Column.__ge__,
+    "gt": Column.__gt__,
+    "le": Column.__le__,
+    "lt": Column.__lt__,
+}
+
+
+def _literals(p: Predicate) -> tuple:
+    if isinstance(p, Eq):
+        return (p.value,)
+    return (p.low, p.high) if isinstance(p, Between) else tuple(p.values)
+
+
+def _predicate_column(p: Predicate) -> Column:
+    """A composer predicate as a filter on its key component: ``=``,
+    ``isin``, or ``>=`` and ``<=`` (what ``pushFilters`` composes back)."""
+    col = F.col(p.col)
+    if isinstance(p, Eq):
+        return col == p.value
+    cond = col.between(p.low, p.high) if isinstance(p, Between) else col.isin(list(p.values))
+    return ~cond if p.negated else cond
+
+
+def _raw_row_key(cfg: BigtableTableConfig) -> Column:
+    """The stored row key rebuilt from the key components, int64
+    components in their order-preserving encoding (plans/keycodec.py)."""
+    ktypes = cfg.key_types or ("string",) * len(cfg.table_partition_cols)
+    offset = F.expr("CAST('9223372036854775808' AS DECIMAL(20,0))")  # 2**63
+    comps = [
+        F.lpad((F.col(c).cast("decimal(20,0)") + offset).cast("string"), 20, "0")
+        if t == "int64"
+        else F.col(c)
+        for c, t in zip(cfg.table_partition_cols, ktypes)
+    ]
+    return compose_row_key(comps, cfg.table_partition_separator)
+
+
+def _check_gc_watermark(cells_path: str, as_of, strict: bool) -> None:
+    """Time travel vs GC: a version-GC compaction drops cell versions and
+    records the newest dropped ts in the store's watermark sidecar.  An
+    as-of read bounded at or before that instant can no longer reconstruct
+    the snapshot that was live then (Bigtable has the same property: GC'd
+    cells are unreadable at any timestamp) — silent plausible-but-wrong
+    history is the worst outcome, so be loud: warn by default, raise
+    under ``strict``."""
+    from datafusion_bigtable_spark.sources.cells import (
+        _naive_datetime_to_us,
+        _us_to_naive_datetime,
+        read_gc_watermark_us,
+    )
+
+    wm = read_gc_watermark_us(cells_path)
+    if wm is None or _naive_datetime_to_us(as_of) > wm:
+        return
+    msg = (
+        f"as_of={as_of.isoformat(sep=' ')} is at or before this store's GC "
+        f"watermark {_us_to_naive_datetime(wm).isoformat(sep=' ')} — versions "
+        "live at that instant may have been garbage-collected; the snapshot "
+        "is best-effort, not exact"
+    )
+    if strict:
+        raise GCWatermarkError(msg)
+    import warnings
+
+    warnings.warn(msg, GCWatermarkWarning, stacklevel=4)

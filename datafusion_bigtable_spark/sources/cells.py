@@ -60,9 +60,10 @@ def _naive_datetime_to_us(ts: _dt.datetime) -> int:
 def encode_relational_row(cfg, d: dict) -> list[tuple]:
     """Unpivot ONE relational row (key components + ``_timestamp`` +
     qualifier columns) into canonical cells ``(row_key, family, qualifier,
-    ts, value_bytes)`` — the exact inverse of operators/decode.py, shared
-    by the DS batch writer (parquet staging) and the MutateRows transport
-    (wire mutations) so both write paths pin identical encoding semantics.
+    ts, value_bytes)`` — the exact inverse of the read kernel's decode,
+    shared by the DS batch writer (parquet staging) and the MutateRows
+    transport (wire mutations) so both write paths pin identical encoding
+    semantics.
 
     NULL column values write NO cell (round-tripping the NULL-hole pivot);
     TRAILING NULL key components round-trip stored keys that carry fewer

@@ -24,8 +24,7 @@ and used as ``spark.read.format("bigtable")``:
   pivot and typed decode (A11/A13/A15) in one Arrow kernel
   (``_pivot_partition``) — *partition-local*, because one
   row key's cells never span two key ranges.  The pruned path therefore
-  runs with ZERO shuffles, where the DataFrame-assembly path
-  (bigtable_table.py) needs one.
+  runs with ZERO shuffles.
 
 Scale: at 100 TB the cells store is written range-partitioned and sorted
 by row_key (see sources/cells.py); ``partitions()`` maps ranges to the
@@ -42,11 +41,14 @@ an UNFILTERED query planned after a key-filtered query on the SAME
 DataFrame handle silently reuses the pruned partitions and returns pruned
 results.  Use a fresh ``spark.read...load()`` per distinct predicate set
 (cheap — planning only).  The library's own surfaces (BigtableTable,
-queries registry, tests) always do.
+queries registry, tests) always do, and a ``BigtableTable.to_df`` frame
+carries an always-true ``_timestamp`` bound, so every query over it
+pushes a filter and is planned afresh.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import glob
 import os
 from dataclasses import dataclass
@@ -120,6 +122,26 @@ def _config_from_options(options) -> BigtableTableConfig:
         require_manifest=(opt("require_manifest", "false").lower() == "true"),
         key_types=key_types,
     )
+
+
+def _options_from_config(cfg: BigtableTableConfig) -> dict[str, str]:
+    """The read options that ``_config_from_options`` turns back into
+    ``cfg``.  ``project`` and ``instance`` name a service table and have
+    no option: a cells store does not use them."""
+    opts = {
+        "path": cfg.cells_path,
+        "table": cfg.table,
+        "column_family": cfg.column_family,
+        "columns": ",".join(f"{c.name}:{c.type}" for c in cfg.columns),
+        "table_partition_cols": ",".join(cfg.table_partition_cols),
+        "table_partition_separator": cfg.table_partition_separator,
+        "only_read_latest": str(cfg.only_read_latest).lower(),
+        "allow_full_scan": str(cfg.allow_full_scan).lower(),
+        "require_manifest": str(cfg.require_manifest).lower(),
+    }
+    if cfg.key_types is not None:
+        opts["key_types"] = ",".join(cfg.key_types)
+    return opts
 
 
 @dataclass
@@ -246,6 +268,13 @@ class BigtableReader(DataSourceReader):
         raw_limit = options.get("rows_limit")
         self.rows_limit = int(raw_limit) if raw_limit is not None else None
         self._limit_safe = True
+        # Time-travel read (``BigtableTable.to_df(as_of=...)``): an
+        # inclusive upper bound on the cell timestamp, applied in the scan
+        # BEFORE the kernel's latest filter in both modes — bound-then-
+        # latest is the as-of snapshot the caller asked for, not the
+        # promotion hazard the _timestamp pushdown gate below guards.
+        raw_as_of = options.get("as_of")
+        self.as_of = _dt.datetime.fromisoformat(raw_as_of) if raw_as_of else None
         # Timestamp-range pushdown (reference roadmap README.md:46-49,
         # never shipped there): conservative [lo, hi] bounds on the cell
         # timestamp, harvested from _timestamp predicates.
@@ -375,8 +404,6 @@ class BigtableReader(DataSourceReader):
         """Conservative [lo, hi] on the cell ts from `_timestamp`
         comparisons.  Strict bounds are widened to inclusive — legal under
         the Inexact contract (Spark re-applies the exact predicate above)."""
-        import datetime as _dt
-
         from datafusion_bigtable_spark.config import RESERVED_TIMESTAMP
 
         lo, hi = None, None
@@ -563,6 +590,8 @@ class BigtableReader(DataSourceReader):
         ts_range, self.ts_range = self.ts_range, None
         ts_push = ts_range is not None and not self.config.only_read_latest
         ts_lo, ts_hi = ts_range if ts_push else (None, None)
+        if self.as_of is not None:
+            ts_hi = self.as_of if ts_hi is None else min(ts_hi, self.as_of)
         value_preds, self.value_preds = self.value_preds, ()
         if self.config.only_read_latest:
             value_preds = ()  # same promotion hazard as ts — gate to unnest
@@ -630,9 +659,7 @@ class BigtableReader(DataSourceReader):
             return parts or [FilePartition(())]
         if not self.config.allow_full_scan:
             raise ComposerError("table_partition_cols: filter is not provided or not supported")
-        stats = self._file_stats()
-        if ts_push:
-            stats = [st for st in stats if self._ts_overlaps(st, ts_lo, ts_hi)]
+        stats = [st for st in self._file_stats() if self._ts_overlaps(st, ts_lo, ts_hi)]
         sizes = {st["file"]: st["bytes"] for st in stats}
         return [
             FilePartition(tuple(tuple(g) for g in part), ts_lo, ts_hi, value_preds, rows_cap)
@@ -880,8 +907,7 @@ def _pack_groups(
     ``min(cap, max(open cost, total cost / cores))``, and a partition
     closes before a group whose FILE bytes would take it past the split
     size (the open cost is added after the comparison, as Spark does).  A
-    group larger than the split size is a partition of its own.  The
-    ``cur_bytes >= max_split`` clause matters only for 0-byte files."""
+    group larger than the split size is a partition of its own."""
     total = sum(sizes[f] + _PACK_OPEN_COST_BYTES for g in groups for f in g)
     max_split = min(_PACK_MAX_BYTES, max(_PACK_OPEN_COST_BYTES, total // cores))
     parts: list[list[list[str]]] = []
@@ -889,7 +915,7 @@ def _pack_groups(
     cur_bytes = 0
     for g in groups:
         file_bytes = sum(sizes[f] for f in g)
-        if cur and (cur_bytes + file_bytes > max_split or cur_bytes >= max_split):
+        if cur and cur_bytes + file_bytes > max_split:
             parts.append(cur)
             cur, cur_bytes = [], 0
         cur.append(g)
@@ -987,7 +1013,7 @@ def _pivot_partition(cells, cfg: BigtableTableConfig):
 
     Semantics (pinned against a duckdb reference in
     tests/test_pivot_kernel.py):
-    - cells of undeclared qualifiers are dropped, like ``pivot_cells``;
+    - cells of undeclared qualifiers are dropped;
     - latest mode keeps the newest cell per (row_key, qualifier); then one
       cell per (row_key, ts, qualifier) survives.  Ties go to the LAST cell
       in input order (the reference's HashMap insertion); a NULL value is a
@@ -1193,9 +1219,9 @@ class BigtableWriter(DataSourceWriter):
     cells store: each task UNPIVOTS its relational rows (key components +
     _timestamp + qualifier columns) back into canonical cells, encodes
     values (int64 → big-endian, string → UTF-8, binary pass-through — the
-    exact inverse of operators/decode.py), sorts by row_key and stages one
-    parquet file; commit() atomically moves staged files into the store
-    and rewrites the manifest.  NULL column values write NO cell
+    exact inverse of the read kernel's decode), sorts by row_key and
+    stages one parquet file; commit() atomically moves staged files into
+    the store and rewrites the manifest.  NULL column values write NO cell
     (round-tripping the NULL-hole pivot semantics).
 
     Scale: one file per task, sorted within; cross-task key overlap is
@@ -1550,7 +1576,13 @@ class BigtableDataSource(DataSource):
 
     Options: path, column_family, columns ("name:type,..."),
     table_partition_cols ("a,b,c"), table_partition_separator,
-    only_read_latest, allow_full_scan, rows_limit.
+    only_read_latest, allow_full_scan, rows_limit, as_of.
+
+    as_of (an ISO datetime, naive) reads the store as of that instant:
+    cells newer than it are dropped in the scan, before the latest-version
+    filter, so each cell shows its newest version at or before as_of.  A
+    ``_timestamp`` bound in the query still filters afterwards, exactly as
+    without as_of.
 
     rows_limit caps each partition's scan output and abandons the parquet
     batch stream early; pair it with ``df.limit(n)``.  It is honored ONLY

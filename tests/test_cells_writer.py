@@ -5,9 +5,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datafusion_bigtable_spark.operators.decode import encode_int64_be
 from datafusion_bigtable_spark.operators.pivot import compose_row_key
 from datafusion_bigtable_spark.sources.cells import cells_from_long_df, write_cells
+
+
+def encode_int64_be(col):
+    """LongType → 8-byte big-endian binary, the store's int64 value
+    encoding.  unhex(lpad(hex(x))) is exact for the full signed range
+    because hex() of a negative long is its 16-digit two's-complement
+    form."""
+    return F.unhex(F.lpad(F.hex(col), 16, "0"))
 
 
 def test_roundtrip_events_through_cells_store(spark, sf_dir, tmp_path):

@@ -553,3 +553,43 @@ def test_spark_scan_cache_canary(registered, cells_path):
         f"unfiltered re-query returned {stale} rows — the upstream scan-cache "
         "bug appears FIXED; retire the ScanReuseWarning workaround"
     )
+
+
+def test_to_df_frame_requeried_without_a_where_is_not_stale(spark, composite_config):
+    """Unlike a bare load() handle (the canary above), a to_df frame may be
+    queried with a key WHERE and then without one: the second query still
+    sees every row."""
+    from datafusion_bigtable_spark.sources.bigtable_table import BigtableTable
+
+    df = BigtableTable(composite_config).to_df(spark)
+    key = "region = 'us-west2' AND balloon_id = '3698' AND event_minute = '2021-03-05-1200'"
+    assert df.filter(key).count() == 1
+    assert df.count() == 5
+
+
+def test_options_from_config_round_trips(simple_config, composite_config):
+    import dataclasses
+
+    from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
+
+    configs = [
+        simple_config,
+        composite_config,
+        dataclasses.replace(composite_config, only_read_latest=False),
+        dataclasses.replace(
+            composite_config,
+            table_partition_separator="||",
+            allow_full_scan=False,
+            require_manifest=True,
+        ),
+        BigtableTableConfig(
+            table="ints",
+            column_family="f",
+            columns=(ColumnSpec("v", "string"), ColumnSpec("n", "int64")),
+            table_partition_cols=("tenant", "seq"),
+            key_types=("int64", "int64"),
+            cells_path="ints_store",
+        ),
+    ]
+    for cfg in configs:
+        assert bt_ds._config_from_options(bt_ds._options_from_config(cfg)) == cfg

@@ -56,7 +56,7 @@ def test_write_encodes_cells_exactly(registered, cells_path, tmp_path):
     files = glob.glob(os.path.join(dest, "*.parquet"))
     cells = pq.read_table(files).to_pylist()
     by_kq = {(c["row_key"], c["qualifier"]): c["value"] for c in cells}
-    # big-endian int64 + utf-8, the inverse of operators/decode.py
+    # big-endian int64 + utf-8, the inverse of the read kernel's decode
     assert by_kq[("us-west2#3698#2021-03-05-1200", "pressure")] == (94558).to_bytes(8, "big", signed=True)
     assert by_kq[("us-west2#3698#2021-03-05-1200", "temperature")] == b"9.6"
     # within-file ordering: sorted by row_key (reader's streaming contract)
@@ -171,16 +171,12 @@ def test_pack_groups_keeps_groups_whole_and_in_order():
 
 
 def test_pack_groups_splits_at_the_cap():
-    from datafusion_bigtable_spark.sources.datasource import (
-        _PACK_MAX_BYTES,
-        _PACK_OPEN_COST_BYTES,
-        _pack_groups,
-    )
+    from datafusion_bigtable_spark.sources.datasource import _pack_groups
 
-    # every file costs exactly a 32nd of the cap: 32 fill one partition
-    size = _PACK_MAX_BYTES // 32 - _PACK_OPEN_COST_BYTES
+    # every file costs 1 byte plus the open cost (a 32nd of the cap): 32
+    # fill one partition
     groups = [[f"f{i:02d}"] for i in range(33)]
-    sizes = {g[0]: size for g in groups}
+    sizes = {g[0]: 1 for g in groups}
     assert [len(p) for p in _pack_groups(groups[:32], sizes)] == [32]
     parts = _pack_groups(groups, sizes)
     assert [len(p) for p in parts] == [32, 1]

@@ -272,20 +272,20 @@ def test_value_regex_filter_in_service():
     assert got == {"k1", "k3"}  # unanchored byte-level RE2, non-UTF8 safe
 
 
-def test_asof_time_travel_parquet_and_service(spark, tmp_path):
-    """to_df(as_of=T) returns the latest version at-or-before T — via the
-    parquet path (scan-level ts bound) AND the service path (chain's
-    timestamp_range_filter BEFORE the cells-per-column limit), identically."""
+_AS_OF_T0 = dt.datetime(2021, 1, 1, 0, 0, 0)
+_AS_OF_T1 = dt.datetime(2021, 1, 1, 0, 0, 10)
+_AS_OF_T2 = dt.datetime(2021, 1, 1, 0, 0, 20)
+
+
+def _asof_store(tmp_path) -> str:
+    """One row key: p written at T0 (100) and T2 (102), t at T1 ("warm")."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    T0 = dt.datetime(2021, 1, 1, 0, 0, 0)
-    T1 = dt.datetime(2021, 1, 1, 0, 0, 10)
-    T2 = dt.datetime(2021, 1, 1, 0, 0, 20)
     rows = [
-        ("k1", "f", "p", T0, (100).to_bytes(8, "big", signed=True)),
-        ("k1", "f", "p", T2, (102).to_bytes(8, "big", signed=True)),
-        ("k1", "f", "t", T1, b"warm"),
+        ("k1", "f", "p", _AS_OF_T0, (100).to_bytes(8, "big", signed=True)),
+        ("k1", "f", "p", _AS_OF_T2, (102).to_bytes(8, "big", signed=True)),
+        ("k1", "f", "t", _AS_OF_T1, b"warm"),
     ]
     path = str(tmp_path / "asof_cells.parquet")
     pq.write_table(
@@ -300,6 +300,15 @@ def test_asof_time_travel_parquet_and_service(spark, tmp_path):
         ),
         path,
     )
+    return path
+
+
+def test_asof_time_travel_parquet_and_service(spark, tmp_path):
+    """to_df(as_of=T) returns the latest version at-or-before T — via the
+    parquet path (scan-level ts bound) AND the service path (chain's
+    timestamp_range_filter BEFORE the cells-per-column limit), identically."""
+    T0, T1, T2 = _AS_OF_T0, _AS_OF_T1, _AS_OF_T2
+    path = _asof_store(tmp_path)
     cfg = BigtableTableConfig(
         table="t",
         column_family="f",
@@ -329,6 +338,42 @@ def test_asof_time_travel_parquet_and_service(spark, tmp_path):
         assert snap(table, T2) == {("k1", T2): (102, None), ("k1", T1): (None, "warm")}
     # inclusive bound at exactly T0
     assert snap(parquet_table, T0) == {("k1", T0): (100, None)}
+
+
+def test_asof_option_bounds_before_latest_and_where_after(spark, tmp_path):
+    """The Data Source's ``as_of`` read option is bound-then-latest, while
+    a ``_timestamp`` WHERE on the same latest-mode read stays
+    latest-then-filter."""
+    from datafusion_bigtable_spark.sources import datasource as bt_ds
+
+    T0, T1, T2 = _AS_OF_T0, _AS_OF_T1, _AS_OF_T2
+    path = _asof_store(tmp_path)
+    bt_ds.register(spark)
+
+    def read(as_of, where):
+        df = (
+            spark.read.format("bigtable")
+            .option("path", path)
+            .option("column_family", "f")
+            .option("columns", "p:int64,t:string")
+            .option("allow_full_scan", "true")
+            .option("as_of", as_of.isoformat(sep=" "))
+            .load()
+            .filter(where)
+        )
+        return {(r._row_key, r._timestamp): (r.p, r.t) for r in df.collect()}
+
+    # as_of T1 hides p@T2, so p's latest is its T0 version, which the
+    # WHERE then keeps (bounding after the latest filter would hide p)
+    assert read(T1, f"_timestamp < '{T1}'") == {("k1", T0): (100, None)}
+    # the WHERE is not a second as_of: with as_of past T2, p's latest is
+    # T2, and "_timestamp <= T1" leaves t's row only, never resurrecting p@T0
+    assert read(T2, f"_timestamp <= '{T1}'") == {("k1", T1): (None, "warm")}
+    # and as_of alone at T1 is the snapshot to_df(as_of=T1) returns
+    assert read(T1, f"_timestamp <= '{T2}'") == {
+        ("k1", T0): (100, None),
+        ("k1", T1): (None, "warm"),
+    }
 
 
 def test_asof_chain_order_in_request():
@@ -496,6 +541,66 @@ def test_rows_limit_with_value_filters_is_exact(spark, composite_config, cells_p
     assert sorted(map(tuple, capped.collect())) == all_match[:2]
 
 
+def test_rows_limit_counts_rows_matching_a_not_between(spark, composite_config, cells_path):
+    """NOT BETWEEN composes to two closed complement ranges, so the
+    boundary keys are read and then fail the re-applied predicate: a cap
+    taken in the request would count them.  Both transports must return
+    the first two MATCHING rows, also for a table that refuses full scans
+    (the Data Source never sees the NOT BETWEEN)."""
+    preds = [
+        Eq("region", "us-west2"),
+        Eq("balloon_id", "3698"),
+        Between("event_minute", "2021-03-05-1201", "2021-03-05-1203", negated=True),
+    ]
+    cfg = dataclasses.replace(composite_config, allow_full_scan=False)
+    svc_cfg = dataclasses.replace(cfg, cells_path=None)
+    for table in (
+        BigtableTable(cfg),
+        BigtableTable(svc_cfg, service=service_from_parquet(cells_path)),
+    ):
+        got = table.to_df(spark, predicates=preds, rows_limit=2).collect()
+        assert sorted(r.event_minute for r in got) == ["2021-03-05-1200", "2021-03-05-1204"]
+
+
+def test_rows_limit_orders_by_the_raw_row_key(spark, tmp_path):
+    """The cap takes the first rows in STORED key order: '!' sorts below
+    the '#' separator, so "a!#..." precedes "a#...", although ("a!", n)
+    sorts after ("a", n) as a tuple; int64 components order by their
+    fixed-width encoding (9 before 10), not by their decimal text."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_bigtable_spark.plans.keycodec import encode_int_key
+
+    keys = sorted(f"{s}#{encode_int_key(n)}" for s, n in (("a!", 10), ("a", 10), ("a", 9)))
+    path = str(tmp_path / "raw_order_cells.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "row_key": keys,
+                "family": ["f"] * 3,
+                "qualifier": ["v"] * 3,
+                "ts": pa.array([dt.datetime(2024, 1, 1)] * 3, pa.timestamp("us")),
+                "value": pa.array([b"x"] * 3, pa.binary()),
+            }
+        ),
+        path,
+    )
+    cfg = BigtableTableConfig(
+        table="t",
+        column_family="f",
+        columns=(ColumnSpec("v", "string"),),
+        table_partition_cols=("s", "n"),
+        key_types=("string", "int64"),
+        cells_path=path,
+        allow_full_scan=True,
+    )
+    svc_cfg = dataclasses.replace(cfg, cells_path=None)
+    for table in (BigtableTable(cfg), BigtableTable(svc_cfg, service=service_from_parquet(path))):
+        got = table.to_df(spark, rows_limit=2).collect()
+        assert sorted((r.s, r.n) for r in got) == [("a", 9), ("a!", 10)]
+
+
 def test_rows_limit_ignored_for_version_unnest(spark, composite_config, cells_path):
     import warnings as _w
 
@@ -509,10 +614,3 @@ def test_rows_limit_ignored_for_version_unnest(spark, composite_config, cells_pa
         n = df.count()
     assert any("rows_limit ignored" in str(r.message) for r in rec)
     assert n > 1  # uncapped
-
-
-def test_cells_rows_limit_rejected_on_parquet_path(spark, composite_config):
-    import pytest
-
-    with pytest.raises(ValueError, match="service transport only"):
-        BigtableTable(composite_config).cells(spark, rows_limit=2)

@@ -40,15 +40,15 @@ def test_extremes_and_range_guard():
         encode_int_key(2**63)
 
 
-def test_decode_column_matches_python(spark):
-    from pyspark.sql import functions as F
+def test_decode_column_matches_python():
+    # the scan kernel's column decode (datasource._decode_int_keys)
+    import pyarrow as pa
 
-    from datafusion_bigtable_spark.plans.keycodec import decode_int_key_column
+    from datafusion_bigtable_spark.sources.datasource import _decode_int_keys
 
     vals = [-(2**63), -1, 0, 1, 42, 2**63 - 1]
-    df = spark.createDataFrame([(encode_int_key(v),) for v in vals], "e string")
-    got = [r.d for r in df.select(decode_int_key_column(F.col("e")).alias("d")).collect()]
-    assert got == vals
+    got = _decode_int_keys(pa.array([encode_int_key(v) for v in vals])).to_pylist()
+    assert got == [decode_int_key(encode_int_key(v)) for v in vals] == vals
 
 
 def test_int_keyed_datasource_roundtrip_and_pruning(spark, tmp_path):
@@ -144,7 +144,7 @@ def test_int_keyed_bigtable_table_path(spark, tmp_path):
 def test_malformed_int_key_component_yields_null(spark, tmp_path):
     """Review finding (reproduced pre-fix): under default ANSI mode the
     decode cast THREW on a malformed component instead of the documented
-    NULL (operators/decode.py stance).  Both scan paths must yield NULL."""
+    NULL (NULL-for-malformed stance).  The scan must yield NULL."""
     import datetime as dt
 
     import pyarrow as pa
@@ -184,11 +184,3 @@ def test_malformed_int_key_component_yields_null(spark, tmp_path):
     )
     got = {r.v: r.seq for r in df.collect()}
     assert got == {"ok": 7, "bad": None}
-
-    # DataFrame decode path too
-    from pyspark.sql import functions as F
-
-    from datafusion_bigtable_spark.plans.keycodec import decode_int_key_column
-
-    bad = spark.createDataFrame([("nope",)], "e string")
-    assert bad.select(decode_int_key_column(F.col("e")).alias("d")).collect()[0].d is None

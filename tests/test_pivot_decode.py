@@ -1,19 +1,24 @@
-"""Unit tests for the wide-column structural operators and decoders."""
+"""Unit tests for the wide-column structural operators and for the scan
+kernel's pivot and value decode (sources/datasource.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
+import pyarrow as pa
 
-from datafusion_bigtable_spark.operators.decode import decode_int64_be, encode_int64_be
+from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
 from datafusion_bigtable_spark.operators.pivot import (
     compose_row_key,
     latest_cells,
-    pivot_cells,
     split_row_key,
 )
 from datafusion_bigtable_spark.sources.cells import CELLS_SCHEMA
+from datafusion_bigtable_spark.sources.datasource import (
+    _cells_table,
+    _decode_be_int64,
+    _pivot_partition,
+)
 
 
 def _cells(spark, rows):
@@ -24,27 +29,32 @@ T0 = dt.datetime(2021, 1, 1, 0, 0, 0)
 T1 = dt.datetime(2021, 1, 1, 0, 0, 1)
 
 
-def test_decode_int64_be_roundtrip(spark):
-    # Full signed range incl. negatives and boundaries — the reference's
-    # BigEndian::read_i64 equivalent (src/execute_plan.rs:287-293), kept
-    # JVM-side: encode via hex/lpad/unhex, decode via conv + two's complement.
-    values = [0, 1, -1, 94558, -94558, 2**63 - 1, -(2**63), 42, -(2**31) - 7]
-    df = spark.createDataFrame([(v,) for v in values], "v long")
-    out = (
-        df.withColumn("enc", encode_int64_be(F.col("v")))
-        .withColumn("dec", decode_int64_be(F.col("enc")))
-        .select("v", "dec", F.length("enc").alias("n"))
-        .collect()
+def _pivot(cells, qualifiers, latest=True):
+    """Pivot ``(row_key, qualifier, ts, value)`` cells through the scan
+    kernel, string-typed qualifier columns, one ``_row_key`` component."""
+    cfg = BigtableTableConfig(
+        table="t",
+        column_family="f",
+        columns=tuple(ColumnSpec(q, "string") for q in qualifiers),
+        only_read_latest=latest,
     )
-    for r in out:
-        assert r.n == 8
-        assert r.dec == r.v
+    us = [(ts - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1) for _, _, ts, _ in cells]
+    table = _cells_table([c[0] for c in cells], [c[1] for c in cells], us, [c[3] for c in cells])
+    return [row for batch in _pivot_partition(table, cfg) for row in batch.to_pylist()]
 
 
-def test_decode_int64_be_bad_length_is_null(spark):
-    df = spark.createDataFrame([(b"",), (b"\x01\x02",), (None,)], "v binary")
-    out = df.select(decode_int64_be(F.col("v")).alias("d")).collect()
-    assert [r.d for r in out] == [None, None, None]
+def test_decode_int64_be_roundtrip():
+    # Full signed range incl. negatives and boundaries — the reference's
+    # BigEndian::read_i64 equivalent (src/execute_plan.rs:287-293), read
+    # straight from the Arrow value buffer.
+    values = [0, 1, -1, 94558, -94558, 2**63 - 1, -(2**63), 42, -(2**31) - 7]
+    raw = pa.array([v.to_bytes(8, "big", signed=True) for v in values], pa.large_binary())
+    assert _decode_be_int64(raw).to_pylist() == values
+
+
+def test_decode_int64_be_bad_length_is_null():
+    raw = pa.array([b"", b"\x01\x02", None], pa.large_binary())
+    assert _decode_be_int64(raw).to_pylist() == [None, None, None]
 
 
 def test_latest_cells_per_column(spark):
@@ -62,29 +72,20 @@ def test_latest_cells_per_column(spark):
     assert out == {("p", T1): b"new", ("t", T0): b"t0"}
 
 
-def test_pivot_one_row_per_key_ts(spark):
+def test_pivot_one_row_per_key_ts():
     # Versioned cells → one output row per (row_key, ts) with NULL holes
     # (src/execute_plan.rs:223-271; NULL not empty-bytes, SURVEY §1.3).
-    df = _cells(
-        spark,
-        [
-            ("k", "f", "p", T0, b"p0"),
-            ("k", "f", "p", T1, b"p1"),
-            ("k", "f", "t", T0, b"t0"),
-        ],
-    )
-    out = pivot_cells(df, ["p", "t"]).orderBy("_timestamp").collect()
-    assert [(r._timestamp, r.p, r.t) for r in out] == [
-        (T0, b"p0", b"t0"),
-        (T1, b"p1", None),
+    cells = [("k", "p", T0, b"p0"), ("k", "p", T1, b"p1"), ("k", "t", T0, b"t0")]
+    out = _pivot(cells, ["p", "t"], latest=False)
+    assert [(r["_timestamp"], r["p"], r["t"]) for r in out] == [
+        (T0, "p0", "t0"),
+        (T1, "p1", None),
     ]
 
 
-def test_pivot_prunes_undeclared_qualifiers(spark):
-    df = _cells(spark, [("k", "f", "p", T0, b"x"), ("k", "f", "zz", T0, b"y")])
-    out = pivot_cells(df, ["p"]).collect()
-    assert len(out) == 1
-    assert out[0].asDict() == {"row_key": "k", "_timestamp": T0, "p": b"x"}
+def test_pivot_prunes_undeclared_qualifiers():
+    out = _pivot([("k", "p", T0, b"x"), ("k", "zz", T0, b"y")], ["p"])
+    assert out == [{"_row_key": "k", "_timestamp": T0, "p": "x"}]
 
 
 def test_split_and_compose_row_key(spark):
@@ -103,24 +104,13 @@ def test_split_preserves_trailing_empty(spark):
     assert (out.x, out.y, out.z) == ("a", "", "")
 
 
-def test_pivot_regex_metachar_qualifiers(spark):
+def test_pivot_regex_metachar_qualifiers():
     # A9 quirk NOT replicated: the reference's ColumnQualifierRegexFilter
     # joins names with '|' so a qualifier like 'a.b' over-matches 'axb'.
     # Our declared-list pruning must match exactly.
-    df = _cells(
-        spark,
-        [
-            ("k", "f", "a.b", T0, b"dot"),
-            ("k", "f", "axb", T0, b"x"),
-            ("k", "f", "a|b", T0, b"pipe"),
-        ],
-    )
-    out = pivot_cells(df, ["a.b", "a|b"]).collect()
-    assert len(out) == 1
-    row = out[0].asDict()
-    assert row["a.b"] == bytearray(b"dot") or row["a.b"] == b"dot"
-    assert row["a|b"] == bytearray(b"pipe") or row["a|b"] == b"pipe"
-    assert "axb" not in row
+    cells = [("k", "a.b", T0, b"dot"), ("k", "axb", T0, b"x"), ("k", "a|b", T0, b"pipe")]
+    out = _pivot(cells, ["a.b", "a|b"])
+    assert out == [{"_row_key": "k", "_timestamp": T0, "a.b": "dot", "a|b": "pipe"}]
 
 
 def test_pandas_pivot_multichar_separator_parity():
@@ -129,13 +119,6 @@ def test_pandas_pivot_multichar_separator_parity():
     # exploded every key char-by-char — inconsistent with split_row_key,
     # which re.escape()s.  Both paths must split literally; the Arrow
     # kernel that replaced the pandas pivot keeps the pin.
-    import datetime as dt
-
-    import pyarrow as pa
-
-    from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
-    from datafusion_bigtable_spark.sources.datasource import _pivot_partition
-
     cfg = BigtableTableConfig(
         table="t",
         column_family="f",
@@ -163,8 +146,6 @@ def test_pandas_pivot_multichar_separator_parity():
 def test_schema_tail_key_components_nullable():
     # ADVICE r1: tail key components ARE emitted as NULL for short keys, so
     # declaring them non-nullable could let Catalyst mis-prune IsNotNull.
-    from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
-
     cfg = BigtableTableConfig(
         table="t",
         column_family="f",

@@ -107,11 +107,11 @@ def test_curation_gate_materialized_once(spark, sf_dir):
     assert "documents.parquet" not in plan, "accounting branch re-scans raw documents"
 
 
-def test_bt_pivot_partial_final_around_one_exchange(spark, composite_config):
-    # the connector's assembly contract (bigtable_table.py module doc):
-    # cells → latest filter → pivot is ONE shuffle, with the pivot's
-    # aggregate combining partially below the exchange — at 100 TB the
-    # cells never move twice
+def test_bt_to_df_is_the_bigtable_scan_with_no_exchange(spark, composite_config):
+    # the connector's assembly contract (bigtable_table.py module doc): a
+    # key-pruned to_df is the bigtable Python data source's scan, whose
+    # tasks filter, pivot and decode their own key ranges — at 100 TB the
+    # cells never move
     from datafusion_bigtable_spark.plans.composer import Between, Eq, In
     from datafusion_bigtable_spark.sources.bigtable_table import BigtableTable
 
@@ -124,14 +124,8 @@ def test_bt_pivot_partial_final_around_one_exchange(spark, composite_config):
         ],
     )
     plan = _plan(spark, df)
-    assert plan.count("Exchange") == 1, f"pivot should shuffle once:\n{plan}"
-    # both window and pivot sit ABOVE the single row_key exchange (earlier
-    # in the top-down plan string); the pivot still pre-merges partially
-    assert "partial_" in plan and plan.index("partial_") < plan.index("Exchange")
-    assert "Window" in plan and plan.index("Window") < plan.index("Exchange")
-    # the qualifier projection reaches the parquet scan
-    fmt = _plan(spark, df, "formatted")
-    assert "PushedFilters" in fmt and "In(qualifier" in fmt
+    assert "Exchange" not in plan, f"to_df should not shuffle:\n{plan}"
+    assert "BatchScan bigtable" in plan and "(Python)" in plan, plan
 
 
 def test_decontaminate_broadcasts_benchmark_shingles(spark, sf_dir):
