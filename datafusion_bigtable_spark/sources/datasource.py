@@ -18,13 +18,19 @@ and used as ``spark.read.format("bigtable")``:
   partition per core for a small store, partitions of up to 128 MiB for
   a large one (``FilePartition``).
 - ``read()``       — per-partition: pyarrow scan of the cells parquet with
-  family/key-range/qualifier predicates pushed into the parquet reader
-  (the stand-in for the gRPC ``ReadRowsRequest`` + RowFilter chain,
-  execute_plan.rs:168-183), then the latest-version filter, cell→row
-  pivot and typed decode (A11/A13/A15) in one Arrow kernel
-  (``_pivot_partition``) — *partition-local*, because one
-  row key's cells never span two key ranges.  The pruned path therefore
-  runs with ZERO shuffles.
+  key-range/ts/value predicates pushed into the parquet reader (the
+  stand-in for the gRPC ``ReadRowsRequest`` + RowFilter chain,
+  execute_plan.rs:168-183); the family is masked only where footer
+  statistics do not prove a file holds the configured family alone, and
+  undeclared qualifiers are dropped by the kernel.  Then the
+  latest-version filter, cell→row pivot and typed decode (A11/A13/A15)
+  in one Arrow kernel (``_pivot_partition``) — *partition-local*,
+  because one row key's cells never span two key ranges.  The pruned
+  path therefore runs with ZERO shuffles.  A partition's key-sorted
+  files stream as one ordered Arrow stream, so an executor holds what
+  pyarrow's scanner reads ahead (by default 16 batches in each of up to
+  4 files) plus the chunk being pivoted, never the partition; a group
+  the footers cannot prove key-sorted is materialised whole.
 
 Scale: at 100 TB the cells store is written range-partitioned and sorted
 by row_key (see sources/cells.py); ``partitions()`` maps ranges to the
@@ -205,7 +211,13 @@ class FilePartition(InputPartition):
     tasks.  Only "one task per core" pays on a small store: on a 3.3 MB,
     8-file store at local[2], 2 partitions beat 1 by ~25%, 4 tied 1 and
     8 lost to it (README, "Scale posture").  A reader built without a
-    core count plans as ``cores=1``: one task up to 128 MiB."""
+    core count plans as ``cores=1``: one task up to 128 MiB.
+
+    Memory: the task reads its key-sorted groups as one ordered Arrow
+    stream, so it holds what pyarrow's scanner reads ahead (by default
+    up to 16 batches of ≤ 65536 cells in each of up to 4 files), one
+    pending chunk and the one being pivoted — not the partition's 128 MiB.
+    A group whose files overlap is materialised whole (see ``_scan``)."""
 
     groups: tuple
     ts_lo: object = None
@@ -636,7 +648,7 @@ class BigtableReader(DataSourceReader):
             # or two files per range regardless of store size.  Ts bounds
             # prune further and travel with the partition for row-group-
             # level pruning in the scan.
-            stats = self._file_stats()
+            stats = _drop_empty_files(self._file_stats())
             parts = []
             for r in ranges:
                 files = [
@@ -659,7 +671,9 @@ class BigtableReader(DataSourceReader):
             return parts or [FilePartition(())]
         if not self.config.allow_full_scan:
             raise ComposerError("table_partition_cols: filter is not provided or not supported")
-        stats = [st for st in self._file_stats() if self._ts_overlaps(st, ts_lo, ts_hi)]
+        stats = [
+            st for st in _drop_empty_files(self._file_stats()) if self._ts_overlaps(st, ts_lo, ts_hi)
+        ]
         sizes = {st["file"]: st["bytes"] for st in stats}
         return [
             FilePartition(tuple(tuple(g) for g in part), ts_lo, ts_hi, value_preds, rows_cap)
@@ -745,67 +759,66 @@ class BigtableReader(DataSourceReader):
         import pyarrow.dataset as pa_ds
 
         cfg = self.config
-        flt = pa_ds.field("family") == cfg.column_family
-        flt = flt & pa_ds.field("qualifier").isin(list(cfg.qualifiers))
+        # No family/qualifier predicate per cell: the kernel drops
+        # undeclared qualifiers, and the family is masked only in a run
+        # whose footers do not prove that it holds the family alone
+        flt = None
         # ts bounds are only ever attached when pushdown is gated-safe
         if getattr(partition, "ts_lo", None) is not None:
-            flt = flt & (pa_ds.field("ts") >= partition.ts_lo)
+            flt = _and(flt, pa_ds.field("ts") >= partition.ts_lo)
         if getattr(partition, "ts_hi", None) is not None:
-            flt = flt & (pa_ds.field("ts") <= partition.ts_hi)
+            flt = _and(flt, pa_ds.field("ts") <= partition.ts_hi)
         specs = {s.name: s.type for s in cfg.columns}
         for col, op, v in getattr(partition, "value_preds", ()):
             # cells of OTHER qualifiers always pass; only the filter
             # column's cells are constrained (see _value_predicates)
-            flt = flt & (
-                (pa_ds.field("qualifier") != col) | self._value_expr(pa_ds, specs[col], op, v)
+            flt = _and(
+                flt, (pa_ds.field("qualifier") != col) | self._value_expr(pa_ds, specs[col], op, v)
             )
         if isinstance(partition, RangePartition):
-            flt = flt & (pa_ds.field("row_key") >= partition.start)
-            flt = flt & (pa_ds.field("row_key") <= partition.end)
+            flt = _and(flt, pa_ds.field("row_key") >= partition.start)
+            flt = _and(flt, pa_ds.field("row_key") <= partition.end)
             groups = [list(partition.files)]
         else:
             groups = [list(g) for g in partition.groups]
 
-        # The groups are key-disjoint and in key order, so they stream one
-        # after another through one carry: the cells of the last (possibly
-        # incomplete) row key seen so far, an Arrow slice that joins the
-        # next chunk.  A group whose files stream in key order (every
-        # write_cells store) is pivoted batch by batch: an executor holds
-        # one Arrow batch plus one row key's cells, never the partition.
-        # A group that footer statistics cannot prove key-sorted (missing
-        # stats, overlapping row groups or files) is materialised whole —
-        # correct for any layout, memory-bounded by the group.
-        carry = None
-        emitted = False
-        for files in groups:
-            ordered = _key_sorted_order(files)
-            if ordered is None:
-                dataset = pa_ds.dataset(files, format="parquet")
-                chunks = [dataset.to_table(columns=CELL_COLUMNS, filter=flt)]
-            else:
-                dataset = pa_ds.dataset(ordered, format="parquet")
+        # The groups are key-disjoint and in key order.  Consecutive groups
+        # whose files stream in key order (every write_cells store) are
+        # read as ONE ordered Arrow stream; a group the footers cannot
+        # prove key-sorted (missing stats, overlapping row groups or
+        # files) is materialised whole — correct for any layout,
+        # memory-bounded by the group.  Chunks pass through one pending
+        # chunk, read but not yet pivoted: when the next chunk arrives, a
+        # streamed pending chunk is pivoted up to its trailing key run,
+        # whose cells may go on in the next chunk and join it; a
+        # materialised one is complete.  The last one is pivoted whole.
+        # A streamed run holds what pyarrow's scanner reads ahead (by
+        # default 16 batches in each of up to 4 files), the pending chunk
+        # and the one being pivoted — never the partition.
+        pending, streamed = None, False
+        for files, ordered, family_only in _scan_runs(groups, cfg.column_family):
+            run_flt = flt if family_only else _and(flt, pa_ds.field("family") == cfg.column_family)
+            dataset = pa_ds.dataset(files, format="parquet")
+            if ordered:
                 chunks = (
                     pa.Table.from_batches([b])
-                    for b in dataset.to_batches(columns=CELL_COLUMNS, filter=flt, batch_size=65536)
+                    for b in dataset.to_batches(columns=CELL_COLUMNS, filter=run_flt, batch_size=65536)
                 )
+            else:
+                chunks = [dataset.to_table(columns=CELL_COLUMNS, filter=run_flt)]
             for cells in chunks:
                 if cells.num_rows == 0:
                     continue
-                if carry is not None:
-                    cells = pa.concat_tables([carry, cells])
-                # a materialised chunk is complete; a streamed one is cut
-                # before its trailing key run
-                keys = cells["row_key"]
-                cut = cells.num_rows if ordered is None else pc.index(keys, keys[-1]).as_py()
-                carry = cells.slice(cut) if cut < cells.num_rows else None
-                if cut:
-                    emitted = True
-                    yield from _pivot_partition(cells.slice(0, cut), cfg)
-        if carry is not None:
-            yield from _pivot_partition(carry, cfg)
-        elif not emitted:
-            # no rows at all: emit one empty batch for a stable schema
-            yield from _pivot_partition(_cells_table(), cfg)
+                if pending is not None:
+                    keys = pending["row_key"]
+                    cut = pc.index(keys, keys[-1]).as_py() if streamed else pending.num_rows
+                    if cut:
+                        yield from _pivot_partition(pending.slice(0, cut), cfg)
+                    if cut < pending.num_rows:
+                        cells = pa.concat_tables([pending.slice(cut), cells])
+                pending, streamed = cells, ordered
+        # no rows at all: one empty batch for a stable schema
+        yield from _pivot_partition(_cells_table() if pending is None else pending, cfg)
 
     def _wire_scan(self, partition: WireRangePartition) -> Iterator:
         """Executor-side ReadRows over the wire for one shard: this task
@@ -925,42 +938,97 @@ def _pack_groups(
     return parts
 
 
-def _key_sorted_order(files: list[str]):
-    """Return the files ordered by key range if footer statistics PROVE the
-    whole scan streams in non-decreasing row_key order (row groups sorted
-    and non-overlapping within each file; files pairwise disjoint).
-    Returns None when that cannot be proven — callers must materialize."""
+def _drop_empty_files(stats: list[dict]) -> list[dict]:
+    """``stats`` without the files that hold no cells.  Such a file has no
+    key statistics (an empty append leaves a part file with 0 rows), so it
+    would merge every group into one; only a file the stats leave without
+    keys has its footer opened."""
     import pyarrow.parquet as pq
 
-    spans = []
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
-        idx = next(
-            (i for i in range(meta.num_columns)
-             if meta.row_group(0).column(i).path_in_schema == "row_key"),
-            None,
-        )
-        if idx is None:
-            return None
-        prev_max = None
-        fmin = fmax = None
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None
+    return [
+        st
+        for st in stats
+        if st["min_key"] is not None or pq.ParquetFile(st["file"]).metadata.num_rows
+    ]
+
+
+def _file_facts(path: str, family: str):
+    """What one file's footer proves, or None for a file with no rows:
+    ``(span, family_only)``, where ``span`` is the file's (min, max)
+    row_key when its row groups are key-sorted and non-overlapping (None
+    when the statistics cannot prove it), and ``family_only`` is True
+    when the statistics show every cell in column family ``family``."""
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    if meta.num_rows == 0:
+        return None
+    names = [meta.schema.column(i).path for i in range(meta.num_columns)]
+    key_at = names.index("row_key") if "row_key" in names else None
+    fam_at = names.index("family") if "family" in names else None
+    span: tuple | None = None
+    family_only = fam_at is not None
+    keys_ok = key_at is not None
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        if family_only:
+            st = rg.column(fam_at).statistics
+            family_only = (
+                st is not None and st.has_min_max and st.has_null_count
+                and st.null_count == 0 and st.min == st.max == family
+            )
+        if keys_ok:
+            st = rg.column(key_at).statistics
             # equality allowed: a key may span adjacent row groups; the
             # carry-over handles contiguous boundaries
-            if prev_max is not None and st.min < prev_max:
-                return None
-            prev_max = st.max
-            fmin = st.min if fmin is None else fmin
-            fmax = st.max
-        spans.append((fmin, fmax, f))
-    spans.sort()
-    for (_, e1, _), (s2, _, _) in zip(spans, spans[1:]):
+            keys_ok = st is not None and st.has_min_max and (span is None or st.min >= span[1])
+            if keys_ok:
+                span = (st.min if span is None else span[0], st.max)
+    return (span if keys_ok else None), family_only
+
+
+def _key_sorted_order(spans: list[tuple]):
+    """Given ``(span, file)`` pairs, return the files ordered by key range
+    if the spans PROVE the files stream in non-decreasing row_key order
+    (every span known; files pairwise disjoint but for a shared boundary
+    key).  Returns None when that cannot be proven — callers must
+    materialise."""
+    if any(span is None for span, _ in spans):
+        return None
+    spans = sorted(spans)
+    for ((_, e1), _), ((s2, _), _) in zip(spans, spans[1:]):
         if s2 < e1:  # files overlap → interleaved keys across fragments
             return None
-    return [f for _, _, f in spans]
+    return [f for _, f in spans]
+
+
+def _scan_runs(groups: list[list[str]], family: str) -> list[list]:
+    """Split a partition's key-disjoint groups (in key order) into read
+    runs ``[files, ordered, family_only]``: consecutive groups that each
+    stream in key order join ONE ordered run; a group that cannot be
+    proven key-sorted is a run of its own, to be materialised.  Files
+    without rows are skipped.  Each file's footer is read once."""
+    runs: list[list] = []
+    for group in groups:
+        facts = [(f, _file_facts(f, family)) for f in group]
+        facts = [(f, x) for f, x in facts if x is not None]
+        if not facts:
+            continue
+        ordered = _key_sorted_order([(span, f) for f, (span, _) in facts])
+        family_only = all(fam for _, (_, fam) in facts)
+        if ordered is not None and runs and runs[-1][1]:
+            runs[-1][0] += ordered
+            runs[-1][2] = runs[-1][2] and family_only
+        else:
+            runs.append([ordered or [f for f, _ in facts], ordered is not None, family_only])
+    return runs
+
+
+def _and(a, b):
+    """Conjunction of two dataset expressions, either of which may be None."""
+    return b if a is None else a & b
 
 
 CELL_COLUMNS = ["row_key", "qualifier", "ts", "value"]
@@ -1011,6 +1079,14 @@ def _pivot_partition(cells, cfg: BigtableTableConfig):
     materialised group).  Keys and values are handled with 64-bit offsets,
     so a chunk may hold more than 2 GiB of either.
 
+    Two paths, chosen by what the chunk shows, with the same output.  A
+    chunk already in (row_key, qualifier, ts) order — how every writer of
+    the store sorts its files — is checked with adjacent compares and
+    needs no sort before the latest filter: the newest cell of each
+    (row_key, qualifier) is the last of its run.  Any other chunk
+    (overlapping appends, wire responses, version-unnest reads) is
+    ordered by stable sorts first.
+
     Semantics (pinned against a duckdb reference in
     tests/test_pivot_kernel.py):
     - cells of undeclared qualifiers are dropped;
@@ -1042,16 +1118,24 @@ def _pivot_partition(cells, cfg: BigtableTableConfig):
     row_key = cells["row_key"].cast(pa.large_string()).combine_chunks()
     value = cells["value"].cast(pa.large_binary()).combine_chunks()
     ts = cells["ts"].combine_chunks().cast(pa.timestamp("us"))
-
-    # Integer sort keys: the row key's rank among the chunk's distinct
-    # keys, the declared qualifier index and the ts.  The sorts are stable,
-    # so input position is the implicit last key: "last in input order" is
-    # last in its run after the sort.
-    k = _key_ranks(row_key)
     q = qcode.combine_chunks().to_numpy().astype(np.int64)
     t = ts.cast(pa.int64()).to_numpy()
-    if cfg.only_read_latest:
-        # newest per (row_key, qualifier), then back into (row_key, ts) order
+
+    # k: an int64 per cell that orders like the row key — the run number
+    # when the keys arrive sorted, else the rank among the distinct keys
+    k = _sorted_key_runs(row_key)
+    presorted = k is not None and cfg.only_read_latest and _in_cell_order(k, q, t, cfg)
+    if k is None:
+        k = _key_ranks(row_key)
+    if presorted:
+        # the newest cell of each (row_key, qualifier) ends its run; only
+        # those survivors are put in (row_key, ts) order
+        idx = np.flatnonzero(_last_of_runs(k, q))
+        idx = idx[_stable_order(k[idx], t[idx])]
+    elif cfg.only_read_latest:
+        # the sorts are stable, so input position is the implicit last
+        # key: "last in input order" is last in its run after the sort.
+        # Newest per (row_key, qualifier), then back into (row_key, ts)
         idx = _stable_order(k, q, t)
         idx = idx[_last_of_runs(k[idx], q[idx])]
         idx = idx[_stable_order(k[idx], t[idx])]
@@ -1091,6 +1175,38 @@ def _pivot_partition(cells, cfg: BigtableTableConfig):
             else:  # the reference's catch-all: UTF-8 text, then the declared type
                 out.append(_decode_utf8(raw).cast(field.type))
         yield pa.RecordBatch.from_arrays(out, schema=schema)
+
+
+def _sorted_key_runs(row_key):
+    """Each cell's key run number (int64) when ``row_key`` holds no NULL
+    and never decreases; else None.  The order check compares the run
+    values, one per distinct key."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if row_key.null_count:
+        return None
+    runs = pc.run_end_encode(row_key, run_end_type=pa.int64())
+    keys = runs.values
+    if pc.any(pc.less(keys.slice(1), keys.slice(0, len(keys) - 1))).as_py():
+        return None
+    ends = runs.run_ends.to_numpy()
+    return np.repeat(np.arange(len(ends), dtype=np.int64), np.diff(ends, prepend=0))
+
+
+def _in_cell_order(k, q, t, cfg: BigtableTableConfig) -> bool:
+    """True when, within every key run of ``k``, the cells are ordered by
+    qualifier name (byte order) and then by ts — the order the store's
+    writers sort by."""
+    import numpy as np
+
+    names = [name.encode("utf-8") for name in cfg.qualifiers]
+    rank = np.empty(len(names), dtype=np.int64)
+    rank[sorted(range(len(names)), key=names.__getitem__)] = np.arange(len(names))
+    r = rank[q]
+    back = (r[1:] < r[:-1]) | ((r[1:] == r[:-1]) & (t[1:] < t[:-1]))
+    return not (back & (k[1:] == k[:-1])).any()
 
 
 def _key_ranks(row_key):
@@ -1557,7 +1673,8 @@ class BigtableStreamReader(DataSourceStreamReader):
         # one scan task per key-disjoint group; an empty micro-batch still
         # needs one partition for a stable, correctly-typed empty result
         return [
-            FilePartition((tuple(g),)) for g in _key_disjoint_groups(footer_file_stats(files))
+            FilePartition((tuple(g),))
+            for g in _key_disjoint_groups(_drop_empty_files(footer_file_stats(files)))
         ] or [FilePartition(())]
 
     # executor side — the batch reader's scan: a group of key-overlapping

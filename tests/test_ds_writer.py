@@ -356,6 +356,107 @@ def test_packed_full_scan_streams_groups_through_one_carry(tmp_path):
         assert [r["_row_key"] for r in got] == sorted(r["_row_key"] for r in got)
 
 
+def test_empty_cells_append_leaves_reads_and_plan_unchanged(registered, tmp_path):
+    """An empty ``write_cells`` append leaves a part file with no rows and
+    no row groups, so no key statistics.  It must not break the scan, nor
+    merge every key-disjoint file into one partition: the full scan and a
+    lookup return the rows, and plan the partitions, of the store without
+    it."""
+    from datafusion_bigtable_spark.sources.cells import CELLS_SCHEMA, write_cells
+
+    t0 = dt.datetime(2024, 1, 1)
+    cells = [(f"k{i:03d}", "f", "p", t0, f"v{i}".encode()) for i in range(40)]
+    store = str(tmp_path / "store")
+    write_cells(registered.createDataFrame(cells, CELLS_SCHEMA), store, num_ranges=4)
+    opts = {"path": store, "column_family": "f", "columns": "p:string", "allow_full_scan": "true"}
+
+    def reads():
+        full = registered.read.format("bigtable").options(**opts).load()
+        lookup = registered.read.format("bigtable").options(**opts).load().filter(
+            "_row_key BETWEEN 'k010' AND 'k012'"
+        )
+        return full.rdd.getNumPartitions(), full.collect(), lookup.collect()
+
+    before = reads()
+    write_cells(registered.createDataFrame([], CELLS_SCHEMA), store, mode="append")
+    empty = [f for f in glob.glob(os.path.join(store, "*.parquet")) if pq.read_metadata(f).num_rows == 0]
+    assert empty, "the empty append wrote no zero-row file"
+    assert reads() == before
+    assert len(before[1]) == 40 and [r._row_key for r in before[2]] == ["k010", "k011", "k012"]
+    assert before[0] == min(4, registered.sparkContext.defaultParallelism)
+
+
+def _families_file(path, cells):
+    """A cells file from ``(row_key, family, qualifier, value)`` tuples,
+    one shared ts, written in the given order."""
+    import pyarrow as pa
+
+    pq.write_table(
+        pa.table({
+            "row_key": [c[0] for c in cells], "family": [c[1] for c in cells],
+            "qualifier": [c[2] for c in cells],
+            "ts": pa.array([dt.datetime(2024, 1, 1)] * len(cells), pa.timestamp("us")),
+            "value": pa.array([c[3] for c in cells], pa.binary()),
+        }),
+        path,
+    )
+
+
+def test_scan_returns_only_the_configured_family(tmp_path):
+    """A file holding two column families, in the writers' cell order:
+    its footer cannot prove it holds one family, so the scan masks the
+    other one; a file of the configured family alone needs no mask."""
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader, _file_facts
+
+    store = tmp_path / "store"
+    store.mkdir()
+    _families_file(store / "part-0.parquet", [
+        ("a", "f", "p", b"a-f"), ("a", "g", "p", b"a-g"), ("a", "g", "q", b"a-gq"),
+        ("b", "g", "p", b"b-g"), ("c", "f", "q", b"c-f"),
+    ])
+    _families_file(store / "part-1.parquet", [("d", "f", "p", b"d-f")])
+    assert _file_facts(str(store / "part-0.parquet"), "f")[1] is False
+    assert _file_facts(str(store / "part-1.parquet"), "f")[1] is True
+
+    reader = BigtableReader(None, {
+        "path": str(store), "column_family": "f", "columns": "p:string,q:string",
+        "allow_full_scan": "true",
+    })
+    rows = [r for p in reader.partitions() for b in reader.read(p) for r in b.to_pylist()]
+    assert [(r["_row_key"], r["p"], r["q"]) for r in rows] == [
+        ("a", "a-f", None), ("c", None, "c-f"), ("d", "d-f", None),
+    ]
+
+
+def test_row_key_spanning_two_files_of_one_ordered_run(tmp_path):
+    """A packed partition whose files are key-sorted streams as ONE ordered
+    run, even where a row key's cells continue from one file into the
+    next: that row comes out once and complete, in key order."""
+    import pyarrow as pa
+
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader, _scan_runs
+
+    store = tmp_path / "store"
+    store.mkdir()
+    t0 = dt.datetime(2024, 1, 1)
+    _cells_file(str(store / "part-0.parquet"), ["a", "b"], [t0, t0], ["p", "p"])
+    _cells_file(str(store / "part-1.parquet"), ["b", "c"], [t0, t0], ["q", "q"])
+    _cells_file(str(store / "part-2.parquet"), ["d"], [t0], ["p"])
+    reader = BigtableReader(None, {
+        "path": str(store), "column_family": "f", "columns": "p:string,q:string",
+        "allow_full_scan": "true",
+    })
+    (part,) = reader.partitions()
+    assert [len(g) for g in part.groups] == [2, 1]
+    runs = _scan_runs([list(g) for g in part.groups], "f")
+    assert [(len(files), ordered) for files, ordered, _ in runs] == [(3, True)]
+    rows = pa.Table.from_batches(list(reader.read(part))).to_pylist()
+    at = "2024-01-01 00:00:00"
+    assert [(r["_row_key"], r["p"], r["q"]) for r in rows] == [
+        ("a", f"a@{at}", None), ("b", f"b@{at}", f"b@{at}"), ("c", None, f"c@{at}"), ("d", f"d@{at}", None),
+    ]
+
+
 def test_compaction_restores_disjoint_layout(registered, cells_path, tmp_path):
     """Appends overlap file key ranges (reader merges them into one
     key-disjoint group); compaction rewrites to disjoint sorted files and

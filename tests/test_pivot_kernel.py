@@ -159,14 +159,32 @@ def cell_lists(draw):
     return separator, draw(st.lists(cell, max_size=40))
 
 
+# How a drawn cell list is ordered before the kernel sees it.  Sorts are
+# stable, so ties (equal ts included) keep their drawn order, which the
+# reference reads as input order.  "cell" is the order every writer of the
+# store produces, (row_key, qualifier, ts) by bytes, and takes the
+# kernel's sort-free path in latest mode; "key" and "key_qualifier" are
+# key-sorted chunks out of (qualifier, ts) order within a key, which must
+# take the sorted path.
+ORDERS = {
+    "input": None,
+    "key": lambda c: c[0].encode(),
+    "key_qualifier": lambda c: (c[0].encode(), c[1].encode()),
+    "cell": lambda c: (c[0].encode(), c[1].encode(), c[2]),
+}
+
+
 @settings(max_examples=300, deadline=None)
 @given(
     case=cell_lists(),
     layout=st.sampled_from(sorted(KEY_LAYOUTS)),
     latest=st.booleans(),
+    order=st.sampled_from(sorted(ORDERS)),
 )
-def test_kernel_matches_reference(case, layout, latest):
+def test_kernel_matches_reference(case, layout, latest, order):
     separator, cells = case
+    if ORDERS[order] is not None:
+        cells = sorted(cells, key=ORDERS[order])
     cfg = _config(layout, separator, latest)
     assert kernel(cells, cfg) == reference(cells, cfg)
 
@@ -253,3 +271,47 @@ def test_empty_input_gives_one_empty_batch(layout):
         (batch,) = list(_pivot_partition(cells, cfg))
         assert batch.num_rows == 0
         assert batch.schema == _arrow_schema(cfg)
+
+
+def _sorts_of(cells, cfg) -> list[int]:
+    """Run the kernel and return the key count of each ``_stable_order``
+    call it makes."""
+    calls = []
+    real = datasource._stable_order
+
+    def spy(*keys):
+        calls.append(len(keys))
+        return real(*keys)
+
+    with mock.patch.object(datasource, "_stable_order", spy):
+        kernel(cells, cfg)
+    return calls
+
+
+def test_cell_ordered_chunk_takes_the_sort_free_path():
+    """In latest mode a chunk in (row_key, qualifier, ts) order sorts only
+    its survivors, by (row_key, ts); a key-sorted chunk out of that order
+    within a key, an unsorted one, or any chunk in version-unnest mode
+    sorts every cell first."""
+    ordered = [
+        ("a", "n", T0, b"1"), ("a", "n", T1, b"2"), ("a", "s", T0, b"x"),
+        ("b", "raw", T1, b"r"), ("b", "s", T0, b"y"), ("b", "s", T0, b"z"),
+    ]
+    latest = _config("row_key", "#", True)
+    assert _sorts_of(ordered, latest) == [2]
+    for cells in (
+        [ordered[1], ordered[0]] + ordered[2:],  # ts descending within (a, n)
+        [ordered[2]] + ordered[:2] + ordered[3:],  # qualifier out of order within a
+        ordered[3:] + ordered[:3],  # keys out of order
+    ):
+        assert _sorts_of(cells, latest) == [3, 2]
+        assert kernel(cells, latest) == reference(cells, latest)
+    assert _sorts_of(ordered, _config("row_key", "#", False)) == [3]
+
+
+def test_newest_version_wins_when_a_qualifier_run_is_out_of_ts_order():
+    # key- and qualifier-sorted, but the run of (k, n) is newest first:
+    # the last cell of the run is NOT the newest one
+    cells = [("k", "n", T1, (2).to_bytes(8, "big")), ("k", "n", T0, (1).to_bytes(8, "big"))]
+    rows = kernel(cells, _config("row_key", "#", True))
+    assert [(r["_timestamp"], r["n"]) for r in rows] == [(EPOCH + dt.timedelta(microseconds=T1), 2)]
