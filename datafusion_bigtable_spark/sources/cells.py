@@ -249,8 +249,8 @@ def write_cells(cells: DataFrame, path: str, num_ranges: int = 32, mode: str = "
 
     Each output file then covers a disjoint key range, so a KeyRange scan
     touches only overlapping files (parquet min/max stats prune the rest),
-    and the Python Data Source's full-scan path packs the disjoint files
-    into scan tasks of up to 128 MiB (datasource.FilePartition).
+    and the Python Data Source packs the disjoint files a scan selects
+    into tasks of up to 128 MiB (datasource.FilePartition).
     ``num_ranges`` ≈ cluster write parallelism; at 100 TB pick it so files
     land in the 128 MB–1 GB band.
     """

@@ -10,13 +10,12 @@ and used as ``spark.read.format("bigtable")``:
   composer, and returns **all** filters as unsupported: exactly the
   reference's Inexact pushdown contract (A16, datasource.rs:163-165) —
   ranges prune, Spark re-applies every predicate above the scan.
-- ``partitions()`` — ONE InputPartition PER KeyRange.  The reference scans
-  single-partition (``UnknownPartitioning(1)``, execute_plan.rs:84-86;
-  roadmap gap README.md:50); here every composed range scans in parallel
-  on a different executor.  On a full scan, key-disjoint file groups
-  packed by Spark's file-packing rule at the session's core count: one
-  partition per core for a small store, partitions of up to 128 MiB for
-  a large one (``FilePartition``).
+- ``partitions()`` — one planner (``_plan_files``) for lookups, full
+  scans and stream micro-batches.  The reference scans single-partition
+  (``UnknownPartitioning(1)``, execute_plan.rs:84-86); here the files
+  that overlap the composed ranges form key-disjoint groups, packed by
+  Spark's file-packing rule at the session's core count, and each task
+  carries the ranges that overlap its files (``FilePartition``).
 - ``read()``       — per-partition: pyarrow scan of the cells parquet with
   key-range/ts/value predicates pushed into the parquet reader (the
   stand-in for the gRPC ``ReadRowsRequest`` + RowFilter chain,
@@ -25,8 +24,8 @@ and used as ``spark.read.format("bigtable")``:
   undeclared qualifiers are dropped by the kernel.  Then the
   latest-version filter, cell→row pivot and typed decode (A11/A13/A15)
   in one Arrow kernel (``_pivot_partition``) — *partition-local*,
-  because one row key's cells never span two key ranges.  The pruned
-  path therefore runs with ZERO shuffles.  A partition's key-sorted
+  because one row key's cells never span two key-disjoint file groups.
+  The scan therefore runs with ZERO shuffles.  A partition's key-sorted
   files stream as one ordered Arrow stream, so an executor holds what
   pyarrow's scanner reads ahead (by default 16 batches in each of up to
   4 files) plus the chunk being pivoted, never the partition; a group
@@ -36,8 +35,8 @@ Scale: at 100 TB the cells store is written range-partitioned and sorted
 by row_key (see sources/cells.py); ``partitions()`` maps ranges to the
 overlapping files only (parquet footer min/max — the emulation of
 Bigtable's tablet metadata), so a pruned query reads just those files, and
-the full-scan path parallelizes over packs of files of at most 128 MiB
-(one per core on a store smaller than 128 MiB per core).
+every scan parallelizes over packs of files of at most 128 MiB (one per
+core on a store smaller than 128 MiB per core).
 
 KNOWN UPSTREAM CAVEAT (Spark 4.1, verified by tracing worker invocations):
 the JVM caches a Python data source's planned scan
@@ -55,7 +54,9 @@ pushes a filter and is planned afresh.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import glob
+import operator
 import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
@@ -151,36 +152,20 @@ def _options_from_config(cfg: BigtableTableConfig) -> dict[str, str]:
 
 
 @dataclass
-class RangePartition(InputPartition):
-    """One composed KeyRange → one Spark scan task, carrying the pruned
-    list of overlapping files (never empty: a range that overlaps no file
-    plans no partition) and optional cell timestamp bounds (only set when
-    pushdown is semantics-preserving)."""
-
-    start: str
-    end: str
-    files: tuple = ()
-    ts_lo: object = None
-    ts_hi: object = None
-    value_preds: tuple = ()
-    rows_cap: object = None
-
-
-@dataclass
 class WireRangePartition(InputPartition):
-    """One key-range SHARD of a wire-endpoint scan → one Spark task that
-    opens its own connection and issues its own ReadRows — the reference's
-    executor-side read shape (its TableProvider streams gRPC inside the
-    execution plan), and the only shape that scales: the driver plans
-    shard boundaries from SampleRowKeys; executors fetch in parallel.
-    ``start_open=True`` makes the start bound exclusive (shard k covers
-    ``(bound[k-1], bound[k]]`` — SampleRowKeys boundary semantics).
-    ``start``/``end`` of None = unbounded."""
+    """One SampleRowKeys SHARD of a wire-endpoint scan → one Spark task
+    that opens its own connection and issues ONE ReadRows for ALL of its
+    pieces — the reference's read shape (one ReadRowsRequest carrying the
+    whole RowSet, execute_plan.rs:168-183), per shard so it scales: the
+    driver plans shard boundaries from SampleRowKeys; executors fetch in
+    parallel.  ``ranges`` are the shard's pieces of the composed ranges,
+    in key order, as ``(start, start_open, end)``: ``start_open=True``
+    makes the start bound exclusive (shard k covers
+    ``(bound[k-1], bound[k]]`` — SampleRowKeys boundary semantics), and a
+    ``start``/``end`` of None is unbounded."""
 
-    start: object
-    end: object
+    ranges: tuple
     endpoint: tuple
-    start_open: bool = False
     ts_lo: object = None
     ts_hi: object = None
     value_preds: tuple = ()
@@ -189,29 +174,27 @@ class WireRangePartition(InputPartition):
 
 @dataclass
 class FilePartition(InputPartition):
-    """Full-scan path: consecutive key-disjoint GROUPS of parquet files
-    (``groups``, in key order) → one scan task.  A group is the unit the
-    pivot needs whole: with a write_cells layout every group is a single
-    file; after appends, files whose key ranges overlap form one group,
-    because the latest-version filter and the (row_key, ts) pivot are
-    partition-local — splitting one row key's cells across tasks would
-    resurrect stale versions / emit partial rows (caught by the writer
-    round-trip tests).
+    """One scan task of the parquet path, planned by ``_plan_files``:
+    consecutive key-disjoint GROUPS of parquet files (``groups``, in key
+    order) and the closed ``(start, end)`` row-key ranges that overlap
+    them (``ranges``; empty means unbounded — a full scan or a stream
+    micro-batch).  The scan filter is the OR of the ranges.
 
-    Groups are packed by Spark's own file-packing rule
-    (``FilePartition.getFilePartitions``) with Spark's default constants
-    and the session's core count (``register`` captures
-    ``defaultParallelism``): each file costs its on-disk bytes (recorded
-    in the manifest) plus 4 MiB (``spark.sql.files.openCostInBytes``);
-    the split size is ``min(128 MiB, max(4 MiB, total cost / cores))``
-    (``spark.sql.files.maxPartitionBytes``); a partition closes before a
-    group's file bytes would take it past the split size; and a group is
-    never split (see ``_pack_groups``).  A small store of key-disjoint
-    files therefore scans as one task per core, a large one in 128 MiB
-    tasks.  Only "one task per core" pays on a small store: on a 3.3 MB,
-    8-file store at local[2], 2 partitions beat 1 by ~25%, 4 tied 1 and
-    8 lost to it (README, "Scale posture").  A reader built without a
-    core count plans as ``cores=1``: one task up to 128 MiB.
+    A group is the unit the pivot needs whole: with a write_cells layout
+    every group is a single file; after appends, files whose key ranges
+    overlap form one group, because the latest-version filter and the
+    (row_key, ts) pivot are partition-local — splitting one row key's
+    cells across tasks would resurrect stale versions / emit partial rows
+    (caught by the writer round-trip tests).
+
+    Groups are packed by Spark's own file-packing rule at the session's
+    core count (``_pack_groups``; ``register`` captures the count, and a
+    reader built without one plans as ``cores=1``).  A small store of
+    key-disjoint files therefore scans as one task per core, a large one
+    in 128 MiB tasks, and a lookup whose ranges fall in one file is one
+    task however many ranges it has.  Only "one task per core" pays on a
+    small store: on a 3.3 MB, 8-file store at local[2], 2 partitions beat
+    1 by ~25%, 4 tied 1 and 8 lost to it (README, "Scale posture").
 
     Memory: the task reads its key-sorted groups as one ordered Arrow
     stream, so it holds what pyarrow's scanner reads ahead (by default
@@ -220,6 +203,7 @@ class FilePartition(InputPartition):
     A group whose files overlap is materialised whole (see ``_scan``)."""
 
     groups: tuple
+    ranges: tuple = ()
     ts_lo: object = None
     ts_hi: object = None
     value_preds: tuple = ()
@@ -233,7 +217,7 @@ class FilePartition(InputPartition):
 class BigtableReader(DataSourceReader):
     def __init__(self, schema, options, cores: int = 1):
         self.config = _config_from_options(options)
-        # The session's core count, the per-core term of the full-scan
+        # The session's core count, the per-core term of the scan
         # packing rule (``_pack_groups``); ``register`` captures it.
         self.cores = cores
         # Wire endpoint mode (r7): scan a live ReadRows service instead of
@@ -583,13 +567,6 @@ class BigtableReader(DataSourceReader):
             )
         return footer_file_stats(self._files())
 
-    @staticmethod
-    def _ts_overlaps(st: dict, lo, hi) -> bool:
-        """File-level ts pruning (files lacking stats never prune)."""
-        if st["min_ts"] is None or st["max_ts"] is None:
-            return True
-        return (hi is None or st["min_ts"] <= hi) and (lo is None or st["max_ts"] >= lo)
-
     def partitions(self) -> Sequence[InputPartition]:
         # CONSUME the pushed ranges: Spark reuses this reader instance for
         # every query planned from the same load(), but only calls
@@ -639,61 +616,29 @@ class BigtableReader(DataSourceReader):
             rows_cap = None
         self._pushed_since_last_plan = False
         self._last_plan_pruned = bool(ranges) or ts_push or bool(value_preds)
+        if not ranges and not self.config.allow_full_scan:
+            raise ComposerError("table_partition_cols: filter is not provided or not supported")
         if self.endpoint is not None:
             return self._wire_partitions(ranges, ts_lo, ts_hi, value_preds, rows_cap)
-        if ranges:
-            # File-level pruning: a range partition only scans files whose
-            # footer [min,max] row_key interval overlaps the range — with a
-            # write_cells() layout (range-partitioned, sorted) that is one
-            # or two files per range regardless of store size.  Ts bounds
-            # prune further and travel with the partition for row-group-
-            # level pruning in the scan.
-            stats = _drop_empty_files(self._file_stats())
-            parts = []
-            for r in ranges:
-                files = [
-                    st["file"]
-                    for st in stats
-                    if (
-                        st["min_key"] is None
-                        or st["max_key"] is None
-                        or (st["min_key"] <= r.end and st["max_key"] >= r.start)
-                    )
-                    and self._ts_overlaps(st, ts_lo, ts_hi)
-                ]
-                if files:
-                    parts.append(
-                        RangePartition(r.start, r.end, tuple(files), ts_lo, ts_hi, value_preds, rows_cap)
-                    )
-            # every range pruned to zero files, or an empty store → one
-            # partition that scans nothing, so the scan yields one empty
-            # batch with the declared schema
-            return parts or [FilePartition(())]
-        if not self.config.allow_full_scan:
-            raise ComposerError("table_partition_cols: filter is not provided or not supported")
-        stats = [
-            st for st in _drop_empty_files(self._file_stats()) if self._ts_overlaps(st, ts_lo, ts_hi)
-        ]
-        sizes = {st["file"]: st["bytes"] for st in stats}
-        return [
-            FilePartition(tuple(tuple(g) for g in part), ts_lo, ts_hi, value_preds, rows_cap)
-            for part in _pack_groups(_key_disjoint_groups(stats), sizes, self.cores)
-        ] or [FilePartition(())]  # empty store or every file ts-pruned: as for ranges above
+        return _plan_files(
+            self._file_stats(), [(r.start, r.end) for r in ranges], self.cores,
+            ts_lo, ts_hi, value_preds=value_preds, rows_cap=rows_cap,
+        )
 
     def _wire_partitions(self, ranges, ts_lo, ts_hi, value_preds, rows_cap):
-        """Shard the composed ranges (or the full key space) at
-        SampleRowKeys boundaries: shard k covers ``(bound[k-1], bound[k]]``
-        so shards are disjoint and ordered, one executor task each — the
-        same planner shape the real service's connectors use (tablet
-        boundaries ≈ sample keys).  Driver work is O(#samples); no parquet
-        footers, no driver-side data."""
+        """Cut the composed ranges (or the full key space) at SampleRowKeys
+        boundaries: shard k covers ``(bound[k-1], bound[k]]``, so shards
+        are disjoint and ordered.  Each shard that holds a piece is one
+        executor task reading all of its pieces as one RowSet; a shard
+        with no piece plans no task — the same planner shape the real
+        service's connectors use (tablet boundaries ≈ sample keys).
+        Driver work is O(#samples + #ranges); no parquet footers, no
+        driver-side data."""
+        import bisect
+
         from datafusion_bigtable_spark.sources.grpc_transport import _table_name
         from datafusion_bigtable_spark.sources.wire import WireBigtableClient
 
-        if not ranges and not self.config.allow_full_scan:
-            raise ComposerError(
-                "table_partition_cols: filter is not provided or not supported"
-            )
         client = WireBigtableClient(*self.endpoint)
         sample_req: dict = {"table_name": _table_name(self.config)}
         if self.sample_stride is not None:
@@ -707,36 +652,27 @@ class BigtableReader(DataSourceReader):
             bounds = bounds[step - 1 :: step]
             if not bounds or bounds[-1] != last:
                 bounds.append(last)
-        spans = [(r.start, r.end) for r in ranges] or [(None, None)]
-        parts = []
-        for s, e in spans:
-            cuts = [b for b in bounds if (s is None or b > s) and (e is None or b < e)]
+        shards: dict[int, list] = {}
+        for s, e in [(r.start, r.end) for r in ranges] or [(None, None)]:
             lo, lo_open = s, False
-            for b in cuts:
-                parts.append(
-                    WireRangePartition(
-                        lo, b, self.endpoint, lo_open, ts_lo, ts_hi, value_preds, rows_cap
-                    )
-                )
-                lo, lo_open = b, True
-            if lo_open and e is None and bounds and lo == bounds[-1]:
+            for k, b in enumerate(bounds):
+                if (s is None or b > s) and (e is None or b < e):
+                    shards.setdefault(k, []).append((lo, lo_open, b))
+                    lo, lo_open = b, True
+            if lo_open and e is None and lo == bounds[-1]:
                 continue  # (last_key, ∞) is empty by the SampleRowKeys contract
-            parts.append(
-                WireRangePartition(
-                    lo, e, self.endpoint, lo_open, ts_lo, ts_hi, value_preds, rows_cap
-                )
-            )
-        return parts or [
-            # zero shards (empty table): one unbounded probe so the scan
-            # yields an empty frame with a stable schema
-            WireRangePartition(None, None, self.endpoint, False, ts_lo, ts_hi, value_preds, rows_cap)
+            k = len(bounds) if e is None else bisect.bisect_left(bounds, e)
+            shards.setdefault(k, []).append((lo, lo_open, e))
+        return [
+            WireRangePartition(tuple(shards[k]), self.endpoint, ts_lo, ts_hi, value_preds, rows_cap)
+            for k in sorted(shards)
         ]
 
     # -- scan (A1/A11/A13/A14/A15, partition-local) -----------------------
     def read(self, partition: InputPartition) -> Iterator:
         # the cap travels on the partition: it was validated against THIS
         # plan's filters at planning time (see partitions())
-        remaining = getattr(partition, "rows_cap", None)
+        remaining = partition.rows_cap
         if remaining is None:
             yield from self._scan(partition)
             return
@@ -764,23 +700,23 @@ class BigtableReader(DataSourceReader):
         # whose footers do not prove that it holds the family alone
         flt = None
         # ts bounds are only ever attached when pushdown is gated-safe
-        if getattr(partition, "ts_lo", None) is not None:
+        if partition.ts_lo is not None:
             flt = _and(flt, pa_ds.field("ts") >= partition.ts_lo)
-        if getattr(partition, "ts_hi", None) is not None:
+        if partition.ts_hi is not None:
             flt = _and(flt, pa_ds.field("ts") <= partition.ts_hi)
         specs = {s.name: s.type for s in cfg.columns}
-        for col, op, v in getattr(partition, "value_preds", ()):
+        for col, op, v in partition.value_preds:
             # cells of OTHER qualifiers always pass; only the filter
             # column's cells are constrained (see _value_predicates)
             flt = _and(
                 flt, (pa_ds.field("qualifier") != col) | self._value_expr(pa_ds, specs[col], op, v)
             )
-        if isinstance(partition, RangePartition):
-            flt = _and(flt, pa_ds.field("row_key") >= partition.start)
-            flt = _and(flt, pa_ds.field("row_key") <= partition.end)
-            groups = [list(partition.files)]
-        else:
-            groups = [list(g) for g in partition.groups]
+        # the OR of the partition's ranges, a point as an equality:
+        # row-group statistics prune by it (they would not by an is_in)
+        key = pa_ds.field("row_key")
+        terms = [(key == s) if s == e else (key >= s) & (key <= e) for s, e in partition.ranges]
+        if terms:
+            flt = _and(flt, functools.reduce(operator.or_, terms))
 
         # The groups are key-disjoint and in key order.  Consecutive groups
         # whose files stream in key order (every write_cells store) are
@@ -796,7 +732,7 @@ class BigtableReader(DataSourceReader):
         # default 16 batches in each of up to 4 files), the pending chunk
         # and the one being pivoted — never the partition.
         pending, streamed = None, False
-        for files, ordered, family_only in _scan_runs(groups, cfg.column_family):
+        for files, ordered, family_only in _scan_runs(partition.groups, cfg.column_family):
             run_flt = flt if family_only else _and(flt, pa_ds.field("family") == cfg.column_family)
             dataset = pa_ds.dataset(files, format="parquet")
             if ordered:
@@ -809,6 +745,7 @@ class BigtableReader(DataSourceReader):
             for cells in chunks:
                 if cells.num_rows == 0:
                     continue
+                _check_keys(cells, files)
                 if pending is not None:
                     keys = pending["row_key"]
                     cut = pc.index(keys, keys[-1]).as_py() if streamed else pending.num_rows
@@ -822,16 +759,17 @@ class BigtableReader(DataSourceReader):
 
     def _wire_scan(self, partition: WireRangePartition) -> Iterator:
         """Executor-side ReadRows over the wire for one shard: this task
-        opens its own connection, streams its key range, and pivots rows
-        as they arrive.  The filter work rides the REQUEST (family pin,
-        cells-per-column limit in latest mode, qualifier regex, value
-        predicates, unnest-gated ts bounds), so wire traffic is already
-        reduced server-side — the executor holds one chunk of complete
-        rows, never the shard.  NOTE value predicates reach here only in
-        version-unnest plans (partitions() gates them in latest mode,
-        matching the parquet path); the wire chain places value filters
-        after the latest limit, so either gating is sound — Spark
-        re-applies every filter above regardless (A16)."""
+        opens its own connection, reads all of the shard's pieces as one
+        RowSet, and pivots rows as they arrive.  The filter work rides the
+        REQUEST (family pin, cells-per-column limit in latest mode,
+        qualifier regex, value predicates, unnest-gated ts bounds), so
+        wire traffic is already reduced server-side — the executor holds
+        one chunk of complete rows, never the shard.  NOTE value
+        predicates reach here only in version-unnest plans (partitions()
+        gates them in latest mode, matching the parquet path); the wire
+        chain places value filters after the latest limit, so either
+        gating is sound — Spark re-applies every filter above regardless
+        (A16)."""
         from datafusion_bigtable_spark.sources.cells import _naive_datetime_to_us
         from datafusion_bigtable_spark.sources.grpc_transport import (
             build_read_rows_request,
@@ -848,13 +786,17 @@ class BigtableReader(DataSourceReader):
             value_preds=tuple(partition.value_preds),
             ts_range_us=(lo_us, hi_us) if (lo_us is not None or hi_us is not None) else None,
         )
-        rng: dict = {}
-        if partition.start is not None:
-            key = "start_key_open" if partition.start_open else "start_key_closed"
-            rng[key] = partition.start.encode("utf-8")
-        if partition.end is not None:
-            rng["end_key_closed"] = partition.end.encode("utf-8")
-        req["rows"] = {"row_keys": [], "row_ranges": [rng] if rng else []}
+        row_ranges = []
+        for start, start_open, end in partition.ranges:
+            rng: dict = {}
+            if start is not None:
+                rng["start_key_open" if start_open else "start_key_closed"] = start.encode("utf-8")
+            if end is not None:
+                rng["end_key_closed"] = end.encode("utf-8")
+            row_ranges.append(rng)
+        # an unbounded piece (a full scan of an unsampled table) is the
+        # empty RowSet, which reads the whole table
+        req["rows"] = {"row_keys": [], "row_ranges": [r for r in row_ranges if r]}
 
         buf: tuple[list, ...] = ([], [], [], [])  # row_key, qualifier, ts_us, value
 
@@ -862,6 +804,7 @@ class BigtableReader(DataSourceReader):
             cells = _cells_table(*buf)
             for v in buf:
                 v.clear()
+            _check_keys(cells, f"the shard {list(partition.ranges)}")
             yield from _pivot_partition(cells, cfg)
 
         client = WireBigtableClient(*partition.endpoint)
@@ -879,6 +822,43 @@ class BigtableReader(DataSourceReader):
                 emitted = True
         if buf[0] or not emitted:
             yield from flush()
+
+
+def _plan_files(
+    stats: list[dict], ranges, cores: int = 1, ts_lo=None, ts_hi=None, **scan
+) -> list[FilePartition]:
+    """The parquet path's one planner, for lookups, full scans and stream
+    micro-batches, over per-file stats (manifest or footers) and the
+    composed closed ``(start, end)`` row-key ranges (sorted, disjoint;
+    none for a full scan).  It selects the files with cells that overlap
+    any range and the ts bounds, groups them key-disjointly, packs the
+    groups at ``cores`` and gives each partition the ranges that overlap
+    its files.  A row key's cells all lie in files that overlap it, so
+    they fall in one group: one task reads the key, under the range it
+    lies in.  ``scan`` (value predicates, rows cap) rides every partition.
+    No file selected → one partition that scans nothing, so the scan
+    yields one empty batch with the declared schema."""
+
+    def hits(st, r, lo="min_key", hi="max_key"):
+        # file ``st`` may hold a cell in ``r`` (missing stats never prune)
+        return st[lo] is None or st[hi] is None or (
+            (r[1] is None or st[lo] <= r[1]) and (r[0] is None or st[hi] >= r[0])
+        )
+
+    stats = [
+        st
+        for st in _drop_empty_files(stats)
+        if hits(st, (ts_lo, ts_hi), "min_ts", "max_ts")
+        and (not ranges or any(hits(st, r) for r in ranges))
+    ]
+    by_file = {st["file"]: st for st in stats}
+    sizes = {st["file"]: st["bytes"] for st in stats}
+    parts = []
+    for part in _pack_groups(_key_disjoint_groups(stats), sizes, cores):
+        files = [by_file[f] for g in part for f in g]
+        mine = tuple(r for r in ranges if any(hits(st, r) for st in files))
+        parts.append(FilePartition(tuple(tuple(g) for g in part), mine, ts_lo, ts_hi, **scan))
+    return parts or [FilePartition(())]
 
 
 def _key_disjoint_groups(stats: list[dict]) -> list[list[str]]:
@@ -915,12 +895,14 @@ def _pack_groups(
     groups: list[list[str]], sizes: dict[str, int], cores: int = 1
 ) -> list[list[list[str]]]:
     """Pack consecutive key-disjoint groups into scan partitions, whole and
-    in order, by Spark's file-packing rule (``FilePartition``): each file
-    costs ``sizes[file]`` plus the open cost, the split size is
-    ``min(cap, max(open cost, total cost / cores))``, and a partition
-    closes before a group whose FILE bytes would take it past the split
-    size (the open cost is added after the comparison, as Spark does).  A
-    group larger than the split size is a partition of its own."""
+    in order, by Spark's file-packing rule (its
+    ``FilePartition.getFilePartitions`` with the default constants above):
+    each file costs ``sizes[file]`` (its bytes, from the manifest) plus the
+    open cost, the split size is ``min(cap, max(open cost, total cost /
+    cores))``, and a partition closes before a group whose FILE bytes
+    would take it past the split size (the open cost is added after the
+    comparison, as Spark does).  A group larger than the split size is a
+    partition of its own."""
     total = sum(sizes[f] + _PACK_OPEN_COST_BYTES for g in groups for f in g)
     max_split = min(_PACK_MAX_BYTES, max(_PACK_OPEN_COST_BYTES, total // cores))
     parts: list[list[list[str]]] = []
@@ -1065,6 +1047,23 @@ def _cells_table(row_key=(), qualifier=(), ts_us=(), value=()):
     )
 
 
+def _check_keys(cells, source=None) -> None:
+    """Fail closed on a cell with a NULL ``row_key`` or ``ts``, which the
+    pivot cannot place: ``CELLS_SCHEMA`` forbids them, but a pyarrow-written
+    file or a ReadRows response can hold one.  ``source`` names where the
+    cells came from (a list of files is narrowed to the guilty ones)."""
+    for name in ("row_key", "ts"):
+        if cells[name].null_count:
+            if isinstance(source, list):
+                import pyarrow.parquet as pq
+
+                source = [f for f in source if pq.read_table(f, columns=[name])[name].null_count]
+            where = f" in {source}" if source else ""
+            raise ValueError(
+                f"bigtable: a cell has a NULL {name}{where}; every cell needs a row key and a timestamp"
+            )
+
+
 def _pivot_partition(cells, cfg: BigtableTableConfig):
     """Latest-version filter + (row_key, ts) pivot + key split + typed
     decode for one chunk of cells, as one Arrow kernel — the reference's
@@ -1098,12 +1097,15 @@ def _pivot_partition(cells, cfg: BigtableTableConfig):
       strings decode UTF-8, invalid bytes → U+FFFD;
     - the key splits literally on the separator; a missing component is
       NULL, surplus parts are ignored; int64 components decode with
-      NULL-for-malformed (plans/keycodec.py).
+      NULL-for-malformed (plans/keycodec.py);
+    - a cell with a NULL row_key or ts raises ``ValueError``
+      (``_check_keys``).
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    _check_keys(cells)
     schema = _arrow_schema(cfg)
     quals = list(cfg.qualifiers)
     qcode = pc.index_in(cells["qualifier"], value_set=pa.array(quals, pa.string()))
@@ -1585,17 +1587,18 @@ class BigtableStreamReader(DataSourceStreamReader):
     latest-wins semantics.
 
     Partitioned reader (upgraded from SimpleDataSourceStreamReader,
-    VERDICT r2 #7): each micro-batch's new files group by key-range
-    overlap (footer stats, the same sweep as the batch full scan) and
-    every group scans as its own ``FilePartition`` through the batch
-    reader's ``read`` — so a large arrival fans out like a batch read
-    instead of bottlenecking one process, and key-overlapping files pivot
-    together (no partial rows).  Groups are not packed per core as a full
-    scan's are: no streaming workload has measured that yet.
+    VERDICT r2 #7): each micro-batch's new files are planned by the batch
+    reader's planner (``_plan_files``, over their footer stats, with no
+    key range) and scanned by the batch reader's ``read`` — so a large
+    arrival fans out like a batch full scan, packed at the session's core
+    count, instead of bottlenecking one process, and key-overlapping files
+    pivot together (no partial rows).
     """
 
-    def __init__(self, schema, options):
+    def __init__(self, schema, options, cores: int = 1):
         self.config = _config_from_options(options)
+        # the per-core term of the packing rule, as for BigtableReader
+        self.cores = cores
         # The full-scan refusal (config.allow_full_scan, default False)
         # guards against accidental unbounded BATCH sweeps; a stream
         # micro-batch is bounded by its offsets (only files in end−start),
@@ -1613,10 +1616,7 @@ class BigtableStreamReader(DataSourceStreamReader):
             )
 
     def _store_files(self) -> dict[str, str]:
-        p = self.config.cells_path
-        if os.path.isdir(p):
-            return {os.path.basename(f): f for f in sorted(glob.glob(os.path.join(p, "*.parquet")))}
-        return {os.path.basename(p): p}
+        return {os.path.basename(f): f for f in BigtableReader._files(self)}
 
     def initialOffset(self) -> dict:
         from datafusion_bigtable_spark.sources.cells import read_compaction_epoch
@@ -1670,12 +1670,9 @@ class BigtableStreamReader(DataSourceStreamReader):
                 "checkpoint, and restart to re-read the compacted store once"
             )
         files = sorted(current[n] for n in target if n not in seen)
-        # one scan task per key-disjoint group; an empty micro-batch still
-        # needs one partition for a stable, correctly-typed empty result
-        return [
-            FilePartition((tuple(g),))
-            for g in _key_disjoint_groups(_drop_empty_files(footer_file_stats(files)))
-        ] or [FilePartition(())]
+        # an empty micro-batch plans one partition that scans nothing, for
+        # a stable, correctly-typed empty result
+        return _plan_files(footer_file_stats(files), (), self.cores)
 
     # executor side — the batch reader's scan: a group of key-overlapping
     # files is materialised and pivoted whole, so a (row_key, ts) whose
@@ -1727,7 +1724,7 @@ class BigtableDataSource(DataSource):
         return BigtableWriter(schema, self.options, overwrite)
 
     def streamReader(self, schema) -> DataSourceStreamReader:
-        return BigtableStreamReader(schema, self.options)
+        return BigtableStreamReader(schema, self.options, self.cores)
 
     def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamWriter:
         # streaming appends; overwrite (complete-mode) is refused because a
@@ -1743,7 +1740,7 @@ class BigtableDataSource(DataSource):
 def register(spark) -> None:
     """Register the format + enable python filter pushdown for this session.
 
-    The full-scan packing rule needs the session's core count, which a
+    The scan packing rule needs the session's core count, which a
     Python planner worker cannot see.  It is read here, on the driver, the
     way Spark reads its own per-core term (``spark.sql.files.minPartitionNum``,
     else ``spark.sql.leafNodeDefaultParallelism``, else

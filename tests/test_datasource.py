@@ -68,8 +68,9 @@ def test_pushdown_between_parallel_partitions(registered, cells_path):
         "region = 'us-west2' AND balloon_id = '3698' "
         "AND event_minute IN ('2021-03-05-1200', '2021-03-05-1201')"
     )
-    # two point ranges, both inside the single file → one partition each
-    assert df2.rdd.getNumPartitions() == 2
+    # two point ranges, both inside the single file → one partition that
+    # carries both ranges (the file is read once, filtered by their OR)
+    assert df2.rdd.getNumPartitions() == 1
     assert sorted(r.pressure for r in df2.collect()) == [94122, 94558]
 
 
@@ -336,8 +337,7 @@ def test_rows_limit_stops_pulling_batches(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from datafusion_bigtable_spark.plans.composer import KeyRange
-    from datafusion_bigtable_spark.sources.datasource import BigtableReader, RangePartition
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader, FilePartition
 
     n = 300_000
     keys = [f"k{i:07d}" for i in range(n)]
@@ -364,7 +364,8 @@ def test_rows_limit_stops_pulling_batches(tmp_path):
             opts["rows_limit"] = str(limit)
         return BigtableReader(None, opts)
 
-    part = RangePartition("k0000000", "k9999999", (path,))
+    span = (("k0000000", "k9999999"),)
+    part = FilePartition(((path,),), span)
 
     full_batches = list(mk_reader(None).read(part))
     assert sum(b.num_rows for b in full_batches) == n
@@ -373,13 +374,116 @@ def test_rows_limit_stops_pulling_batches(tmp_path):
     # the cap travels on the partition (validated per-plan, see
     # partitions()): a planner-attached rows_cap stops the stream
     reader = mk_reader(10)
-    capped_part = RangePartition("k0000000", "k9999999", (path,), rows_cap=10)
+    capped_part = FilePartition(((path,),), span, rows_cap=10)
     seen = []
     gen = reader.read(capped_part)
     for b in gen:
         seen.append(b)
     assert sum(b.num_rows for b in seen) == 10
     assert len(seen) == 1  # stopped after the first pivoted batch
+
+
+def _key_cells_file(path, keys):
+    """A cells file of one ``v`` cell per key, in the writers' order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = sorted(keys)
+    pq.write_table(
+        pa.table({
+            "row_key": keys, "family": ["f"] * len(keys), "qualifier": ["v"] * len(keys),
+            "ts": pa.array([TS0] * len(keys), pa.timestamp("us")),
+            "value": pa.array([k.encode() for k in keys], pa.binary()),
+        }),
+        path,
+    )
+    return path
+
+
+def test_in_list_of_64_keys_plans_one_partition(registered, tmp_path):
+    """A 64-key ``IN`` whose keys lie in one file is one scan task, with
+    exactly the rows of the equivalent ``BETWEEN``."""
+    store = tmp_path / "one_file"
+    store.mkdir()
+    _key_cells_file(
+        str(store / "part-0.parquet"),
+        [f"r#b#m{i:03d}" for i in range(100)] + [f"r#c#m{i:03d}" for i in range(10)],
+    )
+    minutes = [f"m{i:03d}" for i in range(20, 84)]
+
+    def lookup(tail):
+        return (
+            registered.read.format("bigtable")
+            .options(path=str(store), column_family="f", columns="v:string",
+                     table_partition_cols="region,balloon_id,event_minute")
+            .load()
+            .filter(f"region = 'r' AND balloon_id = 'b' AND {tail}")
+        )
+
+    in_list = lookup("event_minute IN (" + ", ".join(f"'{m}'" for m in minutes) + ")")
+    between = lookup(f"event_minute BETWEEN '{minutes[0]}' AND '{minutes[-1]}'")
+    assert in_list.rdd.getNumPartitions() == between.rdd.getNumPartitions() == 1
+    rows = sorted(tuple(r) for r in in_list.collect())
+    assert rows == sorted(tuple(r) for r in between.collect())
+    assert [r[2] for r in rows] == minutes
+
+
+def _two_file_reader(tmp_path):
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader
+
+    store = tmp_path / "two_files"
+    store.mkdir()
+    files = [
+        _key_cells_file(str(store / "part-0.parquet"), [f"k{i:02d}" for i in range(10)]),
+        _key_cells_file(str(store / "part-1.parquet"), [f"k{i:02d}" for i in range(10, 20)]),
+    ]
+    opts = {"path": str(store), "column_family": "f", "columns": "v:string"}
+    return BigtableReader(None, opts), files
+
+
+def test_ranges_over_an_ordered_run_return_only_their_rows(tmp_path):
+    """One partition, two ranges, two key-sorted files read as ONE ordered
+    run: only the in-range rows come out, in key order, and a rows cap
+    stops the stream at its first batch."""
+    from datafusion_bigtable_spark.sources.datasource import FilePartition, _scan_runs
+
+    reader, files = _two_file_reader(tmp_path)
+    groups = tuple((f,) for f in files)
+    assert [(len(f), ordered) for f, ordered, _ in _scan_runs([list(g) for g in groups], "f")] == [
+        (2, True)
+    ]
+    ranges = (("k03", "k05"), ("k12", "k12"))
+    rows = [r["_row_key"] for b in reader.read(FilePartition(groups, ranges)) for r in b.to_pylist()]
+    assert rows == ["k03", "k04", "k05", "k12"]
+
+    capped = list(reader.read(FilePartition(groups, ranges, rows_cap=2)))
+    assert len(capped) == 1 and [r["_row_key"] for r in capped[0].to_pylist()] == ["k03", "k04"]
+
+
+def test_range_between_two_groups_plans_no_file(tmp_path):
+    """A range that falls between two files' key spans selects neither;
+    next to ranges that do select them, each task gets only the ranges
+    that overlap its own files."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
+
+    from datafusion_bigtable_spark.sources.datasource import FilePartition, _plan_files
+
+    reader, files = _two_file_reader(tmp_path)
+    list(reader.pushFilters([
+        GreaterThanOrEqual(("_row_key",), "k095"), LessThanOrEqual(("_row_key",), "k099"),
+    ]))
+    assert reader.partitions() == [FilePartition(())]
+
+    stats = reader._file_stats()
+    ranges = [("k01", "k01"), ("k095", "k099"), ("k15", "k15")]
+    (one,) = _plan_files(stats, ranges)
+    assert one.files == tuple(files)
+    assert one.ranges == (("k01", "k01"), ("k15", "k15"))
+    # two cores: one task per file, each with its own range
+    two = _plan_files(stats, ranges, cores=2)
+    assert [(p.files, p.ranges) for p in two] == [
+        ((files[0],), (("k01", "k01"),)), ((files[1],), (("k15", "k15"),)),
+    ]
 
 
 def test_rows_limit_disabled_for_residual_filters(registered, cells_path):

@@ -85,12 +85,12 @@ def test_manifest_identical_pruning(two_file_store):
     def plan():
         r = _reader(two_file_store)
         r.pushFilters([GreaterThanOrEqual(("_row_key",), "b"), LessThanOrEqual(("_row_key",), "c")])
-        return [(p.start, p.end, p.files) for p in r.partitions()]
+        return [(p.ranges, p.files) for p in r.partitions()]
 
     before = plan()
     write_manifest(two_file_store)
     assert plan() == before
-    assert [p[2] for p in before] == [(os.path.join(two_file_store, "part-b.parquet"),)]
+    assert before == [((("b", "c"),), (os.path.join(two_file_store, "part-b.parquet"),))]
 
 
 def test_stale_manifest_ignored(two_file_store):

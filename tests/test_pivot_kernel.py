@@ -226,6 +226,21 @@ def test_null_cell_is_a_version(latest):
 
 
 @pytest.mark.parametrize("latest", [True, False])
+@pytest.mark.parametrize("column", ["row_key", "ts"])
+def test_null_row_key_or_ts_fails_closed(column, latest):
+    """The kernel cannot place a cell with no row key or no timestamp: it
+    raises a ValueError that names the column, not a raw Arrow error."""
+    keys, ts = ["a", "a"], [1, 2]
+    if column == "row_key":
+        keys = ["a", None]
+    else:
+        ts = [1, None]
+    cells = _cells_table(keys, ["s", "s"], ts, [b"x", b"y"])
+    with pytest.raises(ValueError, match=f"NULL {column}"):
+        list(_pivot_partition(cells, _config("row_key", "#", latest)))
+
+
+@pytest.mark.parametrize("latest", [True, False])
 def test_duplicate_cell_last_in_input_order_wins(latest):
     cells = [("k", "s", T0, b"first"), ("k", "s", T0, b"second")]
     assert [r["s"] for r in kernel(cells, _config("row_key", "#", latest))] == ["second"]

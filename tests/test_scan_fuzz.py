@@ -295,3 +295,86 @@ def test_version_unnest_matches_bruteforce_model(
     assert sorted((tuple(r) for r in got.collect()), key=repr) == _model_unnest(
         _CELLS, preds, value_cut, proj
     )
+
+
+def _null_cells(column: str):
+    """Two cells of one row key, the second with a NULL ``column``."""
+    keys, ts = ["us-west2#33#m00", "us-west2#33#m00"], [BASE_TS, BASE_TS]
+    if column == "row_key":
+        keys[1] = None
+    else:
+        ts[1] = None
+    return keys, ts
+
+
+def _cells_file_table(keys, ts):
+    import pyarrow as pa
+
+    n = len(keys)
+    return pa.table({
+        "row_key": pa.array(keys, pa.string()),
+        "family": [FAMILY] * n,
+        "qualifier": ["temperature"] * n,
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "value": pa.array([b"9.6"] * n, pa.binary()),
+    })
+
+
+@pytest.mark.parametrize("column", ["row_key", "ts"])
+def test_null_row_key_or_ts_fails_closed_naming_the_file(spark, tmp_path, column):
+    """A pyarrow-written file can hold a cell with a NULL row_key or ts (the
+    store's writers cannot).  The scan fails closed with a ValueError that
+    names the file, not a raw Arrow error."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from datafusion_bigtable_spark.sources import datasource as bt_ds
+
+    keys, ts = _null_cells(column)
+    store = tmp_path / "store"
+    store.mkdir()
+    pq.write_table(_cells_file_table(["us-west2#100#m00"], [BASE_TS]), str(store / "part-0.parquet"))
+    bad = str(store / "part-1.parquet")
+    pq.write_table(_cells_file_table(keys, ts), bad)
+    bt_ds.register(spark)
+    df = (
+        spark.read.format("bigtable")
+        .options(path=str(store), column_family=FAMILY, columns="pressure:int64,temperature:string",
+                 table_partition_cols=",".join(PCOLS), allow_full_scan="true")
+        .load()
+    )
+    with pytest.raises(Exception, match=re.escape(f"NULL {column} in {[bad]}")):
+        df.collect()
+
+
+@pytest.mark.parametrize("column", ["row_key", "ts"])
+def test_null_row_key_or_ts_over_the_wire_names_the_shard(monkeypatch, column):
+    """A ReadRows response can carry a cell with no row key or timestamp:
+    the shard's scan fails closed with a ValueError that names the shard.
+    The shard's pieces went out as one RowSet."""
+    import re
+
+    from datafusion_bigtable_spark.sources.datasource import BigtableReader, WireRangePartition
+    from datafusion_bigtable_spark.sources.wire import WireBigtableClient
+
+    keys, ts = _null_cells(column)
+    sent = []
+
+    def read_rows(self, request):
+        sent.append(request["rows"])
+        for k, t in zip(keys, ts):
+            yield k, [(FAMILY, "temperature", None if t is None else 0, b"9.6")]
+
+    monkeypatch.setattr(WireBigtableClient, "read_rows", read_rows)
+    reader = BigtableReader(None, {
+        "endpoint": "127.0.0.1:9", "column_family": FAMILY,
+        "columns": "pressure:int64,temperature:string", "table_partition_cols": ",".join(PCOLS),
+    })
+    pieces = (("a", False, "b"), ("c", True, "d"))
+    with pytest.raises(ValueError, match=re.escape(f"NULL {column} in the shard {list(pieces)}")):
+        list(reader.read(WireRangePartition(pieces, ("127.0.0.1", 9))))
+    assert sent == [{"row_keys": [], "row_ranges": [
+        {"start_key_closed": b"a", "end_key_closed": b"b"},
+        {"start_key_open": b"c", "end_key_closed": b"d"},
+    ]}]

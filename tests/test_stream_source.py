@@ -114,7 +114,10 @@ def test_stream_batch_fans_out_and_merges_overlaps(tmp_path):
     # …and one key-disjoint file
     _write_cells_file(str(store / "b.parquet"), [("z9", "measurements", "temperature", ts, b"4.2")])
 
-    r = BigtableStreamReader(None, {"path": str(store), **{**OPTS, "table_partition_cols": "_row_key"}})
+    # micro-batches pack like a full scan: at two cores, the two groups
+    # are two tasks
+    opts = {"path": str(store), **{**OPTS, "table_partition_cols": "_row_key"}}
+    r = BigtableStreamReader(None, opts, cores=2)
     parts = r.partitions(r.initialOffset(), r.latestOffset())
     groups = sorted(tuple(sorted(p.files)) for p in parts)
     assert len(parts) == 2, f"expected overlap-merged fan-out, got {groups}"
@@ -127,11 +130,11 @@ def test_stream_batch_fans_out_and_merges_overlaps(tmp_path):
     assert by_key["z9"][2] is None and by_key["z9"][3] == "4.2"
 
 
-def test_stream_batch_plans_a_file_partition_per_group(tmp_path):
-    """A micro-batch plans the batch reader's ``FilePartition``, one per
-    key-disjoint group, and scans it with the batch reader's ``read``; the
-    group of two files that split one row's cells stays whole, so that row
-    comes out complete."""
+def test_stream_batch_packs_groups_like_a_full_scan(tmp_path):
+    """A micro-batch is planned by the batch reader's planner: key-disjoint
+    groups packed at the session's core count into ``FilePartition``s,
+    scanned with the batch reader's ``read``.  The group of two files that
+    split one row's cells stays whole, so that row comes out complete."""
     import datetime as dt
     import os
 
@@ -145,11 +148,20 @@ def test_stream_batch_plans_a_file_partition_per_group(tmp_path):
     _write_cells_file(str(store / "c.parquet"), [("z9", "measurements", "temperature", ts, b"4.2")])
 
     opts = {"path": str(store), **{**OPTS, "table_partition_cols": "_row_key"}}
-    r = BigtableStreamReader(None, opts)
-    parts = r.partitions(r.initialOffset(), r.latestOffset())
-    assert all(isinstance(p, FilePartition) for p in parts)
-    names = [[[os.path.basename(f) for f in g] for g in part.groups] for part in parts]
-    assert names == [[["a0.parquet", "a1.parquet"]], [["b.parquet"]], [["c.parquet"]]]
+
+    def plan(cores):
+        r = BigtableStreamReader(None, opts, cores)
+        parts = r.partitions(r.initialOffset(), r.latestOffset())
+        assert all(isinstance(p, FilePartition) and p.ranges == () for p in parts)
+        return r, parts, [[[os.path.basename(f) for f in g] for g in p.groups] for p in parts]
+
+    # four tiny files cost 4 × 4 MiB: one core packs every group into one
+    # task; at three cores the split size is a third of that, so the
+    # two-file group closes a task of its own
+    _, _, names = plan(1)
+    assert names == [[["a0.parquet", "a1.parquet"], ["b.parquet"], ["c.parquet"]]]
+    r, parts, names = plan(3)
+    assert names == [[["a0.parquet", "a1.parquet"]], [["b.parquet"], ["c.parquet"]]]
 
     rows = _collect(r, parts)
     # (_row_key, _timestamp, pressure, temperature) — schema field order

@@ -124,6 +124,23 @@ def test_key_pruned_wire_scan_matches(spark, fuzz_cells_path, wire_addr):
     assert _rows(pruned) == _rows(_load(spark, fuzz_cells_path).filter(flt))
 
 
+def test_in_list_reads_one_row_set_per_shard(spark, fuzz_cells_path, wire_addr):
+    """A 6-range ``IN`` over the wire: each SampleRowKeys shard that holds
+    a piece of the ranges reads all of its pieces as one RowSet, so the
+    scan plans no more tasks than the full scan has shards (one per range
+    would be 6), and returns the parquet path's rows."""
+    flt = (
+        "region = 'eu-west3' AND balloon_id IN ('100', '205', '33') "
+        "AND event_minute IN ('m01', 'm04')"
+    )
+    pruned = _load(spark, wire_addr, stride=2048).filter(flt)
+    shards = _load(spark, wire_addr, stride=2048).rdd.getNumPartitions()
+    assert 1 < shards < 6
+    assert pruned.rdd.getNumPartitions() <= shards
+    want = _rows(_load(spark, fuzz_cells_path).filter(flt))
+    assert want and _rows(pruned) == want
+
+
 def test_endpoint_write_read_round_trip(spark):
     """Executor-parallel WRITES over the wire: df.write pushes each
     partition through MutateRows on its own connection; reading the same
