@@ -277,38 +277,6 @@ def containment_pairs(
 # --------------------------------------------------------- MinHash + LSH --
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 8,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, seed, minhash): portable min over md5('<seed>|'||shingle).
-
-    Shape note (measured at sf0.1): the tempting all-row-local form
-    (``array_min(transform(grams, ...))`` per seed in one projection) is
-    ~10× SLOWER because CollapseProject inlines the shingle-array
-    expression into every seed column — the split/gram/distinct pipeline
-    runs ``num_hashes`` times per row.  Exploding the array once and
-    min-aggregating per seed evaluates shingling exactly once; the
-    shuffle it costs carries only (id, shingle) pairs with map-side
-    partial mins.  The md5-string min is engine-independent (module
-    docstring).
-    """
-    return _minhash_wide(docs, num_hashes, k, text_col, id_col).select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("seed"), F.col(f"mh_{s}").alias("minhash"))
-                    for s in range(num_hashes)
-                ]
-            )
-        ).alias("x"),
-    ).select("id", F.col("x.seed").alias("seed"), F.col("x.minhash").alias("minhash"))
-
-
 def _minhash_wide(
     docs: DataFrame,
     num_hashes: int,
@@ -317,8 +285,12 @@ def _minhash_wide(
     id_col: str,
     _shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, mh_0..mh_{n-1}): shingles evaluated once via explode, then one
-    partial+final min-aggregation for all seeds."""
+    """(id, mh_0..mh_{n-1}): portable min over md5('<seed>|'||shingle).
+    Shingles are evaluated once via explode, then one partial+final
+    min-aggregation covers all seeds.  The row-local form
+    (``array_min(transform(grams, ...))`` per seed) measured ~10× slower at
+    sf0.1: CollapseProject inlines the shingle array into every seed
+    column."""
     sh = _shingles if _shingles is not None else shingles(docs, k, text_col, id_col)
     return sh.groupBy("id").agg(
         *[
@@ -713,14 +685,6 @@ def simhash_fingerprints(
     agg = w.groupBy("id").agg(*votes)
     fp = F.concat(*[F.when(F.col(f"bit_{j}") > 0, "1").otherwise("0") for j in range(bits)])
     return agg.select("id", fp.alias("simhash"))
-
-
-def simhash_buckets(docs: DataFrame, bits: int = 16, **kw) -> DataFrame:
-    """Group identical fingerprints: the zero-join near-dup pass."""
-    fp = simhash_fingerprints(docs, bits, **kw)
-    return fp.groupBy("simhash").agg(
-        F.min("id").alias("canonical_id"), F.count("*").alias("n_docs")
-    )
 
 
 # ---------------------------------------------------- embedding cosine --

@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from datafusion_bigtable_spark.functions.text import words
 from datafusion_bigtable_spark.operators.tfidf import corpus_term_stats
+from datafusion_bigtable_spark.sources import swap
 from datafusion_bigtable_spark.sources.layout import rewrite_files_dropping_ids
 
 POSTINGS_DIR = "postings"
@@ -343,7 +344,7 @@ def save_postings_index(
             DOCS_DIR: membership.schema.json(),
         },
     }
-    _commit_postings_meta(path, meta)
+    swap.write_json(os.path.join(path, POSTINGS_META), meta)
     return meta
 
 
@@ -359,13 +360,6 @@ def _write_terms(terms: DataFrame, target: str) -> None:
     cost as before — pinned in tests), an outsized one splits into
     advisory-sized files with the merge running at full parallelism."""
     terms.hint("rebalance").write.mode("overwrite").parquet(target)
-
-
-def _commit_postings_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, POSTINGS_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, POSTINGS_META))
 
 
 def load_postings_index(spark: SparkSession, path: str) -> PostingsIndex:
@@ -652,7 +646,7 @@ def _apply_postings_upsert(
     meta["n_docs"] = int(meta["n_docs"]) + int(batch_n)
     meta["dl_sum"] = int(meta["dl_sum"]) + int(stats["_sum"] or 0)
     meta["dl_docs"] = int(meta["dl_docs"]) + int(stats["_n"])
-    _commit_postings_meta(path, meta)
+    swap.write_json(os.path.join(path, POSTINGS_META), meta)
     return PostingsIndex(path=path, meta=meta, _spark=index._spark)
 
 
@@ -732,7 +726,7 @@ def compact_postings_index(
         src = os.path.join(path, sub)
         shutil.rmtree(src)
         os.rename(src + "_tmp", src)
-    _commit_postings_meta(path, index.meta)
+    swap.write_json(os.path.join(path, POSTINGS_META), index.meta)
     return PostingsIndex(path=path, meta=index.meta, _spark=index._spark)
 
 
@@ -878,7 +872,7 @@ def delete_from_postings_index(
     meta["n_docs"] = int(meta["n_docs"]) - int(stats["_n"])
     meta["dl_sum"] = int(meta["dl_sum"]) - int(stats["_sum"])
     meta["dl_docs"] = int(meta["dl_docs"]) - int(stats["_tok"])
-    _commit_postings_meta(path, meta)
+    swap.write_json(os.path.join(path, POSTINGS_META), meta)
     return PostingsIndex(path=path, meta=meta, _spark=index._spark)
 
 

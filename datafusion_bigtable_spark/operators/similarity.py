@@ -26,6 +26,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from datafusion_bigtable_spark.operators.partitioning import widen_if_narrow
+from datafusion_bigtable_spark.sources import swap
 
 # Widen the brute-force corpus side only when it carries at least one full
 # scan split of bytes (spark.sql.files.maxPartitionBytes at the session's
@@ -337,7 +338,17 @@ def build_ivf_index(
     return IvfIndex(ranked, nprobe=max(1, nprobe), centroids=seeds)
 
 
+# ---------------------------------------------------------------------------
+# The saved IVF store: ``cell=K`` assignment partitions, ``_centroids``, the
+# ``_ivf_meta.json`` commit marker (written last), a per-cell manifest and
+# optional PQ codes.  Every commit and crash heal goes through
+# sources/swap.py: ``_CELL_SWAP`` (delete and compaction rewrite single
+# cells; its marker also covers upsert appends) and ``_RETRAIN_SWAP``
+# (retrain replaces the whole store).  Each opener heals first.
+# ---------------------------------------------------------------------------
+
 IVF_MANIFEST_REL_PATH = "_ivf_manifest.parquet"  # _-prefixed: invisible to discovery
+_IVF_META = "_ivf_meta.json"
 
 #: Retraining recommendation threshold: an upsert batch whose rounded
 #: top-1-cosine mean sits more than this far BELOW the base build's marks
@@ -394,136 +405,95 @@ def _top1_mean(assignments: DataFrame, centroids: DataFrame) -> float | None:
     return None if m is None or m != m else float(m)  # m != m: NaN guard
 
 
-def _refresh_ivf_manifest(path: str, per_cell_rows: dict[int, int] | None) -> None:
-    """(Re)write the per-cell file/row-count manifest parquet.
-
-    ``per_cell_rows=None`` rebuilds row counts by listing + footer reads
-    ONCE (save time — the same pay-once posture as
-    sources.cells.write_manifest); a dict of appended counts per cell
-    merges incrementally: only the TOUCHED cell directories are re-listed
-    and no data footer is read, so an upsert refresh is O(batch cells),
-    never O(store files).  External writers bypassing save/upsert are out
-    of contract (they would also violate the append-only guarantee).
-    """
-    import glob as _glob
-    import os
-
-    import pyarrow as pa
+def _ivf_manifest_stats(path: str) -> dict[int, dict[str, int]]:
     import pyarrow.parquet as pq
 
     mpath = os.path.join(path, IVF_MANIFEST_REL_PATH)
-    stats: dict[int, dict[str, int]] = {}
-    if per_cell_rows is not None and os.path.exists(mpath):
-        for r in pq.read_table(mpath).to_pylist():
-            stats[int(r["cell"])] = {"files": int(r["files"]), "rows": int(r["rows"])}
-        touched = per_cell_rows.keys()
-    else:
-        per_cell_rows = None
-        touched = {
-            int(os.path.basename(d).split("=", 1)[1])
-            for d in _glob.glob(os.path.join(path, "cell=*"))
-            if os.path.isdir(d)
-        }
-    for cell in touched:
-        files = sorted(_glob.glob(os.path.join(path, f"cell={cell}", "*.parquet")))
-        if per_cell_rows is None:
-            rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        else:
-            rows = stats.get(cell, {}).get("rows", 0) + per_cell_rows[cell]
-        stats[cell] = {"files": len(files), "rows": rows}
+    if not os.path.exists(mpath):
+        return {}
+    return {
+        int(r["cell"]): {"files": int(r["files"]), "rows": int(r["rows"])}
+        for r in pq.read_table(mpath).to_pylist()
+    }
+
+
+def _append_ivf_manifest(path: str, per_cell_rows: dict[int, int]) -> None:
+    """Merge an upsert's appended row counts into the manifest: only the
+    TOUCHED cell directories are re-listed and no data footer is read, so
+    an upsert refresh is O(batch cells), never O(store files).  A store
+    without a manifest gets a full recount.  External writers bypassing
+    save/upsert are out of contract (they would also violate the
+    append-only guarantee)."""
+    import glob as _glob
+
+    if not os.path.exists(os.path.join(path, IVF_MANIFEST_REL_PATH)):
+        _recount_ivf_manifest(path)
+        return
+    stats = _ivf_manifest_stats(path)
+    for cell, n in per_cell_rows.items():
+        files = _glob.glob(os.path.join(path, f"cell={cell}", "*.parquet"))
+        stats[cell] = {"files": len(files), "rows": stats.get(cell, {}).get("rows", 0) + n}
+    _write_manifest_table(path, stats)
+
+
+def _recount_ivf_manifest(path: str, marker: dict | None = None) -> None:
+    """Recount the cells a pending marker names (``{"cells": [...]}``)
+    from their footers into the manifest — or every cell: at save (the
+    pay-once sweep, as sources.cells.write_manifest) and for an
+    unparsable marker.  Absolute counts, so it is right after appends and
+    removals alike, and after a crash before the mutation ran.  A crashed
+    upsert's drift record is not recovered (its batch anti-joins away on
+    replay): one trend point is lost, never a count."""
+    cells = (marker or {}).get("cells")
+    stats = {} if cells is None else _ivf_manifest_stats(path)
+    stats.update(swap.partition_stats(path, "cell", cells))
     _write_manifest_table(path, stats)
 
 
 def _write_manifest_table(path: str, stats: dict[int, dict[str, int]]) -> None:
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     cells = sorted(stats)
-    pq.write_table(
-        pa.table(
-            {
-                "cell": pa.array(cells, type=pa.int64()),
-                "files": pa.array([stats[c]["files"] for c in cells], type=pa.int64()),
-                "rows": pa.array([stats[c]["rows"] for c in cells], type=pa.int64()),
-            }
-        ),
-        os.path.join(path, IVF_MANIFEST_REL_PATH),
+    table = pa.table(
+        {
+            "cell": pa.array(cells, type=pa.int64()),
+            "files": pa.array([stats[c]["files"] for c in cells], type=pa.int64()),
+            "rows": pa.array([stats[c]["rows"] for c in cells], type=pa.int64()),
+        }
+    )
+    swap.write_file(
+        os.path.join(path, IVF_MANIFEST_REL_PATH), lambda tmp: pq.write_table(table, tmp)
     )
 
 
 _PENDING_MARKER = "_ivf_manifest.pending.json"
+_CELL_SWAP = swap.PartitionSwap(
+    "._del_tmp", "._del_old_", _PENDING_MARKER, _recount_ivf_manifest, drop_unswapped=True
+)
+_RETRAIN_SWAP = swap.StoreSwap("retrain", _IVF_META)
 
 
-def _write_pending_marker(path: str, per_cell_rows: dict[int, int]) -> None:
-    import os
-
-    with open(os.path.join(path, _PENDING_MARKER), "w") as f:
-        json.dump({"cells": sorted(int(c) for c in per_cell_rows)}, f)
-
-
-def _clear_pending_marker(path: str) -> None:
-    import contextlib
-    import os
-
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(os.path.join(path, _PENDING_MARKER))
-
-
-def _reconcile_pending_manifest(path: str) -> None:
-    """Heal a crash between an append and its manifest refresh.
-
-    A surviving pending marker means a prior upsert MAY have committed
-    data files whose rows never reached the manifest — and the
-    checkpoint replay can't fix it (the batch anti-joins to 0 and skips
-    the refresh), so without this the manifest undercounts FOREVER
-    (review r13 #1).  Recount ONLY the marker's cells from their file
-    footers (disk truth, O(files in touched cells)) and rewrite; a
-    marker from a crash BEFORE its append reconciles to the same values,
-    so this is safe to run unconditionally.  The crashed batch's drift
-    record is unrecoverable (the batch itself anti-joins away on
-    replay) — an accepted loss of one trend point, never of counts.
-    """
-    import glob as _glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    marker = os.path.join(path, _PENDING_MARKER)
-    if not os.path.exists(marker):
-        return
-    with open(marker) as f:
-        cells = json.load(f)["cells"]
-    true_rows = {}
-    for cell in cells:
-        files = _glob.glob(os.path.join(path, f"cell={cell}", "*.parquet"))
-        true_rows[int(cell)] = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    # absolute overwrite for the touched cells: read old stats, replace
-    mpath = os.path.join(path, IVF_MANIFEST_REL_PATH)
-    if os.path.exists(mpath):
-        stats = {
-            int(r["cell"]): {"files": int(r["files"]), "rows": int(r["rows"])}
-            for r in pq.read_table(mpath).to_pylist()
-        }
-    else:
-        stats = {}
-    for cell, rows in true_rows.items():
-        files = _glob.glob(os.path.join(path, f"cell={cell}", "*.parquet"))
-        stats[cell] = {"files": len(files), "rows": rows}
-    _write_manifest_table(path, stats)
-    _clear_pending_marker(path)
+def _open_ivf_meta(path: str) -> dict:
+    """Heal whatever a crash left mid-swap or mid-manifest-refresh, then
+    read the meta sidecar."""
+    _RETRAIN_SWAP.heal(path)
+    _CELL_SWAP.heal(path)
+    with open(os.path.join(path, _IVF_META)) as f:
+        return json.load(f)
 
 
 def read_ivf_manifest(path: str) -> list[dict] | None:
     """Per-cell ``{cell, files, rows}`` stats without touching any data
-    file (a surviving crash marker triggers a bounded reconciliation
-    first) — None when the store predates the manifest."""
-    import os
+    file (a surviving crash state heals first) — None when the store
+    predates the manifest."""
+    _CELL_SWAP.heal(path)
+    return _read_ivf_manifest(path)
 
+
+def _read_ivf_manifest(path: str) -> list[dict] | None:
     import pyarrow.parquet as pq
 
-    _reconcile_pending_manifest(path)
     mpath = os.path.join(path, IVF_MANIFEST_REL_PATH)
     return pq.read_table(mpath).to_pylist() if os.path.exists(mpath) else None
 
@@ -603,7 +573,7 @@ def save_ivf_index(index: IvfIndex, path: str) -> None:
                 index.centroids.write.mode("overwrite").parquet,
                 os.path.join(path, "_centroids"),
             )
-            fut_man = pool.submit(_refresh_ivf_manifest, path, None)
+            fut_man = pool.submit(_recount_ivf_manifest, path)
             meta["base_top1_mean"] = fut_mean.result()
             meta["drift_threshold"] = IVF_DRIFT_THRESHOLD
             meta["upserts"] = []
@@ -611,9 +581,8 @@ def save_ivf_index(index: IvfIndex, path: str) -> None:
             fut_man.result()
     else:
         _write_assignments()
-        _refresh_ivf_manifest(path, None)
-    with open(os.path.join(path, "_ivf_meta.json"), "w") as f:
-        json.dump(meta, f)
+        _recount_ivf_manifest(path)
+    swap.write_json(os.path.join(path, _IVF_META), meta)
 
 
 def _read_store(spark, path: str, meta: dict):
@@ -625,120 +594,6 @@ def _read_store(spark, path: str, meta: dict):
     if "schema" in meta:
         reader = reader.schema(StructType.fromJson(json.loads(meta["schema"])))
     return reader.parquet(path)
-
-
-def _reconcile_retrain_swap(path: str) -> None:
-    """Heal a store whose retrain crashed mid-swap (VERDICT r13 #4).
-
-    :func:`retrain_ivf_index`'s swap is ``rename(path, old)`` →
-    ``rename(tmp, path)`` → ``rmtree(old)``.  A crash between the two
-    renames leaves NO store at ``path`` while both sides survive intact:
-    the complete old store at ``._retrain_old`` and the complete rebuild
-    at ``._retrain_tmp`` (the first rename only happens after
-    ``save_ivf_index(tmp)`` finished).  A crash after the second rename
-    merely leaks the backup.  Reconcile, mirroring the manifest
-    pending-marker pattern (:func:`_reconcile_pending_manifest`):
-
-    - store present → drop a leftover *verified-dead* backup (only when
-      the store has its meta sidecar — never destroy the one readable
-      copy); a leftover ``tmp`` is a pre-swap crash's possibly-partial
-      rebuild and is left for the next retrain's own cleanup.
-    - store absent + complete ``tmp`` present → roll FORWARD (finish the
-      swap: the rebuild is complete by construction at that point).
-    - store absent + only the backup present → roll BACK.
-
-    Every mutation is existence-tolerant (review r14 #2): the store's
-    documented model is single-writer, but two READERS may race each
-    other into the same heal — whoever loses the rename/rmtree must not
-    crash on a store the winner just made healthy.
-    """
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "._retrain_tmp"
-    backup = path.rstrip("/") + "._retrain_old"
-    if os.path.isdir(path):
-        if os.path.isdir(backup) and os.path.isfile(
-            os.path.join(path, "_ivf_meta.json")
-        ):
-            shutil.rmtree(backup, ignore_errors=True)
-        return
-    if os.path.isdir(tmp) and os.path.isfile(os.path.join(tmp, "_ivf_meta.json")):
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # a concurrent reconciler won the roll-forward (tmp vanished
-            # or path appeared) — or the rename failed for a non-race
-            # reason; the verification below decides which
-            pass
-        # never delete a recovery copy on faith (review r14-2 #2): only
-        # discard the backup once the store at `path` actually reads
-        if os.path.isdir(backup) and os.path.isfile(
-            os.path.join(path, "_ivf_meta.json")
-        ):
-            shutil.rmtree(backup, ignore_errors=True)
-        return
-    if os.path.isdir(backup):
-        try:
-            os.rename(backup, path)
-        except OSError:
-            pass
-
-
-def _reconcile_delete_swaps(path: str) -> None:
-    """Heal a store whose :func:`delete_from_ivf_index` crashed mid-swap.
-
-    The delete rewrites ALL touched cells' survivors in ONE job into
-    ``._del_tmp/cell=K`` (a global ``_SUCCESS`` marks the write
-    complete), then swaps per cell: ``rename(cell=K, ._del_old_cell=K)``
-    → ``rename(tmp/cell=K, cell=K)``, and finally removes the backups
-    and the tmp root.  The crash state is ENCODED IN DIRECTORY NAMES
-    (the r14 compaction lesson: a json marker can itself be torn by the
-    crash it records).  Heal, every mutation existence-tolerant (two
-    readers may race into the same heal):
-
-    - tmp COMPLETE (``_SUCCESS`` present): roll FORWARD — for every
-      surviving backup, move the tmp cell in where the live dir is
-      absent (a touched cell with no tmp subdir had zero survivors and
-      stays legitimately absent), then drop the backup; drop tmp last.
-    - tmp incomplete or missing: roll BACK — restore every backup whose
-      live dir is absent, drop tmp.  (A complete-tmp crash BEFORE any
-      rename leaves no backups: tmp is simply dropped — the delete
-      never happened and re-applies idempotently.)
-
-    Either way every cell is individually consistent (no duplicate
-    rows, no torn files); a crash mid-swap leaves a PARTIALLY applied
-    delete that the same idempotent request completes.  The manifest
-    self-heals from the delete's pending marker
-    (:func:`_reconcile_pending_manifest` recounts touched cells from
-    footers — absolute counts, correct for removals as for appends)."""
-    import contextlib
-    import glob as _glob
-    import os
-    import shutil
-
-    base = path.rstrip("/")
-    tmp = os.path.join(base, "._del_tmp")
-    olds = _glob.glob(os.path.join(base, "._del_old_cell=*"))
-    if not olds and not os.path.isdir(tmp):
-        return
-    tmp_complete = os.path.isfile(os.path.join(tmp, "_SUCCESS"))
-    for old in olds:
-        cell = os.path.basename(old).split("=", 1)[1]
-        cdir = os.path.join(base, f"cell={cell}")
-        tcell = os.path.join(tmp, f"cell={cell}")
-        if tmp_complete:
-            if not os.path.isdir(cdir) and os.path.isdir(tcell):
-                with contextlib.suppress(OSError):
-                    os.rename(tcell, cdir)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            if not os.path.isdir(cdir):
-                with contextlib.suppress(OSError):
-                    os.rename(old, cdir)
-            else:
-                shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def delete_from_ivf_index(
@@ -767,13 +622,13 @@ def delete_from_ivf_index(
     cell-partitioned tmp (r16 review: a per-cell rewrite loop is a
     serial Spark job per cell — fine at 16 cells, a driver-round-trip
     disaster at a corpus-relative cell count), followed by O(touched)
-    pure renames under the name-encoded swap
-    :func:`_reconcile_delete_swaps` heals.  Untouched cells are never
-    read.  The manifest recounts the touched cells from footers through
-    the same pending-marker window as upsert.  When the store carries a
-    PQ codes table, its rows delete in the same call under the codes
-    table's own meta-removed-first window (a crash rebuilds codes from
-    the healed assignments — codes are derived state).  Returns the
+    pure renames through ``_CELL_SWAP`` (sources/swap.py).  Untouched
+    cells are never read.  The manifest recounts the touched cells from
+    footers through the same pending-marker window as upsert.  When the
+    store carries a PQ codes table, its rows delete in the same call
+    under the codes table's own meta-removed-first window (a crash
+    rebuilds codes from the healed assignments — codes are derived
+    state).  Returns the
     number of ids removed."""
     import os
     import shutil
@@ -783,7 +638,6 @@ def delete_from_ivf_index(
     # argument as upsert's (r19, VERDICT r18 #1).
     if handle is None:
         handle = IvfStoreHandle(spark, path)
-    _reconcile_pending_manifest(path)
     meta = handle.meta
     ids = F.broadcast(delete_ids.select(id_col).distinct())
     store = handle.read_store(spark)
@@ -809,12 +663,15 @@ def delete_from_ivf_index(
         # assignments + codebooks, so fail-loud + rebuild is the contract)
         pq_meta = _read_pq_meta(path)
         os.remove(os.path.join(path, _PQ_META))
-    _write_pending_marker(path, {c: 0 for c in touched})
+    # a kept handle skips the open's heal: finish an earlier mutation's
+    # manifest refresh before this mutation's marker replaces its marker
+    _CELL_SWAP.refresh_manifest(path)
+    _CELL_SWAP.arm(path, {"cells": touched})
     reader = spark.read.option("basePath", path)
     if handle.store_schema is not None:
         # sidecar schema: the rewrite reads no footer either
         reader = reader.schema(handle.store_schema)
-    tmp = os.path.join(path, "._del_tmp")
+    tmp = os.path.join(path, _CELL_SWAP.tmp)
     shutil.rmtree(tmp, ignore_errors=True)
     cell_dirs = [os.path.join(path, f"cell={c}") for c in touched]
     (
@@ -829,20 +686,11 @@ def delete_from_ivf_index(
         .partitionBy("cell")
         .parquet(tmp)
     )
-    for cell in touched:
-        cdir = os.path.join(path, f"cell={cell}")
-        tcell = os.path.join(tmp, f"cell={cell}")
-        old = os.path.join(path, f"._del_old_cell={cell}")
-        os.rename(cdir, old)
-        if os.path.isdir(tcell):
-            os.rename(tcell, cdir)
-        # a touched cell with no tmp subdir had zero survivors: absent
-        # partition dir == zero rows, exactly a fresh build's layout
-    for cell in touched:
-        shutil.rmtree(os.path.join(path, f"._del_old_cell={cell}"))
-    shutil.rmtree(tmp)
+    # a touched cell with no tmp subdir had zero survivors: absent
+    # partition dir == zero rows, exactly a fresh build's layout
+    _CELL_SWAP.swap(path, [f"cell={c}" for c in touched])
     # footer recount of exactly the touched cells; clears the marker
-    _reconcile_pending_manifest(path)
+    _CELL_SWAP.finish(path, {"cells": touched})
     if has_pq:
         from datafusion_bigtable_spark.sources.layout import (
             rewrite_files_dropping_ids,
@@ -854,7 +702,7 @@ def delete_from_ivf_index(
         rewrite_files_dropping_ids(
             spark, os.path.join(path, _PQ_CODES_DIR), "id", ids_codes, "id"
         )
-        _commit_pq_meta(path, pq_meta)
+        swap.write_json(os.path.join(path, _PQ_META), pq_meta)
     return int(n_gone)
 
 
@@ -889,12 +737,9 @@ def compact_ivf_store(
     Crash protocol — nothing new, by design:
 
     - **Cells** reuse the delete machinery verbatim with an EMPTY drop
-      set: ONE job rewrites every fragmented cell into
-      ``._del_tmp/cell=K`` (global ``_SUCCESS`` = complete), then
-      O(touched) pure renames under the ``._del_old_cell=K`` name-
-      encoded swaps — so a crash anywhere heals through the existing
-      :func:`_reconcile_delete_swaps` roll-forward/roll-back, and the
-      manifest recounts touched cells from footers through the same
+      set: ONE job rewrites every fragmented cell, then ``_CELL_SWAP``
+      swaps them in and heals a crash anywhere (sources/swap.py), and
+      the manifest recounts touched cells from footers through the same
       pending-marker window as upsert/delete.
     - **Codes** follow the codes table's own meta-removed-first window
       (the same protocol as attach/upsert/delete): a crash mid-rewrite
@@ -907,11 +752,7 @@ def compact_ivf_store(
 
     from pyspark.sql.types import StructType
 
-    _reconcile_retrain_swap(path)
-    _reconcile_delete_swaps(path)
-    _reconcile_pending_manifest(path)
-    with open(os.path.join(path, "_ivf_meta.json")) as f:
-        meta = json.load(f)
+    meta = _open_ivf_meta(path)
     base = path.rstrip("/")
     # a crashed codes-rewrite leaves its tmp behind (the meta-removed-
     # first window already marks the codes "missing — re-attach"); the
@@ -935,7 +776,7 @@ def compact_ivf_store(
     needs_codes = os.path.isfile(os.path.join(base, _PQ_META)) and len(
         _glob.glob(os.path.join(codes_dir, "*.parquet"))
     ) > trigger
-    tmp = os.path.join(base, "._del_tmp")
+    tmp = os.path.join(base, _CELL_SWAP.tmp)
 
     def _rewrite_cells():
         reader = spark.read.option("basePath", path)
@@ -977,7 +818,7 @@ def compact_ivf_store(
         os.remove(os.path.join(base, _PQ_META))
         shutil.rmtree(ctmp, ignore_errors=True)
     if touched:
-        _write_pending_marker(path, {c: 0 for c in touched})
+        _CELL_SWAP.arm(path, {"cells": touched})
         shutil.rmtree(tmp, ignore_errors=True)
     from concurrent.futures import ThreadPoolExecutor
 
@@ -986,22 +827,13 @@ def compact_ivf_store(
         fut_codes = pool.submit(_rewrite_codes) if needs_codes else None
         if fut_cells is not None:
             fut_cells.result()
-            for cell in touched:
-                cdir = os.path.join(base, f"cell={cell}")
-                tcell = os.path.join(tmp, f"cell={cell}")
-                old = os.path.join(base, f"._del_old_cell={cell}")
-                os.rename(cdir, old)
-                if os.path.isdir(tcell):
-                    os.rename(tcell, cdir)
-            for cell in touched:
-                shutil.rmtree(os.path.join(base, f"._del_old_cell={cell}"))
-            shutil.rmtree(tmp)
-            _reconcile_pending_manifest(path)
+            _CELL_SWAP.swap(base, [f"cell={c}" for c in touched])
+            _CELL_SWAP.finish(path, {"cells": touched})
         if fut_codes is not None:
             fut_codes.result()
             shutil.rmtree(codes_dir)
             os.rename(ctmp, codes_dir)
-            _commit_pq_meta(path, pq_meta)
+            swap.write_json(os.path.join(base, _PQ_META), pq_meta)
     return {"cells_compacted": len(touched), "codes_compacted": needs_codes}
 
 
@@ -1010,8 +842,8 @@ def ivf_store_stats(path: str) -> dict:
     (manifest + directory globs; no Spark session, no data reads, no
     jobs): the observability a maintenance scheduler needs to decide
     WHEN to run :func:`compact_ivf_store` without paying anything to
-    ask.  A surviving crash marker triggers the bounded manifest
-    reconciliation first (the same heal-on-read every opener runs).
+    ask.  A surviving crash state heals first (the same heal-on-read
+    every opener runs).
 
     Returns ``{"n_cells", "n_rows", "total_files",
     "max_files_per_cell", "pq_codes_files" (None when no codes
@@ -1019,17 +851,13 @@ def ivf_store_stats(path: str) -> dict:
     import glob as _glob
     import os
 
-    # Heal swap crashes BEFORE counting, mirroring every other opener
-    # (load/delete/compact): without this, stats on a store crashed
-    # mid-delete/compact swap recounts the temporarily-absent cell dir as
-    # empty and writes that into the manifest — a forever-undercount the
-    # pending marker exists to prevent (ADVICE r17).  Both heals are
-    # pure-filesystem renames, so the listing-only/no-Spark contract holds.
-    _reconcile_retrain_swap(path)
-    _reconcile_delete_swaps(path)
-    with open(os.path.join(path, "_ivf_meta.json")) as f:
-        meta = json.load(f)
-    man = read_ivf_manifest(path)
+    # Heal swap crashes BEFORE counting, like every other opener: a
+    # recount of a cell whose dir is mid-swap would write a
+    # forever-undercount into the manifest (ADVICE r17).  The heals are
+    # pure-filesystem renames and footer reads, so the
+    # listing-only/no-Spark contract holds.
+    meta = _open_ivf_meta(path)
+    man = _read_ivf_manifest(path)
     if man is None:
         # Legacy store predating the manifest: absence of evidence is not
         # an empty store — fail loud instead of reporting zeros a
@@ -1063,16 +891,10 @@ def load_ivf_index(spark, path: str) -> IvfIndex:
     sidecar present, loading performs ZERO data-file reads — schemas
     come from ``_ivf_meta.json``, per-cell stats from the manifest
     (pinned in tests by loading a store whose data files are truncated
-    to zero bytes).  A store vanished mid-retrain-swap is healed first
-    (:func:`_reconcile_retrain_swap`)."""
-    import os
-
+    to zero bytes).  Any crash state heals first (:func:`_open_ivf_meta`)."""
     from pyspark.sql.types import StructType
 
-    _reconcile_retrain_swap(path)
-    _reconcile_delete_swaps(path)
-    with open(os.path.join(path, "_ivf_meta.json")) as f:
-        meta = json.load(f)
+    meta = _open_ivf_meta(path)
     df = _read_store(spark, path, meta).select(*meta["columns"])
     cb_path = os.path.join(path, "_centroids")
     centroids = None
@@ -1119,15 +941,6 @@ def _read_pq_meta(path: str) -> dict:
     return meta
 
 
-def _commit_pq_meta(path: str, meta: dict) -> None:
-    import os
-
-    tmp = os.path.join(path, _PQ_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _PQ_META))
-
-
 def attach_pq_codes(
     spark,
     path: str,
@@ -1155,10 +968,7 @@ def attach_pq_codes(
     (``delete_from_ivf_index``).  Returns the committed meta."""
     import os
 
-    _reconcile_retrain_swap(path)
-    _reconcile_delete_swaps(path)
-    with open(os.path.join(path, "_ivf_meta.json")) as f:
-        meta = json.load(f)
+    meta = _open_ivf_meta(path)
     # invalidate first: a crashed re-attach must not leave the old meta
     # pointing at a half-rewritten codes table
     try:
@@ -1175,10 +985,7 @@ def attach_pq_codes(
         with open(cb_path) as f:
             codebooks = json.load(f)["codebooks"]
     else:
-        tmp = cb_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"codebooks": codebooks}, f)
-        os.replace(tmp, cb_path)
+        swap.write_json(cb_path, {"codebooks": codebooks})
     id_col = meta["columns"][0]  # build/upsert select id first by contract
     vecs = (
         _read_store(spark, path, meta)
@@ -1197,7 +1004,7 @@ def attach_pq_codes(
         "sub_dim": len(codebooks[0][0]),
         "id_col": id_col,
     }
-    _commit_pq_meta(path, pq_meta)
+    swap.write_json(os.path.join(path, _PQ_META), pq_meta)
     return pq_meta
 
 
@@ -1271,21 +1078,19 @@ class IvfStoreHandle:
 
     Contract: valid while its owner is the store's sole mutator — the
     streaming harness's exact situation (checkpointed single-writer
-    foreachBatch).  The swap/manifest reconcilers run once at open; a
-    crash mid-batch is healed by the NEXT opener, the same recovery
-    point as the per-call open it replaces.  ``meta`` is mutated in
-    place by :func:`upsert_ivf_index` as drift records append, so the
-    dict mirrors the sidecar without a re-read per batch."""
+    foreachBatch).  The swap and manifest heals (sources/swap.py) run
+    once at open; a crash mid-batch is healed by the NEXT opener, the
+    same recovery point as the per-call open it replaces.  ``meta`` is
+    mutated in place by :func:`upsert_ivf_index` as drift records
+    append, so the dict mirrors the sidecar without a re-read per
+    batch."""
 
     def __init__(self, spark, path: str):
         import os
 
         from pyspark.sql.types import StructType
 
-        _reconcile_retrain_swap(path)
-        _reconcile_delete_swaps(path)
-        with open(os.path.join(path, "_ivf_meta.json")) as f:
-            self.meta = json.load(f)
+        self.meta = _open_ivf_meta(path)
         self.path = path
         self.store_schema = (
             StructType.fromJson(json.loads(self.meta["schema"]))
@@ -1554,10 +1359,12 @@ def upsert_ivf_index(
             # Crash consistency (review r13 #1): a death between the append
             # and the manifest refresh would undercount FOREVER (the
             # checkpoint replay anti-joins to 0 and never re-refreshes).
-            # Stage the intent first; the next upsert reconciles the
-            # touched cells from footers if the marker survived a crash.
-            _reconcile_pending_manifest(path)
-            _write_pending_marker(path, per_cell)
+            # Stage the intent first; the next open recounts the touched
+            # cells from footers if the marker survived a crash.  A kept
+            # handle skips the open's heal, so an earlier failed
+            # mutation's marker is refreshed before this one replaces it.
+            _CELL_SWAP.refresh_manifest(path)
+            _CELL_SWAP.arm(path, {"cells": sorted(per_cell)})
             # The two appends OVERLAP (r19, guide §2.6): both read the
             # checkpointed batch blocks (no file source in the plan, so
             # the assignments append landing first cannot invalidate the
@@ -1574,12 +1381,12 @@ def upsert_ivf_index(
                 fut_codes = pool.submit(_append_codes) if has_pq else None
                 fut_asg = pool.submit(_append_assignments)
                 fut_asg.result()
-                _refresh_ivf_manifest(path, per_cell)
-                _clear_pending_marker(path)
+                _append_ivf_manifest(path, per_cell)
+                swap.discard(os.path.join(path, _PENDING_MARKER))
                 if fut_codes is not None:
                     fut_codes.result()
             if has_pq:
-                _commit_pq_meta(path, pq_meta)
+                swap.write_json(os.path.join(path, _PQ_META), pq_meta)
             base_mean = meta.get("base_top1_mean")
             threshold = meta.get("drift_threshold", IVF_DRIFT_THRESHOLD)
             drifted = (
@@ -1609,8 +1416,7 @@ def upsert_ivf_index(
                 ) + sum(int(u["appended"]) for u in dropped)
             if drifted:
                 meta["retrain_recommended"] = True
-            with open(os.path.join(path, "_ivf_meta.json"), "w") as f:
-                json.dump(meta, f)
+            swap.write_json(os.path.join(path, _IVF_META), meta)
     finally:
         # deterministic release of the checkpoint blocks (DataFrame
         # .unpersist cannot reach an RDD-level checkpoint)
@@ -1679,17 +1485,13 @@ def retrain_ivf_index(
     same cost as the original build), which is exactly why drift
     detection exists to tell you WHEN it is worth paying.
 
-    Write-temp-then-swap like ``compact_cells_store``: a crash cannot
-    destroy the DATA (both sides of the swap survive intact), and a
-    crash in the brief window between the two renames — when ``path``
-    itself does not exist — is healed by the next
-    :func:`load_ivf_index` via :func:`_reconcile_retrain_swap` (roll
-    forward to the complete rebuild, or back to the backup), so
-    availability recovers without manual renames (VERDICT r13 #4).
-    Readers holding the old frame fail loud on vanished files rather
-    than reading a half-rewritten table.  The backup is only discarded
-    after the swapped-in store verifies (meta sidecar readable,
-    ADVICE r13).  ``n_cells`` defaults to the stored codebook's size.
+    Write-temp-then-swap like ``compact_cells_store``, through
+    ``_RETRAIN_SWAP`` (sources/swap.py): a crash cannot destroy the DATA,
+    and a crash between the two renames — when ``path`` itself does not
+    exist — is healed by the next opener (VERDICT r13 #4).  Readers
+    holding the old frame fail loud on vanished files rather than reading
+    a half-rewritten table.  ``n_cells`` defaults to the stored
+    codebook's size.
     Returns the number of vectors reindexed.
     """
     import os
@@ -1720,7 +1522,7 @@ def retrain_ivf_index(
         store.assignments.filter(F.col("_rn") == 1)
         .select(F.col(id_col), F.col("_dv").alias(vec_col))
     )
-    tmp = path.rstrip("/") + "._retrain_tmp"
+    tmp = _RETRAIN_SWAP.tmp(path)
     shutil.rmtree(tmp, ignore_errors=True)
     with build_ivf_index(
         vectors,
@@ -1736,21 +1538,10 @@ def retrain_ivf_index(
         # action per retrain); at nprobe=1 assignment rows == ids, and a
         # wider store falls back to the one count over the cached frame
         if idx.nprobe == 1:
-            n = sum(m["rows"] for m in read_ivf_manifest(tmp) or [])
+            n = sum(m["rows"] for m in _read_ivf_manifest(tmp) or [])
         else:
             n = idx.assignments.filter(F.col("_rn") == 1).count()
-    backup = path.rstrip("/") + "._retrain_old"
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path, backup)
-    os.rename(tmp, path)
-    # verify the swapped-in store before discarding the backup
-    # (ADVICE r13): never delete the last good copy on faith.
-    if not os.path.isfile(os.path.join(path, "_ivf_meta.json")):
-        raise RuntimeError(
-            f"retrain swap left no readable store at {path}; the old "
-            f"store is preserved at {backup}"
-        )
-    shutil.rmtree(backup)
+    _RETRAIN_SWAP.swap(path)
     return n
 
 

@@ -12,27 +12,13 @@ task-schedule overhead.  The compactor is O(small shards), never
 O(store): it plans from the filesystem listing + parquet footers (names
 and metadata only, zero data reads), rewrites ONLY shards whose file
 count exceeds what their row count needs, and swaps each rewritten shard
-directory via rename-with-named-backup so a crash at any point leaves a
-store that `reconcile_compaction` restores from disk truth — the backup
-directory's NAME is the crash record (no sidecar the crash could tear),
-and the shard readers (sources/shards.py) reconcile before planning so
-no crash state outlives the next touch of the store.  The manifest
-refresh keeps the IVF manifest's pending-marker discipline
-(operators/similarity.py::_reconcile_pending_manifest), written
-atomically.
-
-**Concurrency contract (ADVICE r14)**: ONE maintenance writer per store
-at a time — the same single-writer discipline as the IVF retrain swap
-(operators/similarity.py).  The swap protocol is lock-free, so a
-CONCURRENT process running ``reconcile_compaction`` mid-swap cannot
-distinguish crash state from in-progress work: it would restore the
-backup and the compactor's subsequent rename then fails loudly
-(ENOTEMPTY/EEXIST).  No data is ever lost — the protocol only renames
-committed directories — but the compaction run aborts, so schedule
-maintenance (compaction, retrain, re-layout) from a single owner.
-Readers are safe at any time EXCEPT while a maintenance writer is
-actively swapping: their heal-on-read is the crash-recovery path, not a
-concurrent-access license.
+directory in through sources/swap.py (``_SHARD_SWAP``:
+``._compact_tmp/<col>=K``, backups ``._compact_old_<col>=K``, manifest
+marker ``_compact_manifest.pending.json``).  That module states the
+crash protocol and the heal; the compactor and the shard readers
+(sources/shards.py, `read_range_sorted_shards`) run the heal first, so
+no crash state outlives the next touch of the store.  One maintenance
+writer per store at a time, as for the IVF store.
 
 **Range-sorted shards** (`write_range_sorted_shards`): the terasort
 shape.  A training run that wants curriculum order (or a store that
@@ -53,7 +39,6 @@ global-order consumer just concatenates shards in id order.
 
 from __future__ import annotations
 
-import contextlib
 import glob
 import json
 import math
@@ -63,6 +48,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datafusion_bigtable_spark.sources.shards import MANIFEST_DIR
+from datafusion_bigtable_spark.sources.swap import (
+    PartitionSwap,
+    partition_stats,
+    write_file,
+    write_json,
+)
 
 _MANIFEST_MARKER = "_compact_manifest.pending.json"
 _RANGE_META = "_range_layout.json"
@@ -76,95 +67,10 @@ _RANGE_BOUNDS = "_range_bounds.parquet"
 
 def shard_file_stats(path: str, shard_col: str = "shard_id") -> dict[int, dict]:
     """Per-shard ``{files, rows}`` from directory listings + parquet
-    footers — metadata only, no data pages read, no Spark job.  At scale
-    the listing is O(files) NAMES on the driver (the same cost every
-    planner pays); rows come from footers, which compaction needs anyway
-    to size its output."""
-    import pyarrow.parquet as pq
-
-    out: dict[int, dict] = {}
-    for d in glob.glob(os.path.join(path, f"{shard_col}=*")):
-        raw = os.path.basename(d).split("=", 1)[1]
-        try:
-            shard = int(raw)
-        except ValueError:
-            # ADVICE r14: a store with null shard ids materializes a
-            # `shard_id=__HIVE_DEFAULT_PARTITION__` directory; int() on it
-            # used to raise — and because the shard READERS run reconcile
-            # (which can reach this via a leftover manifest marker), every
-            # read of such a store failed.  Compaction has no rewrite for
-            # a non-integer shard (the plan/swap key is the int id), so
-            # skip it: the directory stays byte-untouched and readable.
-            continue
-        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        out[shard] = {"files": len(files), "rows": rows}
-    return out
-
-
-def reconcile_compaction(path: str) -> None:
-    """Heal a crash anywhere in a compaction run.  The swap protocol per
-    shard is:
-
-    1. ``shard=K`` → ``._compact_old_shard=K``  (live dir vanishes)
-    2. ``tmp/shard=K`` → ``shard=K``            (live dir returns,
-       compacted; SKIPPED for a zero-row shard — its compacted form is
-       no dir)
-    3. backup removed
-
-    The BACKUP DIRECTORY IS THE CRASH STATE — its name carries the shard
-    identity, so recovery needs no sidecar that could itself be torn by
-    the crash (review r14-2 #2: a half-written json marker wedged every
-    future run on json.load).  A surviving backup means one of two disk
-    states, both decidable without guessing: live dir PRESENT → the swap
-    completed (crash between 2 and 3): drop the backup.  Live dir
-    ABSENT → the swap half-ran, or a zero-row removal crashed before its
-    cleanup: restore the backup (a restored half-swap or zero-row shard
-    just re-compacts next run — convergent).  Either way every row is
-    still on disk in exactly one committed directory; the protocol only
-    ever RENAMES live data, and deletes a backup only after its
-    replacement is in place.
-
-    The MANIFEST marker (written atomically via tmp+rename before the
-    first swap, cleared after the refresh) means a crash may have landed
-    between a swap and the manifest rewrite — without it the manifest
-    would undercount file merges FOREVER, because the next compaction
-    run sees an already-compacted store, plans nothing, and returns
-    before its own refresh (the same heal-on-read shape as the IVF
-    manifest's pending marker).  The refresh recounts from footers
-    (O(files) metadata, idempotent), so running it after a crash at ANY
-    point is safe.  An unparsable marker (external corruption — the
-    atomic write rules out torn writes) still heals: the shard column
-    falls back to the partition-directory names.  No-op without
-    markers/backups."""
-    for backup in glob.glob(os.path.join(path, "._compact_old_*=*")):
-        live = os.path.join(path, os.path.basename(backup)[len("._compact_old_"):])
-        if os.path.exists(live):
-            shutil.rmtree(backup, ignore_errors=True)
-        else:
-            os.rename(backup, live)
-    mmarker = os.path.join(path, _MANIFEST_MARKER)
-    if os.path.exists(mmarker):
-        shard_col = None
-        try:
-            with open(mmarker) as f:
-                shard_col = json.load(f)["shard_col"]
-        except (ValueError, KeyError, OSError):
-            dirs = glob.glob(os.path.join(path, "*=*"))
-            if dirs:
-                shard_col = os.path.basename(dirs[0]).split("=", 1)[0]
-        if shard_col is not None:
-            _refresh_manifest(path, shard_col)
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(mmarker)
-
-
-def _write_atomic(target: str, payload: dict) -> None:
-    """tmp+rename so a crash mid-write can never leave a torn file."""
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, target)
+    footers — metadata only, no data pages read, no Spark job
+    (sources/swap.py::partition_stats).  Compaction needs the footers
+    anyway to size its output."""
+    return partition_stats(path, shard_col)
 
 
 def compact_training_shards(
@@ -184,11 +90,9 @@ def compact_training_shards(
 
     One Spark job reads ONLY the selected shards (partition-pruned scan),
     re-buckets them with ``maxRecordsPerFile``, and writes to a temp root;
-    each shard directory is then swapped via rename-with-named-backup
-    (crash recovery: `reconcile_compaction` — run here first, and by the
-    shard readers in sources/shards.py, so no crash state outlives the
-    next touch of the store)."""
-    reconcile_compaction(path)
+    the shard directories are then swapped in by ``_SHARD_SWAP``, whose
+    heal runs here first."""
+    _SHARD_SWAP.heal(path)
     stats = shard_file_stats(path, shard_col)
     plan = {
         s: {**st, "target_files": max(1, math.ceil(st["rows"] / target_records_per_file))}
@@ -202,7 +106,7 @@ def compact_training_shards(
     }
     if not plan:
         return {}
-    tmp = os.path.join(path, "._compact_tmp")
+    tmp = os.path.join(path, _SHARD_SWAP.tmp)
     shutil.rmtree(tmp, ignore_errors=True)
     # a zero-row shard (an external/crashed writer's empty footers) has no
     # rewrite — its compacted form is no directory at all; routing it
@@ -244,39 +148,37 @@ def compact_training_shards(
                     f"{new_stats.get(s, {}).get('rows')} rows, expected {plan[s]['rows']}; "
                     f"store untouched, temp left at {tmp} for inspection"
                 )
+    else:
+        # every planned shard has zero rows: the complete rewrite is empty
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
     if refresh_manifest:
         # armed BEFORE the first swap: from here on the manifest may
-        # disagree with the files until the refresh lands, and a crash
-        # anywhere in between must be healed by reconcile (which the next
-        # compaction/read entry point runs) — not waited out
-        _write_atomic(os.path.join(path, _MANIFEST_MARKER), {"shard_col": shard_col})
-    for s in sorted(plan):
-        live = os.path.join(path, f"{shard_col}={s}")
-        # the backup name IS the recovery record (see reconcile_compaction)
-        backup = os.path.join(path, f"._compact_old_{shard_col}={s}")
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(live, backup)
-        if plan[s]["rows"] > 0:
-            os.rename(os.path.join(tmp, f"{shard_col}={s}"), live)
-        shutil.rmtree(backup)
-    shutil.rmtree(tmp, ignore_errors=True)
+        # disagree with the files until the refresh lands
+        _SHARD_SWAP.arm(path, {"shard_col": shard_col})
+    _SHARD_SWAP.swap(path, [f"{shard_col}={s}" for s in sorted(plan)])
     if refresh_manifest:
-        _refresh_manifest(path, shard_col)
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(path, _MANIFEST_MARKER))
+        _SHARD_SWAP.finish(path, {"shard_col": shard_col})
     return plan
 
 
-def _refresh_manifest(path: str, shard_col: str) -> None:
+def _refresh_manifest(path: str, marker: dict | None) -> None:
     """Rewrite the shard manifest from footer truth — O(files) metadata,
-    zero data reads, no Spark session (so crash reconciliation can run it
-    from any entry point); same (shard, n_rows, n_files) schema as the
-    sink's (sources/shards.py::write_training_shards)."""
+    zero data reads, no Spark session (so a heal can run it from any
+    entry point); same (shard, n_rows, n_files) schema as the sink's
+    (sources/shards.py::write_training_shards).  ``marker`` names the
+    shard column; without one (an unparsable marker) it comes from the
+    partition-directory names."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    stats = shard_file_stats(path, shard_col)
-    items = sorted(stats.items())
+    shard_col = (marker or {}).get("shard_col")
+    if shard_col is None:
+        dirs = glob.glob(os.path.join(path, "*=*"))
+        if not dirs:
+            return
+        shard_col = os.path.basename(dirs[0]).split("=", 1)[0]
+    items = sorted(shard_file_stats(path, shard_col).items())
     table = pa.table(
         {
             shard_col: pa.array([int(s) for s, _ in items], type=pa.int32()),
@@ -288,6 +190,9 @@ def _refresh_manifest(path: str, shard_col: str) -> None:
     shutil.rmtree(mdir, ignore_errors=True)
     os.makedirs(mdir)
     pq.write_table(table, os.path.join(mdir, "part-00000.parquet"))
+
+
+_SHARD_SWAP = PartitionSwap("._compact_tmp", "._compact_old_", _MANIFEST_MARKER, _refresh_manifest)
 
 
 # ---------------------------------------------------------------------------
@@ -381,7 +286,7 @@ def write_range_sorted_shards(
     # atomically LAST so a complete meta implies complete bounds — the
     # same marker-last discipline as the compaction manifest.
     _write_range_bounds(path, bounds)
-    _write_atomic(
+    write_json(
         os.path.join(path, _RANGE_META),
         {
             "order_col": order_col,
@@ -472,9 +377,8 @@ def _write_range_bounds(path: str, bounds: list) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tmp = os.path.join(path, _RANGE_BOUNDS + ".tmp")
-    pq.write_table(pa.table({"bound": pa.array(bounds)}), tmp)
-    os.replace(tmp, os.path.join(path, _RANGE_BOUNDS))
+    table = pa.table({"bound": pa.array(bounds)})
+    write_file(os.path.join(path, _RANGE_BOUNDS), lambda tmp: pq.write_table(table, tmp))
 
 
 def read_range_layout_bounds(path: str) -> tuple[dict, list]:
@@ -535,9 +439,9 @@ def read_range_sorted_shards(
     returned frame is identical to filtering the full store.
 
     Compaction crash state heals first (same reader contract as
-    sources/shards.py) — reconcile only ever touches integer shard
-    backups, never the layout sidecars."""
-    reconcile_compaction(path)
+    sources/shards.py) — the heal only ever touches shard backups and
+    the compaction temp dir, never the layout sidecars."""
+    _SHARD_SWAP.heal(path)
     meta, bounds = read_range_layout_bounds(path)
     order_col, shard_col = meta["order_col"], meta["shard_col"]
     n = meta["n_shards"]

@@ -18,6 +18,10 @@ writer never sorts globally and never funnels through one task.
 Determinism: shard membership comes from the caller's shard column
 (e.g. ``corpus_shard_assign``'s md5-derived id), so a re-run writes the
 same rows to the same shard directories.
+
+Compaction (sources/layout.py) swaps shard directories through
+sources/swap.py; both readers here run its heal before they plan, so a
+crashed compaction never shows up as a missing shard.
 """
 
 from __future__ import annotations
@@ -71,27 +75,16 @@ def write_training_shards(
         return
     from datafusion_bigtable_spark.sources.layout import _refresh_manifest
 
-    _refresh_manifest(path, shard_col)
-
-
-def _heal_before_read(path: str) -> None:
-    """Heal any compaction crash state before planning a read.  Without
-    this, a reader between a crashed mid-swap and the next maintenance
-    run would silently see the store MINUS the mid-swap shard — the
-    backup dir is dot-prefixed, so Spark skips it and filters on the
-    shard return 0 rows with no error (review r14-2 #1; the IVF store's
-    load heals the retrain swap the same way).  Pure filesystem checks,
-    no-op (two globs) on a healthy store."""
-    from datafusion_bigtable_spark.sources.layout import reconcile_compaction
-
-    reconcile_compaction(path)
+    _refresh_manifest(path, {"shard_col": shard_col})
 
 
 def read_shard_manifest(spark: SparkSession, path: str) -> DataFrame:
     """The per-shard (shard, n_rows, n_files) table — ONE small read.  A
     surviving compaction crash state heals first (so the manifest never
     serves counts a crashed refresh left stale)."""
-    _heal_before_read(path)
+    from datafusion_bigtable_spark.sources.layout import _SHARD_SWAP
+
+    _SHARD_SWAP.heal(path)
     return spark.read.parquet(f"{path}/{MANIFEST_DIR}")
 
 
@@ -101,9 +94,13 @@ def read_training_shards(
     """Read back all shards, or only ``shards`` — the filter is on the
     partition column, so pruning happens at the FILE level (a rank
     reading shard 3 opens only ``shard_id=3/``; pinned in tests).  A
-    surviving compaction crash state heals first (a mid-swap shard would
-    otherwise silently vanish from the scan)."""
-    _heal_before_read(path)
+    surviving compaction crash state heals first (sources/swap.py): the
+    backup dir is dot-prefixed, so Spark would skip a mid-swap shard and
+    filters on it would return 0 rows with no error.  On a healthy store
+    the heal is one glob and two existence checks."""
+    from datafusion_bigtable_spark.sources.layout import _SHARD_SWAP
+
+    _SHARD_SWAP.heal(path)
     df = spark.read.parquet(path)
     if shards is not None:
         df = df.filter(F.col("shard_id").isin([int(s) for s in shards]))

@@ -172,7 +172,7 @@ def run_streaming_index_maintain(
     no data — the policy check costs a directory listing, never a Spark
     job.  Replay safety needs nothing new: the upsert anti-joins a
     redelivered batch to nothing, and compaction is idempotent (a
-    crashed swap heals through the delete machinery's reconcilers on the
+    crashed swap heals through sources/swap.py on the
     next open — crash shapes pinned in tests/test_ivf_lifecycle.py), so
     at-least-once delivery composes from parts that are already safe."""
     from datafusion_bigtable_spark.operators.similarity import (

@@ -593,6 +593,80 @@ def test_manifest_reconciles_after_crash_between_append_and_refresh(spark, sf_di
     assert not os.path.exists(os.path.join(path, S._PENDING_MARKER))
 
 
+def test_torn_pending_marker_heals_on_load_and_stats(spark, sf_dir, tmp_path):
+    """A torn IVF pending marker must not wedge the store (the shard
+    store's twin: test_layout's test_reconcile_heals_unparsable_manifest_marker):
+    load_ivf_index and ivf_store_stats recount EVERY cell, so the manifest
+    matches the footers again and the marker is gone."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from datafusion_bigtable_spark.operators import similarity as S
+
+    e = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 600)
+    path = str(tmp_path / "ivf")
+    with build_ivf_index(e, n_cells=8) as idx:
+        S.save_ivf_index(idx, path)
+
+    def footers():
+        out = {}
+        for d in glob.glob(os.path.join(path, "cell=*")):
+            files = glob.glob(os.path.join(d, "*.parquet"))
+            rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+            out[int(d.rsplit("=", 1)[1])] = {"files": len(files), "rows": rows}
+        return out
+
+    truth = footers()
+    for opener in (lambda: S.load_ivf_index(spark, path), lambda: S.ivf_store_stats(path)):
+        # a stale manifest (every cell off by one) under a torn marker
+        S._write_manifest_table(
+            path, {c: {"files": st["files"], "rows": st["rows"] - 1} for c, st in truth.items()}
+        )
+        with open(os.path.join(path, S._PENDING_MARKER), "w") as f:
+            f.write('{"cells": [1, 2')
+        opener()
+        assert not os.path.exists(os.path.join(path, S._PENDING_MARKER))
+        got = {r["cell"]: {"files": r["files"], "rows": r["rows"]} for r in S.read_ivf_manifest(path)}
+        assert got == truth
+    assert S.ivf_store_stats(path)["n_rows"] == sum(st["rows"] for st in truth.values())
+
+
+def test_upsert_crash_inside_meta_write_keeps_old_meta(spark, sf_dir, tmp_path, monkeypatch):
+    """A crash partway through writing _ivf_meta.json must leave the
+    pre-upsert meta readable: the meta is written aside and renamed over
+    the old one, never truncated in place."""
+    import json
+    import os
+
+    import pytest
+
+    from datafusion_bigtable_spark.operators import similarity as S
+
+    e = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 600)
+    path = str(tmp_path / "ivf")
+    with build_ivf_index(e.filter(F.col("vec_id") % 2 == 0), n_cells=8) as idx:
+        S.save_ivf_index(idx, path)
+    with open(os.path.join(path, "_ivf_meta.json")) as f:
+        before = json.load(f)
+    real_dump = json.dump
+
+    def torn_dump(obj, fp, *args, **kwargs):
+        if os.path.basename(getattr(fp, "name", "")).startswith("_ivf_meta.json"):
+            fp.write(json.dumps(obj)[:20])
+            raise RuntimeError("injected crash inside the meta write")
+        return real_dump(obj, fp, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(RuntimeError, match="injected"):
+        S.upsert_ivf_index(spark, path, e.filter(F.col("vec_id") % 2 == 1))
+    monkeypatch.setattr(json, "dump", real_dump)
+    S.load_ivf_index(spark, path)
+    with open(os.path.join(path, "_ivf_meta.json")) as f:
+        assert json.load(f) == before
+
+
 def test_load_heals_mid_retrain_swap_crash_roll_forward(spark, sf_dir, tmp_path):
     """VERDICT r13 #4: a crash between retrain's two renames leaves NO
     store at `path` (old store at ._retrain_old, complete rebuild at
@@ -655,7 +729,7 @@ def test_load_never_deletes_backup_when_store_lacks_meta(spark, sf_dir, tmp_path
     import os
 
     from datafusion_bigtable_spark.operators.similarity import (
-        _reconcile_retrain_swap,
+        _RETRAIN_SWAP,
         save_ivf_index,
     )
 
@@ -665,7 +739,7 @@ def test_load_never_deletes_backup_when_store_lacks_meta(spark, sf_dir, tmp_path
         save_ivf_index(idx, path)
     os.makedirs(path + "._retrain_old")
     os.remove(os.path.join(path, "_ivf_meta.json"))
-    _reconcile_retrain_swap(path)
+    _RETRAIN_SWAP.heal(path)
     assert os.path.exists(path + "._retrain_old")
 
 
@@ -697,7 +771,7 @@ def test_upsert_heals_mid_retrain_swap_crash(spark, sf_dir, tmp_path):
 
 
 def test_reconcile_retrain_swap_state_machine(tmp_path):
-    """Exhaustive crash-state pin for _reconcile_retrain_swap — all 27
+    """Exhaustive crash-state pin for the retrain swap's heal — all 27
     (store, tmp, backup) × (absent/complete/incomplete) combinations,
     asserting the EXACT contract per case (review r14-2 #3: the first
     version exempted store-present-without-meta states, over-claiming
@@ -718,7 +792,7 @@ def test_reconcile_retrain_swap_state_machine(tmp_path):
     import shutil
 
     from datafusion_bigtable_spark.operators.similarity import (
-        _reconcile_retrain_swap,
+        _RETRAIN_SWAP,
     )
 
     def mk(path, complete):
@@ -744,7 +818,7 @@ def test_reconcile_retrain_swap_state_machine(tmp_path):
             if s is not None:
                 mk(p, s)
 
-        _reconcile_retrain_swap(path)
+        _RETRAIN_SWAP.heal(path)
 
         case = f"case {i}: store={store} tmp={tmp} backup={backup}"
         got = (state(path), state(tmp_p), state(bak_p))

@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from datafusion_bigtable_spark.sources.layout import (
     _MANIFEST_MARKER,
+    _SHARD_SWAP,
     compact_training_shards,
-    reconcile_compaction,
     shard_file_stats,
     write_range_sorted_shards,
 )
@@ -99,7 +99,7 @@ def test_compact_reconcile_completes_finished_swap(spark, tmp_path):
     live_files = _files(path, 1)
     backup = os.path.join(path, "._compact_old_shard_id=1")
     os.makedirs(backup)  # stale pre-swap copy the crash left behind
-    reconcile_compaction(path)
+    _SHARD_SWAP.heal(path)
     assert _files(path, 1) == live_files
     assert not os.path.exists(backup)
 
@@ -113,7 +113,7 @@ def test_reconcile_heals_unparsable_manifest_marker(spark, tmp_path):
     compact_training_shards(spark, path, target_records_per_file=1000)
     with open(os.path.join(path, _MANIFEST_MARKER), "w") as f:
         f.write('{"shard_col": "sha')  # torn json
-    reconcile_compaction(path)
+    _SHARD_SWAP.heal(path)
     assert not os.path.exists(os.path.join(path, _MANIFEST_MARKER))
     man = {r.shard_id: r.n_files for r in read_shard_manifest(spark, path).collect()}
     assert man == {0: 1, 1: 1, 2: 1, 3: 1}

@@ -500,15 +500,15 @@ def test_upsert_crash_mid_mutation_fails_loud_on_next_load(spark, corpus, tmp_pa
     path = str(tmp_path / "idx")
     R.save_postings_index(corpus.filter(F.col("doc_id") < 5), path)
     idx = R.load_postings_index(spark, path)
-    real_commit = R._commit_postings_meta
+    real_commit = R.swap.write_json
 
     def crash_commit(*a, **kw):
         raise RuntimeError("injected crash before meta commit")
 
-    monkeypatch.setattr(R, "_commit_postings_meta", crash_commit)
+    monkeypatch.setattr(R.swap, "write_json", crash_commit)
     with pytest.raises(RuntimeError, match="injected"):
         R.upsert_postings_index(idx, corpus.filter(F.col("doc_id") == 5))
-    monkeypatch.setattr(R, "_commit_postings_meta", real_commit)
+    monkeypatch.setattr(R.swap, "write_json", real_commit)
     assert not os.path.isfile(os.path.join(path, R.POSTINGS_META))
     with pytest.raises(FileNotFoundError, match="postings index"):
         R.load_postings_index(spark, path)
@@ -674,7 +674,7 @@ def test_compact_crash_mid_rewrite_fails_loud_on_next_load(
     def crash_commit(*a, **kw):
         raise RuntimeError("injected crash before meta commit")
 
-    monkeypatch.setattr(R, "_commit_postings_meta", crash_commit)
+    monkeypatch.setattr(R.swap, "write_json", crash_commit)
     with pytest.raises(RuntimeError, match="injected"):
         R.compact_postings_index(idx, n_files=2)
     assert not os.path.isfile(os.path.join(path, R.POSTINGS_META))

@@ -349,6 +349,37 @@ def test_null_row_key_or_ts_fails_closed_naming_the_file(spark, tmp_path, column
 
 
 @pytest.mark.parametrize("column", ["row_key", "ts"])
+def test_null_row_key_or_ts_fails_closed_under_a_key_range(spark, tmp_path, column):
+    """A key range filter must not drop a NULL-key cell before the scan
+    sees it: a ranged read of the file fails like the unranged one, naming
+    the file, because the footer's null count shows the NULL."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from datafusion_bigtable_spark.sources import datasource as bt_ds
+
+    store = tmp_path / "store"
+    store.mkdir()
+    bad = str(store / "part-0.parquet")
+    pq.write_table(_cells_file_table(*_null_cells(column)), bad)
+    bt_ds.register(spark)
+
+    def load():
+        return (
+            spark.read.format("bigtable")
+            .options(path=str(store), column_family=FAMILY, columns="pressure:int64,temperature:string",
+                     table_partition_cols=",".join(PCOLS), allow_full_scan="true")
+            .load()
+        )
+
+    ranged = load().filter("region = 'us-west2' AND balloon_id = '33' AND event_minute = 'm00'")
+    for read in (load(), ranged):
+        with pytest.raises(Exception, match=re.escape(f"NULL {column} in {[bad]}")):
+            read.collect()
+
+
+@pytest.mark.parametrize("column", ["row_key", "ts"])
 def test_null_row_key_or_ts_over_the_wire_names_the_shard(monkeypatch, column):
     """A ReadRows response can carry a cell with no row key or timestamp:
     the shard's scan fails closed with a ValueError that names the shard.
