@@ -32,12 +32,9 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def warm_up(spark, sf_dir: str) -> None:
+    """The session warm-up every bench tool runs before its first sample."""
     from datafusion_bigtable_spark import queries as Q
-    from datafusion_bigtable_spark.session import get_spark
-
-    spark = get_spark("dbs-bench")
 
     # Warm the JVM, parquet reader, codegen, noop sink, and the Python
     # Data Source worker pool once so query timings measure steady-state
@@ -87,27 +84,34 @@ def main() -> None:
     Q._bt_events_store(spark, sf_dir)
     Q._bt_events_int_store(spark, sf_dir)
 
-    def run_once(name: str) -> float:
-        fn = Q.REGISTRY[name].fn
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - t0, 3)
-        # Session hygiene (VERDICT r2): an 80-query session must not let
-        # one query's persisted state (e.g. an IVF assignment index built
-        # without an owning handle) sit in executor storage distorting
-        # later measurements — r2 recorded a 45 s reading for a query that
-        # runs in ~4 s in a clean session.  Clearing is a no-op for the
-        # (majority of) queries that cache nothing, so it costs nothing
-        # and every query starts from the same session state.
-        spark.catalog.clearCache()
-        return elapsed
 
-    names = [n for n in HEADLINE if n in Q.REGISTRY]
-    extra = [n for n in Q.REGISTRY if n not in names]
+def run_once(spark, sf_dir: str, name: str) -> float:
+    """One sample: plan and run the query into the noop sink."""
+    from datafusion_bigtable_spark import queries as Q
+
+    fn = Q.REGISTRY[name].fn
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    elapsed = round(time.perf_counter() - t0, 3)
+    # Session hygiene (VERDICT r2): an 80-query session must not let
+    # one query's persisted state (e.g. an IVF assignment index built
+    # without an owning handle) sit in executor storage distorting
+    # later measurements — r2 recorded a 45 s reading for a query that
+    # runs in ~4 s in a clean session.  Clearing is a no-op for the
+    # (majority of) queries that cache nothing, so it costs nothing
+    # and every query starts from the same session state.
+    spark.catalog.clearCache()
+    return elapsed
+
+
+def sample(run, names: list[str]) -> tuple[dict, dict]:
+    """The sampling rule: ``run(name)`` once per query, a second pass over
+    every query, a third for the cheap and noisy ones; the timing is the
+    median of three, else the min of two.  Returns ``(samples, timings)``."""
     samples: dict[str, list[float]] = {}
-    for name in names + extra:
-        samples[name] = [run_once(name)]
+    for name in names:
+        samples[name] = [run(name)]
     # Contention guard: this host shows transient broad-spectrum noise
     # (the same plan measured 2.8 s and 11.9 s in back-to-back sessions
     # with zero code change).  Re-measure EVERY query once and keep the
@@ -119,7 +123,7 @@ def main() -> None:
     # 0.357 s floor); warm re-runs of the cheap majority cost far less
     # than the first pass, so the full second pass is ~1.6× wall, not 2×.
     for name in list(samples):
-        samples[name].append(run_once(name))
+        samples[name].append(run(name))
     # The iterative dedup family wobbles ±50% round-over-round even with
     # min-of-2 (VERDICT r7 #4: dedup_minhash_lsh 1.72→2.65 s with zero
     # code change — many short dependent stages make these queries
@@ -136,10 +140,23 @@ def main() -> None:
         if s[0] < 5.0 or n.startswith("dedup_") or n == "pipeline_curated_corpus"
     ]
     for name in third_pass:
-        samples[name].append(run_once(name))
+        samples[name].append(run(name))
     timings = {
         n: (sorted(s)[1] if len(s) == 3 else min(s)) for n, s in samples.items()
     }
+    return samples, timings
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from datafusion_bigtable_spark import queries as Q
+    from datafusion_bigtable_spark.session import get_spark
+
+    spark = get_spark("dbs-bench")
+    warm_up(spark, sf_dir)
+    names = [n for n in HEADLINE if n in Q.REGISTRY]
+    extra = [n for n in Q.REGISTRY if n not in names]
+    _, timings = sample(lambda n: run_once(spark, sf_dir, n), names + extra)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Ascending-time order: the driver's stdout capture keeps only the TAIL

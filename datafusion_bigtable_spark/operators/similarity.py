@@ -417,22 +417,26 @@ def _ivf_manifest_stats(path: str) -> dict[int, dict[str, int]]:
     }
 
 
-def _append_ivf_manifest(path: str, per_cell_rows: dict[int, int]) -> None:
+def _append_ivf_manifest(
+    path: str, per_cell_rows: dict[int, int], base: dict[int, dict] | None
+) -> None:
     """Merge an upsert's appended row counts into the manifest: only the
     TOUCHED cell directories are re-listed and no data footer is read, so
-    an upsert refresh is O(batch cells), never O(store files).  A store
-    without a manifest gets a full recount.  External writers bypassing
-    save/upsert are out of contract (they would also violate the
-    append-only guarantee)."""
+    an upsert refresh is O(batch cells), never O(store files).  Counts are
+    absolute — ``base``, the manifest as the upsert armed its marker, plus
+    the batch — so a reader's heal that recounted the cells in between
+    is not counted twice.  A store without a manifest (``base`` None) gets
+    a full recount.  External writers bypassing save/upsert are out of
+    contract (they would also violate the append-only guarantee)."""
     import glob as _glob
 
-    if not os.path.exists(os.path.join(path, IVF_MANIFEST_REL_PATH)):
+    if base is None:
         _recount_ivf_manifest(path)
         return
-    stats = _ivf_manifest_stats(path)
+    stats = dict(base)
     for cell, n in per_cell_rows.items():
         files = _glob.glob(os.path.join(path, f"cell={cell}", "*.parquet"))
-        stats[cell] = {"files": len(files), "rows": stats.get(cell, {}).get("rows", 0) + n}
+        stats[cell] = {"files": len(files), "rows": base.get(cell, {}).get("rows", 0) + n}
     _write_manifest_table(path, stats)
 
 
@@ -1364,6 +1368,11 @@ def upsert_ivf_index(
             # handle skips the open's heal, so an earlier failed
             # mutation's marker is refreshed before this one replaces it.
             _CELL_SWAP.refresh_manifest(path)
+            pre_counts = (
+                _ivf_manifest_stats(path)
+                if os.path.exists(os.path.join(path, IVF_MANIFEST_REL_PATH))
+                else None
+            )
             _CELL_SWAP.arm(path, {"cells": sorted(per_cell)})
             # The two appends OVERLAP (r19, guide §2.6): both read the
             # checkpointed batch blocks (no file source in the plan, so
@@ -1381,7 +1390,7 @@ def upsert_ivf_index(
                 fut_codes = pool.submit(_append_codes) if has_pq else None
                 fut_asg = pool.submit(_append_assignments)
                 fut_asg.result()
-                _append_ivf_manifest(path, per_cell)
+                _append_ivf_manifest(path, per_cell, pre_counts)
                 swap.discard(os.path.join(path, _PENDING_MARKER))
                 if fut_codes is not None:
                     fut_codes.result()

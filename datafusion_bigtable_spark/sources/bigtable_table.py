@@ -261,31 +261,30 @@ class BigtableTable:
         )
         return spark.createDataFrame(rows, self.config.schema())
 
-    def mutate(self, df: DataFrame, max_mutations: int = 100_000) -> int:
+    def mutate(self, df: DataFrame) -> int:
         """Write a relational DataFrame through the MutateRows transport —
         the live-service counterpart of ``df.write.format("bigtable")``
         (the reference's unshipped "writes to Bigtable", README.md:46-49).
 
         EXECUTOR-SIDE, never a driver funnel (VERDICT r11 #1 retired the
         ``toLocalIterator`` loop that encoded every cell on the driver):
-        each task encodes its partition with the SAME row→cells encoder as
-        the parquet staging writer (sources/cells.py::encode_relational_row,
-        so wire mutations and staged files cannot drift) and pushes it
-        through its OWN connection, one Arrow batch at a time — per-task
-        memory stays O(arrow batch), and at 1000 executors the write
-        fans out exactly like the DS sink's endpoint mode
-        (datasource.py::BigtableWriter.write).
+        each task hands its partition, one Arrow batch at a time, to the
+        writer's endpoint push (datasource.py::_push_rows, behind
+        ``BigtableWriter.write``'s endpoint branch) over its OWN
+        connection — so wire mutations and staged files share one encoder,
+        per-task memory stays O(arrow batch), and at 1000 executors the
+        write fans out exactly like the DS sink's endpoint mode.
 
         Executors need a network address, not a driver-resident Python
         object: a :class:`WireBigtableClient` service carries one already;
         any other service (the in-process fake, a real-SDK adapter) gets a
         job-lifetime wire bridge served from the driver process.  Requests
-        batch at most ``max_mutations`` SetCell mutations, split on row
-        boundaries (per-row atomicity, the service's actual unit).  Task
-        retries are idempotent: SetCell carries the row's explicit
-        ``_timestamp``, so a replayed batch version-replaces itself.
-        Returns the number of MutateRows entries applied (== input rows
-        when row keys are unique, the relational frame's normal shape).
+        batch at most ``push_cells``' default of 100k SetCell mutations,
+        split on row boundaries (per-row atomicity, the service's actual
+        unit).  Task retries are idempotent: SetCell carries the row's
+        explicit ``_timestamp``, so a replayed batch version-replaces
+        itself.  Returns the number of MutateRows entries applied (== input
+        rows when row keys are unique, the relational frame's normal shape).
         """
         if self.service is None:
             raise NotImplementedError(
@@ -299,7 +298,7 @@ class BigtableTable:
         )
 
         if isinstance(self.service, WireBigtableClient):
-            host, port = self.service.address
+            endpoint = self.service.address
             bridge = None
         else:
             spark = df.sparkSession
@@ -308,49 +307,16 @@ class BigtableTable:
                 spark.conf.get("spark.driver.host", None),
             )
             bridge = WireBigtableServer(self.service, host=host).start()
-            port = bridge.address[1]
+            endpoint = (host, bridge.address[1])
 
         cfg = self.config
-        mm = max_mutations
 
         def _push(batches):
-            from datetime import timezone
-
             import pyarrow as pa
 
-            from datafusion_bigtable_spark.sources.cells import (
-                _naive_datetime_to_us,
-                encode_relational_row,
-            )
-            from datafusion_bigtable_spark.sources.grpc_transport import push_cells
-            from datafusion_bigtable_spark.sources.wire import (
-                WireBigtableClient as _Client,
-            )
+            from datafusion_bigtable_spark.sources.datasource import _push_rows
 
-            def _us(ts):
-                # Arrow hands TIMESTAMP as tz-aware (session tz is UTC,
-                # session.py:28) where Row.asDict() gave UTC-naive —
-                # normalize so both write paths pin identical micros.
-                if ts.tzinfo is not None:
-                    ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
-                return _naive_datetime_to_us(ts)
-
-            client = _Client(host, port)
-            applied = 0
-            try:
-                for batch in batches:
-                    applied += push_cells(
-                        cfg,
-                        (
-                            (k, f, q, _us(ts), v)
-                            for row in batch.to_pylist()
-                            for k, f, q, ts, v in encode_relational_row(cfg, row)
-                        ),
-                        service=client,
-                        max_mutations=mm,
-                    )
-            finally:
-                client.close()
+            applied = _push_rows(cfg, (b.to_pylist() for b in batches), endpoint)
             yield pa.record_batch([pa.array([applied], type=pa.int64())], names=["applied"])
 
         try:

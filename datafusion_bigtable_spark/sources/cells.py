@@ -23,10 +23,12 @@ KeyRange scan touches only the overlapping files.
 from __future__ import annotations
 
 import datetime as _dt
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
+from datafusion_bigtable_spark.sources import swap
 from datafusion_bigtable_spark.sources.swap import StoreSwap, write_json
 
 CELLS_SCHEMA = T.StructType(
@@ -152,8 +154,6 @@ def footer_file_stats(files: list[str]) -> list[dict]:
     implementation behind both the manifest writer and the reader's
     no-manifest fallback, so planning decisions cannot diverge between the
     two paths."""
-    import os
-
     import pyarrow.parquet as pq
 
     out = []
@@ -193,7 +193,6 @@ def write_manifest(path: str) -> str | None:
     small parquet.  Returns the manifest path, or None for a single-file
     store (nothing to amortize)."""
     import glob as _glob
-    import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -216,7 +215,7 @@ def write_manifest(path: str) -> str | None:
             "max_ts": pa.array([r["max_ts"] for r in rows], type=pa.timestamp("us")),
         }
     )
-    pq.write_table(table, out)
+    swap.write_file(out, lambda tmp: pq.write_table(table, tmp))
     return out
 
 
@@ -225,7 +224,6 @@ def read_manifest(path: str) -> list[dict] | None:
     current file set (a stale manifest — files added/removed since the
     write — is ignored, falling back to the footer loop)."""
     import glob as _glob
-    import os
 
     import pyarrow.parquet as pq
 
@@ -282,12 +280,14 @@ def compact_cells_store(
     the newest N per row_key/qualifier) — Bigtable's maxVersions GC policy
     applied at compaction time, exactly where Bigtable applies it.
 
-    The rewrite is swapped in whole through sources/swap.py
-    (``_COMPACTION_SWAP``: ``<path>._compact_tmp`` / ``._compact_old``,
-    complete once its compaction-epoch sidecar is written, which is last).
-    A crash between the two renames leaves no store at ``path``; this
-    function and the ``format("bigtable")`` planner, batch and stream,
-    heal it on their next open.  Single writer: no concurrent compactors.
+    The rewrite is swapped in whole by :func:`_swap_in_rebuild`, the same
+    tail an overwrite write commits through (:func:`commit_staged`):
+    ``_COMPACTION_SWAP`` in sources/swap.py (``<path>._compact_tmp`` /
+    ``._compact_old``, complete once its compaction-epoch sidecar is
+    written, which is last).  A crash between the two renames leaves no
+    store at ``path``; this function, an overwrite and the
+    ``format("bigtable")`` planner, batch and stream, heal it on their
+    next open.  Single writer: no concurrent compactors.
 
     NOT safe under a live streaming tail: the streaming source's offsets
     are processed-FILE sets, and compaction renames every file (the same
@@ -299,8 +299,6 @@ def compact_cells_store(
     Stop tailing queries around a compaction; restart them with a fresh
     checkpoint after.
     """
-    import os
-
     _COMPACTION_SWAP.heal(path)
     df = read_cells(spark, path)
     gc_watermark_us = read_gc_watermark_us(path)
@@ -322,19 +320,47 @@ def compact_cells_store(
             dropped_us = _naive_datetime_to_us(dropped_max)
             gc_watermark_us = max(gc_watermark_us or 0, dropped_us)
         df = latest_cells(df, versions=versions)
-    tmp = _COMPACTION_SWAP.tmp(path)
-    write_cells(df, tmp, num_ranges=num_ranges)
-    if gc_watermark_us is not None:
-        write_json(os.path.join(tmp, _GC_SIDECAR), {"gc_watermark_us": int(gc_watermark_us)})
+    write_cells(df, _COMPACTION_SWAP.tmp(path), num_ranges=num_ranges)
     # Bump the compaction epoch (VERDICT r11 #8): the streaming source's
     # offsets are processed-FILE sets, and this swap renames every file —
     # the epoch lets a live tail FAIL LOUD on its next micro-batch
     # instead of silently re-emitting the whole store as duplicates
     # (BigtableStreamReader.partitions checks it).
-    write_json(
-        os.path.join(tmp, _EPOCH_SIDECAR), {"compaction_epoch": read_compaction_epoch(path) + 1}
-    )
+    _swap_in_rebuild(path, gc_watermark_us, read_compaction_epoch(path) + 1)
+
+
+def _swap_in_rebuild(path: str, gc_watermark_us: int | None, epoch: int) -> None:
+    """Swap in the rebuild at ``_COMPACTION_SWAP.tmp(path)`` once its
+    sidecars are written: the GC watermark, then the compaction epoch
+    (the swap's completeness file) last.  Only compaction bumps the epoch."""
+    tmp = _COMPACTION_SWAP.tmp(path)
+    if gc_watermark_us is not None:
+        write_json(os.path.join(tmp, _GC_SIDECAR), {"gc_watermark_us": int(gc_watermark_us)})
+    write_json(os.path.join(tmp, _EPOCH_SIDECAR), {"compaction_epoch": epoch})
     _COMPACTION_SWAP.swap(path)
+
+
+def commit_staged(store: str, moves, overwrite: bool = False) -> None:
+    """The staged commit of the cells-store writers (sources/datasource.py):
+    move each ``(staged file, final name)`` pair in, one ``swap._rename``
+    each, then refresh the manifest.  An append moves into the live store,
+    so a reader that plans mid-commit sees part of it (ROADMAP item 8).  An
+    overwrite builds the new store aside, carrying the GC watermark and the
+    compaction epoch, and swaps it in whole as compaction does: no data
+    file goes before the new store is complete.  The swap drops other
+    jobs' staging under the old store (one writer per store)."""
+    target = store
+    if overwrite:
+        _COMPACTION_SWAP.heal(store)
+        target = _COMPACTION_SWAP.tmp(store)
+        swap.discard(target)  # an earlier attempt's unswapped rebuild
+    os.makedirs(target, exist_ok=True)
+    for staged, name in moves:
+        swap._rename(staged, os.path.join(target, name))
+    write_manifest(target)
+    if overwrite:
+        os.makedirs(store, exist_ok=True)
+        _swap_in_rebuild(store, read_gc_watermark_us(store), read_compaction_epoch(store))
 
 
 _GC_SIDECAR = "_gc_watermark.json"
@@ -348,7 +374,6 @@ def read_compaction_epoch(path: str) -> int:
     epoch they were taken at; a mismatch means every file name they
     reference has been rewritten underneath the tail."""
     import json
-    import os
 
     p = os.path.join(path, _EPOCH_SIDECAR)
     if not os.path.isdir(path) or not os.path.exists(p):
@@ -362,7 +387,6 @@ def read_gc_watermark_us(path: str) -> int | None:
     None if no version GC has run.  Carried across compactions (the
     watermark never moves backward)."""
     import json
-    import os
 
     p = os.path.join(path, _GC_SIDECAR)
     if not os.path.isdir(path) or not os.path.isfile(p):

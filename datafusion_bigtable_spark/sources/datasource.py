@@ -131,6 +131,17 @@ def _config_from_options(options) -> BigtableTableConfig:
     )
 
 
+def _endpoint(options) -> tuple | None:
+    """``(host, port)`` of the ``endpoint`` option — a live ReadRows /
+    MutateRows service to read from or write to instead of a parquet
+    store — or None without one."""
+    ep = options.get("endpoint")
+    if not ep:
+        return None
+    host, _, port = str(ep).rpartition(":")
+    return (host or "127.0.0.1", int(port))
+
+
 def _options_from_config(cfg: BigtableTableConfig) -> dict[str, str]:
     """The read options that ``_config_from_options`` turns back into
     ``cfg``.  ``project`` and ``instance`` name a service table and have
@@ -223,11 +234,7 @@ class BigtableReader(DataSourceReader):
         # Wire endpoint mode (r7): scan a live ReadRows service instead of
         # a parquet store.  The driver shards key space from SampleRowKeys;
         # every executor task opens its own connection for its shard.
-        ep = options.get("endpoint")
-        self.endpoint: tuple | None = None
-        if ep:
-            host, _, port = str(ep).rpartition(":")
-            self.endpoint = (host or "127.0.0.1", int(port))
+        self.endpoint = _endpoint(options)
         raw_stride = options.get("sample_stride_bytes")
         self.sample_stride = int(raw_stride) if raw_stride is not None else None
         # Shard-count cap: a pathologically dense SampleRowKeys response
@@ -235,7 +242,6 @@ class BigtableReader(DataSourceReader):
         # boundary list instead.  512 is ~4× a large cluster's task wave.
         self.max_wire_shards = int(options.get("max_wire_shards") or 512)
         self.ranges: list[KeyRange] = []
-        self._filters_pushed = False
         self._pushed_since_last_plan = False
         self._last_plan_pruned = False
         # Source-side limit (improvement over the reference, which parses a
@@ -282,7 +288,6 @@ class BigtableReader(DataSourceReader):
 
     # -- pushdown (A3-A8 pruning + A16 Inexact) ---------------------------
     def pushFilters(self, filters):
-        self._filters_pushed = True
         self._pushed_since_last_plan = True
         self.ts_range = self._timestamp_bounds(filters)
         self.value_preds = self._value_predicates(filters)
@@ -1353,51 +1358,90 @@ class _WireWriteCommit(WriterCommitMessage):
     applied: int  # rows this task pushed through MutateRows
 
 
+def _push_rows(cfg: BigtableTableConfig, batches, endpoint: tuple) -> int:
+    """Row dicts, in batches, → cells (the staged writer's encoder) →
+    MutateRows over one connection; returns the entries applied.  The
+    endpoint write of ``BigtableWriter.write`` and ``BigtableTable.mutate``.
+    A tz-aware ``_timestamp`` (from Arrow; ``Row.asDict()`` gives naive
+    UTC) is normalised to naive UTC, so both pin identical micros."""
+    from datafusion_bigtable_spark.sources.cells import (
+        _naive_datetime_to_us,
+        encode_relational_row,
+    )
+    from datafusion_bigtable_spark.sources.grpc_transport import push_cells
+    from datafusion_bigtable_spark.sources.wire import WireBigtableClient
+
+    def us(ts):
+        if ts.tzinfo is not None:
+            ts = ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return _naive_datetime_to_us(ts)
+
+    client = WireBigtableClient(*endpoint)
+    try:
+        return sum(
+            push_cells(
+                cfg,
+                (
+                    (k, f, q, us(ts), v)
+                    for d in rows
+                    for k, f, q, ts, v in encode_relational_row(cfg, d)
+                ),
+                service=client,
+            )
+            for rows in batches
+        )
+    finally:
+        client.close()
+
+
 class BigtableWriter(DataSourceWriter):
     """``df.write.format("bigtable")`` — the reference's unshipped
     roadmap item "writes to Bigtable" (README.md:46-49), expressed for the
-    cells store: each task UNPIVOTS its relational rows (key components +
-    _timestamp + qualifier columns) back into canonical cells, encodes
-    values (int64 → big-endian, string → UTF-8, binary pass-through — the
-    exact inverse of the read kernel's decode), sorts by row_key and
-    stages one parquet file; commit() atomically moves staged files into
-    the store and rewrites the manifest.  NULL column values write NO cell
-    (round-tripping the NULL-hole pivot semantics).
+    cells store, and the one writer body of the cells store: the stream
+    writer below subclasses it.  Each task UNPIVOTS its relational rows
+    (key components + _timestamp + qualifier columns) back into canonical
+    cells, encodes values (int64 → big-endian, string → UTF-8, binary
+    pass-through — the exact inverse of the read kernel's decode), sorts
+    by row_key and stages one parquet file under ``_staging/<job>``;
+    ``commit`` hands the staged files to ``cells.commit_staged``, which
+    moves them into the store and refreshes the manifest.  An append is
+    not atomic; an overwrite builds the new store beside the old one and
+    swaps it in whole, as compaction does.  NULL column values write NO
+    cell (round-tripping the NULL-hole pivot semantics).
+
+    Endpoint mode (r7): each task pushes its partition through MutateRows
+    over its own connection (``_push_rows``, shared with
+    ``BigtableTable.mutate``) — executor-parallel writes, the symmetric
+    twin of the endpoint read path.  Semantics are the SERVICE's, not the
+    staged commit's: per-row atomicity, no job-level rollback (abort
+    cannot unwrite completed tasks), and idempotent task retries (SetCell
+    carries the row's explicit _timestamp, so a replayed batch
+    version-replaces itself).
 
     Scale: one file per task, sorted within; cross-task key overlap is
     legal (the reader's sorted-stream proof falls back to materialization
     when footers overlap), and the manifest refresh keeps planning O(1).
-    For a real Bigtable backend this class is where MutateRows batching
-    would live; the parquet layout IS the stand-in service.
     """
 
-    def __init__(self, schema, options, overwrite: bool):
+    # staging dir under ``<store>/_staging``: ``<prefix><job id>``
+    _STAGING_PREFIX = ""
+
+    def __init__(self, schema, options, overwrite: bool = False):
         import uuid
 
         self.config = _config_from_options(options)
-        # Endpoint mode (r7): each task pushes its partition through
-        # MutateRows over its own connection — executor-parallel writes,
-        # the symmetric twin of the endpoint read path.  Semantics are the
-        # SERVICE's, not the staged commit's: per-row atomicity, no
-        # job-level rollback (abort cannot unwrite completed tasks), and
-        # idempotent task retries (SetCell carries the row's explicit
-        # _timestamp, so a replayed batch version-replaces itself).
-        ep = options.get("endpoint")
-        self.endpoint: tuple | None = None
-        if ep:
-            host, _, port = str(ep).rpartition(":")
-            self.endpoint = (host or "127.0.0.1", int(port))
-            if overwrite:
-                raise ValueError(
-                    "bigtable: mode('overwrite') is not supported for an "
-                    "endpoint write — MutateRows has no truncate; use "
-                    "mode('append')"
-                )
+        self.endpoint = _endpoint(options)
+        if self.endpoint is not None and overwrite:
+            raise ValueError(
+                "bigtable: mode('overwrite') is not supported for an "
+                "endpoint write — MutateRows has no truncate; use "
+                "mode('append')"
+            )
         self.overwrite = overwrite
         self.job_id = uuid.uuid4().hex[:12]
         store = self.config.cells_path
         self.staging = (
-            os.path.join(store, "_staging", self.job_id) if store else None
+            os.path.join(store, "_staging", self._STAGING_PREFIX + self.job_id) if store else None
         )
 
     # -- executor side ----------------------------------------------------
@@ -1410,23 +1454,13 @@ class BigtableWriter(DataSourceWriter):
         from datafusion_bigtable_spark.sources.cells import encode_relational_row
 
         cfg = self.config
+        if self.endpoint is not None:
+            return _WireWriteCommit(
+                _push_rows(cfg, [(row.asDict() for row in iterator)], self.endpoint)
+            )
         cells: list[tuple] = []
         for row in iterator:
-            # shared row→cells encoder (sources/cells.py) — the MutateRows
-            # wire path uses the same one, so parquet staging and wire
-            # mutations cannot drift
             cells.extend(encode_relational_row(cfg, row.asDict()))
-        if self.endpoint is not None:
-            from datafusion_bigtable_spark.sources.cells import _naive_datetime_to_us
-            from datafusion_bigtable_spark.sources.grpc_transport import push_cells
-            from datafusion_bigtable_spark.sources.wire import WireBigtableClient
-
-            applied = push_cells(
-                cfg,
-                ((k, f, q, _naive_datetime_to_us(ts), v) for k, f, q, ts, v in cells),
-                service=WireBigtableClient(*self.endpoint),
-            )
-            return _WireWriteCommit(applied)
         if not cells:
             # an empty task still answers with a message (Spark rejects
             # None); it carries no file and commit skips it
@@ -1450,24 +1484,16 @@ class BigtableWriter(DataSourceWriter):
 
     # -- driver side ------------------------------------------------------
     def commit(self, messages):
-        import shutil
+        if self.endpoint is None:  # endpoint: mutations landed per task
+            self._commit(messages, lambda i: f"part-{i:05d}-{self.job_id}.parquet", self.overwrite)
 
-        from datafusion_bigtable_spark.sources.cells import write_manifest
+    def _commit(self, messages, name, overwrite: bool = False) -> None:
+        """Move each task's staged file into the store as ``name(i)``."""
+        from datafusion_bigtable_spark.sources.cells import commit_staged
 
-        if self.endpoint is not None:
-            return  # mutations are applied per task; nothing to move
-        store = self.config.cells_path
-        os.makedirs(store, exist_ok=True)
-        if self.overwrite:
-            for f in glob.glob(os.path.join(store, "*.parquet")):
-                os.remove(f)
-        for i, m in enumerate(messages):
-            if m.staged is None:
-                continue
-            dest = os.path.join(store, f"part-{i:05d}-{self.job_id}.parquet")
-            shutil.move(m.staged, dest)
+        moves = [(m.staged, name(i)) for i, m in enumerate(messages) if m.staged is not None]
+        commit_staged(self.config.cells_path, moves, overwrite)
         self._drop_staging()
-        write_manifest(store)
 
     def abort(self, messages):
         self._drop_staging()
@@ -1485,22 +1511,29 @@ class BigtableWriter(DataSourceWriter):
             os.rmdir(os.path.dirname(self.staging))
 
 
-class BigtableStreamWriter(DataSourceStreamWriter):
+class BigtableStreamWriter(BigtableWriter, DataSourceStreamWriter):
     """``df.writeStream.format("bigtable")`` — the streaming SINK side of
     the cells store, completing the format quad (batch read, batch write,
     stream read, stream write): a continuous relational stream lands as
     cell files the stream READER on the same store tails, so
     stream→store→stream pipelines compose.
 
-    Per micro-batch each task unpivots its rows through the same
-    row→cells encoder as the batch writer (staged parquet, sorted by
-    row_key); ``commit`` moves staged files to DETERMINISTIC
-    ``stream-b<batchId>-<i>`` names and refreshes the manifest.  The
-    deterministic names make replays idempotent: after a checkpoint
-    recovery the re-committed batch OVERWRITES its own files instead of
-    duplicating cells (same single-writer-per-store assumption as the
-    batch writer and compaction).
+    The batch writer's body, per micro-batch: the same constructor, task
+    ``write`` (staged under ``_staging/stream-<job>``, or MutateRows in
+    endpoint mode) and staged append commit.  It differs in three things
+    only.  ``commit`` names the files DETERMINISTICALLY
+    (``stream-b<batchId>-<i>``), and first removes any file an earlier
+    attempt of the same batch left, so a replay after checkpoint recovery
+    overwrites its own files instead of duplicating cells (same
+    single-writer-per-store assumption as the batch writer and
+    compaction).  And it sweeps orphaned stream staging, age-gated.  In
+    endpoint mode delivery is at-least-once made effectively exactly-once
+    by idempotence: a replayed batch re-sends the same (key, qualifier,
+    explicit-ts, value) cells, which version-replace themselves, provided
+    the stream's rows are deterministic per batch.
     """
+
+    _STAGING_PREFIX = "stream-"
 
     # Orphan stream-staging dirs older than this are GC'd at commit time.
     # Construction-time sweeping is NOT safe: Spark re-constructs the writer
@@ -1509,29 +1542,6 @@ class BigtableStreamWriter(DataSourceStreamWriter):
     # micro-batch stages and commits within seconds; an hour-old stream-*
     # dir belongs to a dead driver.
     STAGING_ORPHAN_TTL_S = 3600
-
-    def __init__(self, schema, options):
-        import uuid
-
-        self.config = _config_from_options(options)
-        # Endpoint mode (r7): every micro-batch partition pushes through
-        # MutateRows executor-side (BigtableWriter.write's endpoint
-        # branch).  Delivery is at-least-once made effectively exactly-once
-        # by idempotence: a replayed batch re-sends the same
-        # (key, qualifier, explicit-ts, value) cells, which version-replace
-        # themselves — provided the stream's rows are deterministic per
-        # batch (the same property the staged-parquet path's deterministic
-        # file names rely on).
-        ep = options.get("endpoint")
-        self.endpoint: tuple | None = None
-        if ep:
-            host, _, port = str(ep).rpartition(":")
-            self.endpoint = (host or "127.0.0.1", int(port))
-        self.job_id = uuid.uuid4().hex[:12]
-        store = self.config.cells_path
-        self.staging = (
-            os.path.join(store, "_staging", f"stream-{self.job_id}") if store else None
-        )
 
     def _gc_orphan_staging(self) -> None:
         """Remove stream-* staging dirs from crashed drivers (ADVICE r5):
@@ -1553,36 +1563,21 @@ class BigtableStreamWriter(DataSourceStreamWriter):
             except OSError:
                 continue
 
-    # executor side — identical unpivot+stage as the batch writer
-    write = BigtableWriter.write
-
     # driver side, once per micro-batch
     def commit(self, messages, batchId: int) -> None:
-        import shutil
-
-        from datafusion_bigtable_spark.sources.cells import write_manifest
+        from datafusion_bigtable_spark.sources import swap
 
         if self.endpoint is not None:
             return  # mutations landed per task; nothing staged
-        store = self.config.cells_path
-        os.makedirs(store, exist_ok=True)
         # drop any files a previously-failed attempt of THIS batch left
+        store = self.config.cells_path
         for stale in glob.glob(os.path.join(store, f"stream-b{batchId:08d}-*.parquet")):
-            os.remove(stale)
-        for i, m in enumerate(messages):
-            if m.staged is None:
-                continue
-            dest = os.path.join(store, f"stream-b{batchId:08d}-{i:05d}.parquet")
-            shutil.move(m.staged, dest)
-        shutil.rmtree(self.staging, ignore_errors=True)
+            swap._remove(stale)
+        self._commit(messages, lambda i: f"stream-b{batchId:08d}-{i:05d}.parquet")
         self._gc_orphan_staging()
-        write_manifest(store)
 
     def abort(self, messages, batchId: int) -> None:
-        import shutil
-
-        if self.staging is not None:
-            shutil.rmtree(self.staging, ignore_errors=True)
+        self._drop_staging()
 
 
 class BigtableStreamReader(DataSourceStreamReader):

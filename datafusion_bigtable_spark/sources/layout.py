@@ -92,7 +92,7 @@ def compact_training_shards(
     re-buckets them with ``maxRecordsPerFile``, and writes to a temp root;
     the shard directories are then swapped in by ``_SHARD_SWAP``, whose
     heal runs here first."""
-    _SHARD_SWAP.heal(path)
+    _SHARD_SWAP.heal(path, writer=True)
     stats = shard_file_stats(path, shard_col)
     plan = {
         s: {**st, "target_files": max(1, math.ceil(st["rows"] / target_records_per_file))}

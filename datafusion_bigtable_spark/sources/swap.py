@@ -41,9 +41,12 @@ could be torn by the crash it records; a rename cannot.
   clears it first.
 - **Pending manifest**: a mutation after which a store's manifest could
   lag its files arms the store's marker (a sidecar) before it touches a
-  file.  The refresh clears it, and an open that finds it re-runs the
-  refresh from the footers (:func:`partition_stats`).  An unparsable
-  marker refreshes every partition instead of failing.
+  file.  An open that finds it re-runs the refresh from the footers
+  (:func:`partition_stats`).  Only a writer clears it: its own refresh,
+  or the next writer's entry.  A reader's heal cannot tell a crashed
+  writer from one still mid-mutation, so it recounts and leaves the
+  marker to cover the writer's later steps.  An unparsable marker
+  refreshes every partition instead of failing.
 
 One maintenance writer per store.  Readers heal on open, and every heal
 step tolerates a concurrent healer (two readers may race into the same
@@ -206,7 +209,9 @@ class PartitionSwap:
                 "dropped it); the next open restores every partition it left"
             )
 
-    def heal(self, path: str) -> None:
+    def heal(self, path: str, writer: bool = False) -> None:
+        """Finish or undo an interrupted swap and recount what the marker
+        names; only a ``writer``'s heal clears the marker."""
         tmp = os.path.join(path, self.tmp)
         done = os.path.join(tmp, "_SUCCESS")
         backups = glob.glob(os.path.join(path, self.old + "*=*"))
@@ -228,18 +233,17 @@ class PartitionSwap:
             with contextlib.suppress(OSError):  # a concurrent healer won
                 _rename(tmp, dropped)
             discard(dropped)
-        self.refresh_manifest(path)
+        self.refresh_manifest(path, clear=writer)
 
     def finish(self, path: str, payload: dict) -> None:
-        """The writer's own refresh after its swap, then the marker goes.
-        It does not wait on the marker, which a reader's heal may have
-        cleared while the swap ran."""
+        """The writer's own refresh after its swap, then the marker goes."""
         self.refresh(path, payload)
         discard(os.path.join(path, self.marker))
 
-    def refresh_manifest(self, path: str) -> None:
-        """Refresh the manifest the marker names and clear the marker; a
-        no-op without a marker."""
+    def refresh_manifest(self, path: str, clear: bool = True) -> None:
+        """Refresh the manifest the marker names, then clear the marker
+        unless ``clear`` is false (a reader's heal); a no-op without a
+        marker."""
         marker = os.path.join(path, self.marker)
         if not os.path.exists(marker):
             return
@@ -249,4 +253,5 @@ class PartitionSwap:
         except (OSError, ValueError):
             payload = None
         self.refresh(path, payload if isinstance(payload, dict) else None)
-        discard(marker)
+        if clear:
+            discard(marker)

@@ -20,6 +20,7 @@ from datafusion_bigtable_spark.operators.similarity import (
     topk_ivfpq,
 )
 from datafusion_bigtable_spark.queries import load
+from datafusion_bigtable_spark.sources import swap
 
 
 def _storage_count(spark):
@@ -590,14 +591,89 @@ def test_manifest_reconciles_after_crash_between_append_and_refresh(spark, sf_di
 
     healed = {r["cell"]: r["rows"] for r in S.read_ivf_manifest(path)}
     assert healed == truth
+    # a reader recounts but leaves the marker (it cannot tell a crashed
+    # writer from one mid-mutation); the next writer clears it
+    marker = os.path.join(path, S._PENDING_MARKER)
+    assert os.path.exists(marker)
+    gone = spark.createDataFrame([(int(e.first()["vec_id"]),)], "vec_id long")
+    assert S.delete_from_ivf_index(spark, path, gone) == 1
+    assert not os.path.exists(marker)
+    footers = {c: st["rows"] for c, st in swap.partition_stats(path, "cell").items() if st["files"]}
+    assert {r["cell"]: r["rows"] for r in S.read_ivf_manifest(path) if r["rows"]} == footers
+
+
+def _manifest_and_footer_rows(S, path):
+    manifest = {r["cell"]: r["rows"] for r in S.read_ivf_manifest(path) if r["rows"]}
+    footers = {c: st["rows"] for c, st in swap.partition_stats(path, "cell").items() if st["files"]}
+    return manifest, footers
+
+
+def test_reader_during_upsert_does_not_double_count(spark, sf_dir, tmp_path, monkeypatch):
+    """A reader that opens the store between the upsert's append and its
+    manifest merge recounts the touched cells from the footers; the
+    merge must then not add the batch on top of that recount."""
+    import os
+
+    from datafusion_bigtable_spark.operators import similarity as S
+
+    e = load(spark, str(sf_dir), "embeddings")
+    path = str(tmp_path / "ivf")
+    with build_ivf_index(e.filter(F.col("vec_id") % 4 != 0), n_cells=16) as idx:
+        S.save_ivf_index(idx, path)
+    merge = S._append_ivf_manifest
+
+    def read_then_merge(*args):
+        S.read_ivf_manifest(path)
+        return merge(*args)
+
+    monkeypatch.setattr(S, "_append_ivf_manifest", read_then_merge)
+    assert S.upsert_ivf_index(spark, path, e.filter(F.col("vec_id") % 4 == 0)) > 0
     assert not os.path.exists(os.path.join(path, S._PENDING_MARKER))
+    manifest, footers = _manifest_and_footer_rows(S, path)
+    assert manifest == footers
+
+
+def test_reader_then_crash_before_merge_recounts_on_next_open(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A reader opens after the upsert armed its marker and before the
+    append lands; the upsert then dies before its manifest merge.  The
+    reader must leave the marker, so the next open recounts."""
+    import pytest
+
+    from datafusion_bigtable_spark.operators import similarity as S
+
+    class Crash(Exception):
+        pass
+
+    e = load(spark, str(sf_dir), "embeddings")
+    path = str(tmp_path / "ivf")
+    with build_ivf_index(e.filter(F.col("vec_id") % 4 != 0), n_cells=16) as idx:
+        S.save_ivf_index(idx, path)
+    arm = swap.PartitionSwap.arm
+
+    def arm_then_read(self, p, payload):
+        arm(self, p, payload)
+        S.read_ivf_manifest(path)
+
+    def crash(*args):
+        raise Crash()
+
+    with monkeypatch.context() as m:
+        m.setattr(swap.PartitionSwap, "arm", arm_then_read)
+        m.setattr(S, "_append_ivf_manifest", crash)
+        with pytest.raises(Crash):
+            S.upsert_ivf_index(spark, path, e.filter(F.col("vec_id") % 4 == 0))
+    manifest, footers = _manifest_and_footer_rows(S, path)
+    assert manifest == footers
+    assert sum(footers.values()) > 0
 
 
 def test_torn_pending_marker_heals_on_load_and_stats(spark, sf_dir, tmp_path):
     """A torn IVF pending marker must not wedge the store (the shard
     store's twin: test_layout's test_reconcile_heals_unparsable_manifest_marker):
     load_ivf_index and ivf_store_stats recount EVERY cell, so the manifest
-    matches the footers again and the marker is gone."""
+    matches the footers again; the marker stays for a writer to clear."""
     import glob
     import os
 
@@ -627,7 +703,7 @@ def test_torn_pending_marker_heals_on_load_and_stats(spark, sf_dir, tmp_path):
         with open(os.path.join(path, S._PENDING_MARKER), "w") as f:
             f.write('{"cells": [1, 2')
         opener()
-        assert not os.path.exists(os.path.join(path, S._PENDING_MARKER))
+        assert os.path.exists(os.path.join(path, S._PENDING_MARKER))  # only a writer clears
         got = {r["cell"]: {"files": r["files"], "rows": r["rows"]} for r in S.read_ivf_manifest(path)}
         assert got == truth
     assert S.ivf_store_stats(path)["n_rows"] == sum(st["rows"] for st in truth.values())

@@ -114,9 +114,12 @@ def test_reconcile_heals_unparsable_manifest_marker(spark, tmp_path):
     with open(os.path.join(path, _MANIFEST_MARKER), "w") as f:
         f.write('{"shard_col": "sha')  # torn json
     _SHARD_SWAP.heal(path)
-    assert not os.path.exists(os.path.join(path, _MANIFEST_MARKER))
+    # a reader's heal recounts and leaves the marker; a writer's clears it
+    assert os.path.exists(os.path.join(path, _MANIFEST_MARKER))
     man = {r.shard_id: r.n_files for r in read_shard_manifest(spark, path).collect()}
     assert man == {0: 1, 1: 1, 2: 1, 3: 1}
+    _SHARD_SWAP.heal(path, writer=True)
+    assert not os.path.exists(os.path.join(path, _MANIFEST_MARKER))
 
 
 def test_compact_reconcile_heals_stale_manifest(spark, tmp_path):

@@ -7,8 +7,10 @@ k raise, and opens the store with its normal reader (which heals).  Each
 partition must then hold its pre-mutation rows or its post-mutation rows,
 never both and never neither, and the manifest must equal the footers.
 Re-running the mutation must reach the post-mutation rows.  The mutations:
-IVF delete, IVF compaction, IVF retrain, shard compaction and cells-store
-compaction.
+IVF delete, IVF compaction, IVF retrain, shard compaction, cells-store
+compaction and the cells-store writers' commits (an overwrite swaps the
+whole store; a stream micro-batch is replayed; a batch append is not
+atomic).
 """
 
 from __future__ import annotations
@@ -300,6 +302,62 @@ def test_shard_compaction_every_crash_point_heals(spark, tmp_path, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
+_CELLS_OPTS = {
+    "column_family": "measurements",
+    "allow_full_scan": "true",
+    "columns": "pressure:int64,temperature:string",
+    "only_read_latest": "false",
+}
+
+
+def _cells_state(spark, path):
+    """Every version's row through ``format("bigtable")`` (which heals a
+    missing store), and whether the manifest equals the footers."""
+    from datafusion_bigtable_spark.sources.cells import footer_file_stats, read_manifest
+
+    rows = spark.read.format("bigtable").options(path=path, **_CELLS_OPTS).load().collect()
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    manifest = read_manifest(path)
+    fresh = manifest is not None and [
+        (m["file"], m["bytes"], m["min_key"], m["max_key"]) for m in manifest
+    ] == [(s["file"], s["bytes"], s["min_key"], s["max_key"]) for s in footer_file_stats(files)]
+    return sorted(tuple(r) for r in rows), fresh
+
+
+def _cells_observe(spark, path):
+    rows, fresh = _cells_state(spark, path)
+    assert fresh
+    return rows
+
+
+def _rows(keys, minute, pressure):
+    """Relational rows (``_row_key`` + ``_timestamp`` + two qualifiers),
+    as Spark hands them to a writer task."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+
+    ts = dt.datetime(2021, 3, 5, 12, minute)
+    return [
+        Row(_row_key=f"k{k}", _timestamp=ts, pressure=pressure + k, temperature=f"{minute}.{k}")
+        for k in keys
+    ]
+
+
+def _write(path, tasks, overwrite=False, batch_id=None):
+    """Run a cells writer in this process as Spark runs it: one ``write``
+    per task, then ``commit`` (a stream micro-batch given ``batch_id``)."""
+    from datafusion_bigtable_spark.sources.datasource import BigtableStreamWriter, BigtableWriter
+
+    opts = {"path": path, **_CELLS_OPTS}
+    if batch_id is None:
+        w = BigtableWriter(None, opts, overwrite=overwrite)
+        w.commit([w.write(iter(rows)) for rows in tasks])
+    else:
+        w = BigtableStreamWriter(None, opts)
+        w.commit([w.write(iter(rows)) for rows in tasks], batchId=batch_id)
+
+
 def test_cells_compaction_every_crash_point_heals(spark, tmp_path, monkeypatch):
     """A crash between the two renames leaves no store at the path; the
     next ``format("bigtable")`` read heals it and returns every row."""
@@ -309,8 +367,6 @@ def test_cells_compaction_every_crash_point_heals(spark, tmp_path, monkeypatch):
     from datafusion_bigtable_spark.sources.cells import (
         CELLS_SCHEMA,
         compact_cells_store,
-        footer_file_stats,
-        read_manifest,
         weather_balloons_cells,
         write_cells,
     )
@@ -325,29 +381,86 @@ def test_cells_compaction_every_crash_point_heals(spark, tmp_path, monkeypatch):
     )
     bt_ds.register(spark)
 
-    def observe():
-        rows = (
-            spark.read.format("bigtable")
-            .options(path=path, column_family="measurements", allow_full_scan="true",
-                     columns="pressure:int64,temperature:string", only_read_latest="false")
-            .load()
-            .collect()
-        )
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        manifest = read_manifest(path)
-        assert manifest is not None
-        assert [(m["file"], m["bytes"], m["min_key"], m["max_key"]) for m in manifest] == [
-            (s["file"], s["bytes"], s["min_key"], s["max_key"]) for s in footer_file_stats(files)
-        ]
-        return sorted(tuple(r) for r in rows)
-
     pre, post, runs = _crash_points(
         monkeypatch, pristine, path,
         lambda: compact_cells_store(spark, path, num_ranges=2, versions=1),
-        observe,
+        lambda: _cells_observe(spark, path),
     )
     assert len(pre) == 10 and len(post) == 5
     for k, crashed, rerun in runs:
         assert crashed in (pre, post), k
         assert rerun == post, k
         assert not glob.glob(path + "._compact_*"), k
+
+
+def test_cells_overwrite_every_crash_point_heals(spark, tmp_path, monkeypatch):
+    """An overwrite builds the new store aside and swaps it in whole: after
+    a failure at any step a read returns the old rows or the new ones,
+    never none and never a mix, and re-running the write reaches the new
+    rows with the store's GC watermark and compaction epoch carried."""
+    from datafusion_bigtable_spark.sources import datasource as bt_ds
+    from datafusion_bigtable_spark.sources.cells import (
+        read_compaction_epoch,
+        read_gc_watermark_us,
+    )
+
+    pristine, path = str(tmp_path / "pristine"), str(tmp_path / "store")
+    _write(pristine, [_rows(range(3), 0, 100), _rows(range(3, 6), 0, 100)])
+    swap.write_json(os.path.join(pristine, "_gc_watermark.json"), {"gc_watermark_us": 7})
+    bt_ds.register(spark)
+
+    pre, post, runs = _crash_points(
+        monkeypatch, pristine, path,
+        lambda: _write(path, [_rows(range(2), 1, 500), _rows(range(2, 4), 1, 500)], overwrite=True),
+        lambda: _cells_observe(spark, path),
+    )
+    assert len(pre) == 6 and len(post) == 4
+    for k, crashed, rerun in runs:
+        assert crashed in (pre, post), k
+        assert rerun == post, k
+        assert not glob.glob(path + "._compact_*"), k
+        assert read_gc_watermark_us(path) == 7 and read_compaction_epoch(path) == 0, k
+
+
+def test_cells_stream_commit_every_crash_point_replays(spark, tmp_path, monkeypatch):
+    """A micro-batch commit that fails at any step, then is replayed (new
+    writer, same batch id, as after a checkpoint recovery), reaches
+    exactly the post-commit rows; the commit removes the files an earlier
+    attempt of the batch left before it moves its own."""
+    from datafusion_bigtable_spark.sources import datasource as bt_ds
+
+    pristine, path = str(tmp_path / "pristine"), str(tmp_path / "store")
+    _write(pristine, [_rows(range(3), 0, 100)], batch_id=0)
+    batch = [_rows(range(2), 1, 500), _rows(range(2, 4), 1, 500)]
+    _write(pristine, batch[:1], batch_id=1)  # an earlier attempt's file
+    bt_ds.register(spark)
+
+    pre, post, runs = _crash_points(
+        monkeypatch, pristine, path,
+        lambda: _write(path, batch, batch_id=1),
+        lambda: _cells_state(spark, path),
+    )
+    post_rows, fresh = post
+    assert fresh and len(post_rows) == 7
+    for k, (crashed, _), rerun in runs:
+        assert set(crashed) <= set(post_rows), k
+        assert rerun == post, k
+
+
+def test_cells_append_is_not_atomic(spark, tmp_path, monkeypatch):
+    """A batch append moves its files into the live store one at a time
+    (ROADMAP item 8): a failure between two moves leaves a store whose
+    read shows part of the append."""
+    from datafusion_bigtable_spark.sources import datasource as bt_ds
+
+    pristine, path = str(tmp_path / "pristine"), str(tmp_path / "store")
+    _write(pristine, [_rows(range(3), 0, 100)])
+    bt_ds.register(spark)
+
+    pre, post, runs = _crash_points(
+        monkeypatch, pristine, path,
+        lambda: _write(path, [_rows(range(2), 1, 500), _rows(range(2, 4), 1, 500)]),
+        lambda: _cells_state(spark, path)[0],
+    )
+    assert len(pre) == 3 and len(post) == 7
+    assert any(crashed not in (pre, post) for _, crashed, _ in runs)

@@ -1,5 +1,6 @@
-"""Bench a subset of queries with EXACTLY bench.py's methodology (same
-session config, same warmups, noop sink, min-of-2 / median-of-3) so a
+"""Bench a subset of queries with bench.py's own methodology: its session,
+its warm-up (``bench.warm_up``), its noop-sink run (``bench.run_once``)
+and its sampling rule (``bench.sample``: min-of-2 / median-of-3), so a
 targeted optimization can be measured without a full 184-query sweep.
 
     python tools/bench_subset.py sim_index_upsert sim_index_compact ...
@@ -12,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -20,55 +20,14 @@ sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from datafusion_bigtable_spark import queries as Q
+    from bench import run_once, sample, warm_up
     from datafusion_bigtable_spark.session import get_spark
 
+    names = [a for a in sys.argv[1:] if not a.startswith("--")]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dbs-bench-subset")
-    spark.range(1).count()
-    Q.load(spark, sf_dir, "lineitem").write.format("noop").mode("overwrite").save()
-    from datafusion_bigtable_spark.sources import datasource as bt_ds
-    from datafusion_bigtable_spark.sources.cells import write_weather_balloons_fixture
-
-    bt_ds.register(spark)
-    warm_path = write_weather_balloons_fixture("/tmp/dbs_bench_warm_cells.parquet")
-    (
-        spark.read.format("bigtable")
-        .option("path", warm_path)
-        .option("column_family", "measurements")
-        .option("columns", "pressure:int64,temperature:string")
-        .option("table_partition_cols", "_row_key")
-        .option("allow_full_scan", "true")
-        .load()
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    from datafusion_bigtable_spark.streaming import cells_stream as _cs
-
-    _cs.run_events_stream_to_memory(
-        spark, "/root/testdata/sf0.001", agg="stateful", query_name="dbs_bench_warm_stream"
-    )
-    Q._bt_events_store(spark, sf_dir)
-    Q._bt_events_int_store(spark, sf_dir)
-
-    def run_once(name: str) -> float:
-        fn = Q.REGISTRY[name].fn
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        return elapsed
-
-    samples = {n: [run_once(n)] for n in names}
-    for n in names:
-        samples[n].append(run_once(n))
-    for n in names:
-        if samples[n][0] < 5.0 or n.startswith("dedup_") or n == "pipeline_curated_corpus":
-            samples[n].append(run_once(n))
-    timings = {n: (sorted(s)[1] if len(s) == 3 else min(s)) for n, s in samples.items()}
+    warm_up(spark, sf_dir)
+    samples, timings = sample(lambda n: run_once(spark, sf_dir, n), names)
     for n in names:
         print(f"SUBSET {n}: {timings[n]:.3f}s  samples={samples[n]}")
     print("SUBSET_JSON", json.dumps(timings))

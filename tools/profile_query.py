@@ -1,7 +1,7 @@
 """Per-job profile of one registry query (guide §1: measure first).
 
-Runs the named query exactly like bench.py (same session, warmup, noop
-sink), then dumps every Spark job the run launched — duration, stage
+Runs the named query like bench.py (same session, the same warm-up
+``bench.warm_up``, noop sink), then dumps every Spark job the run launched — duration, stage
 count, task count, description — from the local UI REST API, plus the
 wall-clock gap between jobs (driver-side time: planning, py4j, file ops).
 
@@ -56,8 +56,9 @@ def main() -> None:
         spark = S.get_spark("dbs-profile")
     finally:
         SparkSession.Builder.getOrCreate = _orig
-    spark.range(1).count()
-    Q.load(spark, sf_dir, "lineitem").write.format("noop").mode("overwrite").save()
+    from bench import warm_up
+
+    warm_up(spark, sf_dir)
 
     for name in names:
         fn = Q.REGISTRY[name].fn
