@@ -60,7 +60,8 @@ __all__ = [
 
 __version__ = "0.1.0"
 
-# Every Spark Python worker that unpickles package code (data source,
-# writer, operator UDFs) imports this package first; from then on its
-# per-task import-cache invalidation skips unchanged zip archives.
+# A Spark Python worker that unpickles package code (data source, writer,
+# operator UDFs) imports this package; from then on its per-task
+# import-cache invalidation skips unchanged zip archives.  A get_spark
+# session's workers have it from the start (``_daemon.py``).
 _zipimport.install()

@@ -13,6 +13,13 @@ and skips the re-read when the archive's stat signature matches the one
 taken before its last directory read.  All importers on one archive share
 that read through ``zipimport._zip_directory_cache``, as they do in the
 stdlib.  If the stat fails, the original method runs.
+
+The package ``__init__`` runs ``install()``, so a worker that imports the
+package is guarded from then on.  A ``get_spark`` session starts Spark's
+worker daemon through ``_daemon.py``, which imports the package before it
+forks, so every worker of that session, including those that never import
+the package, is guarded from its first call.  ``install()`` wraps the
+method once however often it runs.
 """
 
 from __future__ import annotations
@@ -31,9 +38,9 @@ def _signature(path: str) -> tuple:
 
 
 def install() -> None:
-    """Wrap ``zipimport.zipimporter.invalidate_caches``; on Python >= 3.13
+    """Wrap ``zipimport.zipimporter.invalidate_caches`` once; on Python >= 3.13
     leave it alone."""
-    if sys.version_info >= (3, 13):
+    if sys.version_info >= (3, 13) or hasattr(zipimport.zipimporter.invalidate_caches, "_reread"):
         return
     reread = zipimport.zipimporter.invalidate_caches
 
@@ -51,4 +58,5 @@ def install() -> None:
         if self.archive in zipimport._zip_directory_cache:
             _read_under[self.archive] = sig
 
+    invalidate_caches._reread = reread
     zipimport.zipimporter.invalidate_caches = invalidate_caches

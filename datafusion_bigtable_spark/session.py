@@ -6,6 +6,15 @@ the same code scales to a multi-executor cluster: AQE for runtime re-planning
 (set to ~2-3x total cores on a real cluster), Arrow enabled for the
 pandas-UDF boundary, and UTC session time so timestamp semantics match the
 reference's timezone-less microsecond cells (reference src/datasource.rs:72-76).
+
+Spark's Python worker daemon starts through the package
+(``spark.python.daemon.module`` = ``_daemon``), which installs the
+zipimport guard (``_zipimport.py``) before it forks: every worker of the
+session skips PySpark's per-call re-read of ``pyspark.zip`` from its first
+call, including workers that never import the package (plain Python RDD
+jobs such as ``createDataFrame`` from a list).  The package root goes on the
+workers' ``PYTHONPATH`` so the daemon can import the package wherever the
+session was started.
 """
 
 from __future__ import annotations
@@ -13,6 +22,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "datafusion_bigtable_spark", *, cpus: int | None = None) -> SparkSession:
@@ -41,6 +53,9 @@ def get_spark(app_name: str = "datafusion_bigtable_spark", *, cpus: int | None =
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # The worker daemon and its workers import the package (see above).
+        .config("spark.python.daemon.module", "datafusion_bigtable_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

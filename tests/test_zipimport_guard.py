@@ -179,3 +179,90 @@ guard.install()
 assert (zipimport.zipimporter.invalidate_caches is before) == (real >= (3, 13))
 """
     )
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="the guard is inert on 3.13+")
+def test_install_wraps_once():
+    """The package import installs the guard; a second ``install()`` (a
+    reload, or a daemon entry that also runs it) leaves that wrapper alone."""
+    _run(
+        """
+stock = zipimport.zipimporter.invalidate_caches
+from datafusion_bigtable_spark import _zipimport
+wrapped = zipimport.zipimporter.invalidate_caches
+assert wrapped is not stock and wrapped._reread is stock
+_zipimport.install()
+_zipimport.install()
+assert zipimport.zipimporter.invalidate_caches is wrapped
+"""
+    )
+
+
+def test_daemon_entry_runs_pyspark_daemon_without_warnings(tmp_path):
+    """``python -m datafusion_bigtable_spark._daemon`` runs the stock daemon
+    as ``__main__``: it writes its port and, on stdin EOF, exits as the stock
+    daemon does; runpy raises no RuntimeWarning about the module."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = REPO
+    outs = []
+    for module in ("pyspark.daemon", "datafusion_bigtable_spark._daemon"):
+        proc = subprocess.run(
+            [sys.executable, "-W", "error::RuntimeWarning", "-m", module, "pyspark.worker"],
+            cwd=tmp_path,
+            env=env,
+            stdin=subprocess.DEVNULL,
+            capture_output=True,
+            timeout=60,
+        )
+        assert b"Warning" not in proc.stderr, proc.stderr[-3000:]
+        outs.append((proc.returncode, len(proc.stdout)))
+    assert outs[0] == outs[1], outs
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="the guard is inert on 3.13+")
+def test_get_spark_plain_rdd_worker_is_guarded(spark):
+    """A plain Python RDD task never imports the package itself; in a
+    ``get_spark`` session its worker still has the guard (installed once)
+    and the package, because the worker daemon started through it."""
+
+    def report(_):
+        import sys
+        import zipimport
+
+        method = zipimport.zipimporter.invalidate_caches
+        yield (
+            method.__qualname__,
+            getattr(getattr(method, "_reread", None), "__qualname__", None),
+            "datafusion_bigtable_spark" in sys.modules,
+        )
+
+    import zipimport
+
+    guard = zipimport.zipimporter.invalidate_caches.__qualname__
+    assert guard != "zipimporter.invalidate_caches"
+    got = set(spark.sparkContext.parallelize(range(2), 2).mapPartitions(report).collect())
+    assert got == {(guard, "zipimporter.invalidate_caches", True)}, got
+
+
+def test_get_spark_started_outside_the_package_root_runs_python_jobs(tmp_path):
+    """A driver that found the package through its own ``sys.path`` (no
+    ``PYTHONPATH``, started elsewhere) still gets working Python workers:
+    the session puts the package root on the workers' path."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from datafusion_bigtable_spark.session import get_spark
+spark = get_spark("outside-root", cpus=1)
+def report(rows):
+    import sys
+    yield (sum(rows), "datafusion_bigtable_spark" in sys.modules)
+print("RESULT", spark.sparkContext.parallelize([1, 2, 3], 1).mapPartitions(report).collect())
+spark.stop()
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "RESULT [(6, True)]" in proc.stdout, proc.stdout[-3000:]
